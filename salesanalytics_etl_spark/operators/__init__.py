@@ -5,10 +5,6 @@ from salesanalytics_etl_spark.operators.cleaning import (
     trim_strings,
 )
 from salesanalytics_etl_spark.operators.integrity import fk_split, fk_split_composite
-from salesanalytics_etl_spark.operators.memo import (
-    clear_materialize_memos,
-    invalidate_memos_for_path,
-)
 from salesanalytics_etl_spark.operators.upsert import merge_upsert
 
 __all__ = [
@@ -19,6 +15,4 @@ __all__ = [
     "fk_split",
     "fk_split_composite",
     "merge_upsert",
-    "clear_materialize_memos",
-    "invalidate_memos_for_path",
 ]

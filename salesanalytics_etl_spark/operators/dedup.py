@@ -453,48 +453,6 @@ def _portable_perm_constants(n: int = N_HASHES) -> list[int]:
     ]
 
 
-from salesanalytics_etl_spark.operators.memo import record_sources, register_memo
-
-_BANDED_MEMO: dict[tuple, DataFrame] = register_memo({})
-# verified near-dup pairs of minhash_near_dupes_portable (already a
-# localCheckpoint) — shared by the q109 replay and the q178 split-
-# leakage audit; FIFO-bounded like every materialize-once memo
-_PAIRS_MEMO: dict[tuple, DataFrame] = register_memo({})
-
-
-def _portable_banded_cached(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Materialize-once seam for :func:`_portable_banded`: the signature
-    subtree is the most expensive stage of BOTH its consumers (the q109
-    replay join and the q116 bucket audit), and a session that runs both
-    — a curation pipeline auditing the cap before trusting the pair
-    output, or the bench's two-pass floor — would otherwise recompute
-    the full shingle->signature scan per consumer. Keyed on
-    (applicationId, semanticHash(df), text_col); the checkpointed frame
-    is (doc_id, band_id, band_key) — N_BANDS rows/doc, tiny next to the
-    corpus. FIFO-bounded (OLDEST evicted — dict insertion order, never
-    popitem's LIFO); evicted frames release their blocks on GC.
-
-    semanticHash is PLAN identity, not DATA identity: inputs must be
-    immutable for the application's lifetime, or the caller must
-    ``memo.clear_materialize_memos()`` after overwriting them (see
-    ``operators/memo.py`` for the full contract).
-    """
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        text_col,
-    )
-    hit = _BANDED_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = _portable_banded(df, text_col).localCheckpoint()
-    _BANDED_MEMO[key] = out
-    record_sources(_BANDED_MEMO, key, df)
-    while len(_BANDED_MEMO) > 4:
-        del _BANDED_MEMO[next(iter(_BANDED_MEMO))]
-    return out
-
-
 def _portable_banded(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, band_id, band_key) rows of the PORTABLE MinHash pipeline:
     md5-prefix shingle hashes → xor-mask min-wise signatures → md5 band
@@ -557,13 +515,10 @@ def lsh_bucket_audit(
     counts — the SAME exchange the candidate pipeline already does —
     then a 6-row aggregate. No pair expansion anywhere, so the audit is
     safe to run on a corpus whose caps WOULD explode the pair join.
-
-    Memoized input contract: the banded-signature subtree is cached on
-    plan identity — ``df``'s underlying files must not be overwritten
-    mid-application, else call ``memo.clear_materialize_memos()`` first.
     """
     bsize = (
-        _portable_banded_cached(df, text_col)
+        _portable_banded(df, text_col)
+        .localCheckpoint()
         .groupBy("band_id", "band_key")
         .agg(F.count(F.lit(1)).alias("m"))
     )
@@ -614,33 +569,11 @@ def minhash_near_dupes_portable(
     budget-gated off at gate scale in production too). Shuffle shape is
     unchanged: signature groupBy on doc_id, candidate equi-join on
     (band_id, band_key), verify joins on doc ids.
-
-    Memoized input contract: the banded-signature subtree AND the final
-    verified pair frame are cached on plan identity — ``df``'s
-    underlying files must not be overwritten mid-application, else call
-    ``memo.clear_materialize_memos()`` first. The pair memo exists for
-    the q109→q178 composition: the near-dup leakage audit consumes the
-    SAME verified pairs the replay query emits, and the verify stage
-    (exact Jaccard over candidates) is the dominant cost once the
-    banded frame is shared — one materialization serves both.
     """
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        text_col,
-        threshold,
-        max_bucket,
-        recover_rounds,
-    )
-    hit = _PAIRS_MEMO.get(key)
-    if hit is not None:
-        return hit
     t_bp = int(round(threshold * 10000))
-    # checkpointed + memoized: bucket sizing and both sides of the pair
-    # self-join consume `banded`, and the bucket audit (q116) / a second
-    # pass in the same session reuse the SAME materialization instead of
-    # re-running the signature scan (the most expensive stage)
-    banded = _portable_banded_cached(df, text_col)
+    # checkpointed: bucket sizing and both sides of the pair self-join
+    # consume `banded`, and the signature scan is the most expensive stage
+    banded = _portable_banded(df, text_col).localCheckpoint()
     bsize = banded.groupBy("band_id", "band_key").agg(
         F.count(F.lit(1)).alias("m")
     )
@@ -784,10 +717,6 @@ def minhash_near_dupes_portable(
     )
     sh_sets.unpersist()
     cands.unpersist()
-    _PAIRS_MEMO[key] = out
-    record_sources(_PAIRS_MEMO, key, df)
-    while len(_PAIRS_MEMO) > 4:
-        del _PAIRS_MEMO[next(iter(_PAIRS_MEMO))]
     return out
 
 
@@ -908,37 +837,6 @@ def signature_pair_estimates(
     )
 
 
-_SRC_SKETCH_MEMO: dict[tuple, DataFrame] = register_memo({})
-
-
-def source_minhash_jaccard_cached(
-    df: DataFrame, key_col: str = "source", text_col: str = "text"
-) -> DataFrame:
-    """Materialize-once seam for :func:`source_minhash_jaccard` (the
-    pattern of every *_cached seam here): the estimate matrix is
-    consumed by the monitor query (q172) AND the error audit (q176) —
-    a session running both would re-scan the corpus per consumer. The
-    checkpointed frame is |sources|² rows (bounded); ordering is
-    RE-APPLIED by callers that need it (checkpoints only guarantee
-    partition order). Same immutable-input contract as every
-    semanticHash-keyed memo (``operators/memo.py``)."""
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        key_col,
-        text_col,
-    )
-    hit = _SRC_SKETCH_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = source_minhash_jaccard(df, key_col, text_col).localCheckpoint()
-    _SRC_SKETCH_MEMO[key] = out
-    record_sources(_SRC_SKETCH_MEMO, key, df)
-    while len(_SRC_SKETCH_MEMO) > 4:
-        del _SRC_SKETCH_MEMO[next(iter(_SRC_SKETCH_MEMO))]
-    return out
-
-
 def source_shingle_jaccard(df: DataFrame, text_col: str = "text") -> DataFrame:
     """EXACT pairwise 5-gram Jaccard between sources — q172's audit twin
     (the q170 query surface; lifted into an operator so the error audit
@@ -1003,33 +901,6 @@ def source_shingle_jaccard(df: DataFrame, text_col: str = "text") -> DataFrame:
             ).alias("jaccard"),
         )
     )
-
-
-_SRC_EXACT_MEMO: dict[tuple, DataFrame] = register_memo({})
-
-
-def source_shingle_jaccard_cached(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Materialize-once seam for :func:`source_shingle_jaccard` — shared
-    by the exact matrix query (q170) and the error audit (q176); the
-    corpus-sized distinct runs once per session per input. |sources|²
-    checkpointed rows; same immutable-input contract as every
-    semanticHash-keyed memo (``operators/memo.py``)."""
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        text_col,
-    )
-    hit = _SRC_EXACT_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = source_shingle_jaccard(df, text_col).localCheckpoint()
-    _SRC_EXACT_MEMO[key] = out
-    record_sources(_SRC_EXACT_MEMO, key, df)
-    while len(_SRC_EXACT_MEMO) > 4:
-        del _SRC_EXACT_MEMO[next(iter(_SRC_EXACT_MEMO))]
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -133,8 +133,8 @@ def perturbed_text(
     for label, v in (("salt", salt), ("doc_id_expr", doc_id_expr),
                      ("text_expr", text_expr)):
         # interpolated into a SQL string — reject anything that could
-        # change the parse (quotes, backslashes, comments)
-        if _re.search(r"['\\;]|--", v):
+        # change the parse (quotes, backticks, backslashes, comments)
+        if _re.search(r"""['"`\\;]|--""", v):
             raise ValueError(f"{label} {v!r} unsafe for SQL interpolation")
     d = f"cast({doc_id_expr} as string)"
     toks = f"split({text_expr}, ' ')"

@@ -241,51 +241,6 @@ def cosine_topk_bruteforce(
     )
 
 
-from salesanalytics_etl_spark.operators.memo import record_sources, register_memo
-
-_BRUTEFORCE_MEMO: dict[tuple, DataFrame] = register_memo({})
-
-
-def cosine_topk_bruteforce_cached(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Materialize-once seam for :func:`cosine_topk_bruteforce` (the
-    q109/q112 pattern): the exact top-k is the ground truth consumed by
-    the exact-ANN query (q27) AND both recall audits (q121 LSH, q122
-    IVF) with identical arguments — each was re-scoring the full corpus.
-    The checkpointed frame is k rows per query (bounded). Keyed on
-    (applicationId, semanticHash(corpus), semanticHash(queries), k,
-    cols); FIFO-bounded, oldest evicted.
-
-    semanticHash is PLAN identity, not DATA identity: inputs must be
-    immutable for the application's lifetime, or the caller must
-    ``memo.clear_materialize_memos()`` after overwriting them (see
-    ``operators/memo.py`` for the full contract)."""
-    key = (
-        corpus.sparkSession.sparkContext.applicationId,
-        corpus.semanticHash(),
-        queries.semanticHash(),
-        k,
-        id_col,
-        vec_col,
-    )
-    hit = _BRUTEFORCE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    out = cosine_topk_bruteforce(
-        corpus, queries, k, id_col, vec_col
-    ).localCheckpoint()
-    _BRUTEFORCE_MEMO[key] = out
-    record_sources(_BRUTEFORCE_MEMO, key, corpus, queries)
-    while len(_BRUTEFORCE_MEMO) > 4:
-        del _BRUTEFORCE_MEMO[next(iter(_BRUTEFORCE_MEMO))]
-    return out
-
-
 def _lsh_bucket(vec, planes: list[list[float]]) -> Column:
     """Sign-of-projection bucket id: bit p = (vec · plane_p) > 0."""
     bucket = F.lit(0).cast("long")
@@ -467,15 +422,15 @@ def quantization_error_audit(
 
     This is the audit a 100 TB ANN deployment runs before switching
     its scoring to int8 SIMD kernels: the ground-truth frame is the
-    memoized brute-force top-k (k rows per query, bounded), the
+    checkpointed brute-force top-k (k rows per query, bounded), the
     quantized-code join touches the corpus once, map-side (the k·|Q|
     pair frame broadcasts), and every gate-surface number except the
     two 6dp cosines is an exact integer. |q_i| <= 127 and dim <= 2^16
     keep the dot products far inside bigint.
     """
-    gt = cosine_topk_bruteforce_cached(
+    gt = cosine_topk_bruteforce(
         corpus, queries, k, id_col=id_col, vec_col=vec_col
-    )
+    ).localCheckpoint()
     qq = queries.select(
         F.col(id_col).alias("query_id"),
         int8_quantize(F.col(vec_col)).alias("qa"),
@@ -552,9 +507,9 @@ def int8_topk_recall(
     is undefined). Same broadcast-queries/one-corpus-scan shape as the
     exact brute force; two-phase top-k; |queries| output rows.
     """
-    gt = cosine_topk_bruteforce_cached(
+    gt = cosine_topk_bruteforce(
         corpus, queries, k, id_col=id_col, vec_col=vec_col
-    )
+    ).localCheckpoint()
     sq = lambda c: F.aggregate(  # noqa: E731
         F.transform(c, lambda x: x * x),
         F.lit(0).cast("long"),

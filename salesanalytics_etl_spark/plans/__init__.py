@@ -1,9 +1,8 @@
 from salesanalytics_etl_spark.plans.registry import (
-    MEMO_BACKED,
     QuerySpec,
     all_oracles,
     all_queries,
     register,
 )
 
-__all__ = ["QuerySpec", "register", "all_queries", "all_oracles", "MEMO_BACKED"]
+__all__ = ["QuerySpec", "register", "all_queries", "all_oracles"]

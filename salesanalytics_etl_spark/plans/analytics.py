@@ -826,9 +826,8 @@ def q167_orphan_rate_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     "transitive clusters: how much of the duplicate mass sits in pairs "
     "vs boilerplate blobs, and the exact dedup yield (n_removable = "
     "docs beyond one keeper per cluster) — the number a curation run "
-    "reports before dropping anything. Composes the memoized cluster "
-    "frame (shared with q49/q105, computed once per session) with a "
-    "two-level bounded aggregate.",
+    "reports before dropping anything. Composes q49's cluster frame "
+    "with a two-level bounded aggregate.",
 )
 def q166_cluster_size_histogram(
     spark: SparkSession, sf_dir: str
@@ -1013,16 +1012,13 @@ def q169_packing_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q170_source_shingle_jaccard(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from salesanalytics_etl_spark.operators.dedup import (
-        source_shingle_jaccard_cached,
-    )
+    from salesanalytics_etl_spark.operators.dedup import source_shingle_jaccard
 
     (documents,) = _t(spark, sf_dir, "documents")
-    # memoized core (shared with the q176 error audit); ORDER BY is
-    # re-applied on the |sources|^2-row checkpointed frame — free, and
-    # checkpoints only guarantee partition order
-    return source_shingle_jaccard_cached(documents).orderBy(
-        "source_a", "source_b"
+    return (
+        source_shingle_jaccard(documents)
+        .localCheckpoint()
+        .orderBy("source_a", "source_b")
     )
 
 
@@ -1129,14 +1125,13 @@ def q171_source_length_deciles(
 def q172_source_minhash_jaccard(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from salesanalytics_etl_spark.operators.dedup import (
-        source_minhash_jaccard_cached,
-    )
+    from salesanalytics_etl_spark.operators.dedup import source_minhash_jaccard
 
     (documents,) = _t(spark, sf_dir, "documents")
-    # memoized (shared with the q176 error audit); order re-asserted
-    return source_minhash_jaccard_cached(documents).orderBy(
-        "source_a", "source_b"
+    return (
+        source_minhash_jaccard(documents)
+        .localCheckpoint()
+        .orderBy("source_a", "source_b")
     )
 
 
@@ -1441,21 +1436,20 @@ def q176_source_jaccard_sketch_error(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from salesanalytics_etl_spark.operators.dedup import (
-        source_minhash_jaccard_cached,
-        source_shingle_jaccard_cached,
+        source_minhash_jaccard,
+        source_shingle_jaccard,
     )
 
     (documents,) = _t(spark, sf_dir, "documents")
-    # both sides come from the memoized matrices the monitor (q172) and
-    # audit (q170) queries register — a session running all three pays
-    # for each corpus scan once
-    est = source_minhash_jaccard_cached(documents).select(
+    # both sides are the matrices the monitor (q172) and audit (q170)
+    # queries register, each checkpointed at |sources|^2 rows
+    est = source_minhash_jaccard(documents).localCheckpoint().select(
         "source_a", "source_b", "est_jaccard_bp"
     )
     # jaccard is floor-rounded to 4dp upstream, so jaccard*10000 is
     # integer-valued up to an ulp (0.7263*10000 = 7262.999...); ROUND to
     # nearest before the INT cast — a bare cast truncates the ulp away
-    exact = source_shingle_jaccard_cached(documents).select(
+    exact = source_shingle_jaccard(documents).localCheckpoint().select(
         "source_a",
         "source_b",
         F.round(F.col("jaccard") * 10000, 0).cast("int").alias("exact_bp"),
@@ -2752,7 +2746,7 @@ def q187_editnoise_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(floor-6dp), and its error vs the float cosine in bp — the check "
     "a 100 TB ANN deployment runs before switching scoring to int8 "
     "SIMD kernels. Corpus scanned once map-side (GT x quantized "
-    "queries broadcast); 50 output rows. Rides the memoized q27 "
+    "queries broadcast); 50 output rows. Rides q27's checkpointed "
     "brute-force frame.",
 )
 def q188_int8_quantization_audit(

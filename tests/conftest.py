@@ -17,7 +17,9 @@ SF_DIR_MED = "/root/testdata/sf0.01"
 # list; ``SPARK_GRAFT_SLOW_TESTS=1`` restores the full suite, and
 # tools/close_round.py sets it, so every round close still runs ALL
 # tests. The list is explicit nodeids (not a marker) so the skip set is
-# reviewable in one place and additions are deliberate.
+# reviewable in one place and additions are deliberate. An id that no
+# longer names a collected test fails the run, so a renamed test cannot
+# drop out of the list silently.
 _SLOW_TESTS = {
     "tests/test_winnow_stream.py::test_replay_appends_nothing",
     "tests/test_ranking.py::test_ntile_multi_matches_single_passes",
@@ -47,7 +49,28 @@ _SLOW_TESTS = {
 }
 
 
+def _stale_slow_tests(config, items) -> list[str]:
+    """``_SLOW_TESTS`` ids whose file was collected whole but which name
+    no collected test. A run narrowed to node ids sees only part of a
+    file, so it cannot tell, and checks nothing."""
+    if any("::" in str(a) for a in config.args):
+        return []
+    collected = {item.nodeid for item in items}
+    files = {nodeid.split("::", 1)[0] for nodeid in collected}
+    return sorted(
+        nodeid
+        for nodeid in _SLOW_TESTS
+        if nodeid.split("::", 1)[0] in files and nodeid not in collected
+    )
+
+
 def pytest_collection_modifyitems(config, items):
+    stale = _stale_slow_tests(config, items)
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py _SLOW_TESTS names tests that were not "
+            "collected (renamed or deleted?): " + ", ".join(stale)
+        )
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
         return
     skip = pytest.mark.skip(

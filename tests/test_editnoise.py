@@ -10,12 +10,14 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from salesanalytics_etl_spark.operators.editnoise import (
     editnoise_lsh_audit,
     editnoise_pairs,
     editnoise_simhash_audit,
+    perturbed_text,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -350,3 +352,14 @@ def test_reorder_simhash_audit_all_hamming_zero(spark):
     assert len(out) == 1, out
     assert out[0].hamming == 0
     assert out[0].n_chunk_hit == out[0].n_pairs
+
+
+@pytest.mark.parametrize("bad", ["'", '"', "`", "\\", ";", "--"])
+def test_perturbed_text_rejects_sql_breaking_input(bad):
+    """perturbed_text interpolates its three string arguments into one
+    SQL expression, so any character that could change the parse must
+    be refused before an expression is built."""
+    ok = {"doc_id_expr": "doc_id", "text_expr": "t", "salt": "edit"}
+    for arg in ok:
+        with pytest.raises(ValueError, match="unsafe for SQL"):
+            perturbed_text(**{**ok, arg: f"x{bad}y"})

@@ -1,349 +1,139 @@
-"""The three materialize-once memos (LSH banding, IVF cell assignment,
-exact-top-k ground truth) must be value-transparent: cached results
-byte-equal the uncached operator, keys distinguish different inputs,
-and eviction is FIFO (oldest first — dict insertion order, never
-popitem's LIFO, which would thrash the newest entry)."""
+"""No session memo: operators over a table that was overwritten in the
+same session must answer from the table's CURRENT rows. Nothing may be
+cached on plan or path identity, because a re-read of an overwritten
+path has the same plan as the read before the write, so such a cache
+would serve the old answer."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+DOC_SCHEMA = "doc_id BIGINT, text STRING"
+EMB_SCHEMA = "vec_id BIGINT, embedding ARRAY<FLOAT>"
 
-def _docs(spark, texts):
-    return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id BIGINT, text STRING"
+_WORDS = (
+    "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
+    "lima mike november oscar papa quebec romeo sierra tango uniform"
+).split()
+
+
+def _doc_rows(shift: int) -> list[tuple[int, str]]:
+    """Ten base texts, each with a one-word-edited near duplicate; the
+    word order depends on ``shift``, so two shifts give two corpora
+    with different near-duplicate pairs."""
+    rows = []
+    for i in range(10):
+        words = [_WORDS[(i * 3 + j * (shift + 1)) % len(_WORDS)]
+                 for j in range(14)]
+        rows.append((2 * i, " ".join(words)))
+        if (i + shift) % 3:
+            words[7] = "zulu"
+            rows.append((2 * i + 1, " ".join(words)))
+    return rows
+
+
+def _emb_rows(shift: int) -> list[tuple[int, list[float]]]:
+    return [
+        (i, [float((i * (shift + 2)) % 7), float((i + shift) % 5), 1.0,
+             float(i % 3)])
+        for i in range(30)
+    ]
+
+
+def _sorted(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def _overwrite(spark, rows, schema, path) -> None:
+    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(path)
+
+
+def test_overwrite_then_reread_matches_fresh_computation(spark, tmp_path):
+    from salesanalytics_etl_spark.operators.dedup import (
+        minhash_near_dupes_portable,
+    )
+    from salesanalytics_etl_spark.operators.ivf import cosine_topk_ivf_portable
+    from salesanalytics_etl_spark.operators.similarity import (
+        cosine_topk_bruteforce,
     )
 
+    def pairs(docs):
+        return _sorted(minhash_near_dupes_portable(docs))
 
-def test_banded_memo_value_transparent_and_keyed(spark):
-    from salesanalytics_etl_spark.operators import dedup as D
-
-    df1 = _docs(spark, ["hello world one", "hello world two"])
-    df2 = _docs(spark, ["completely different corpus text"])
-    plain = sorted(map(tuple, D._portable_banded(df1).collect()))
-    cached = sorted(map(tuple, D._portable_banded_cached(df1).collect()))
-    assert cached == plain
-    # a second call returns the SAME checkpointed frame (no recompute)
-    again = D._portable_banded_cached(df1)
-    assert again is D._portable_banded_cached(df1)
-    # different input -> different entry, not a stale hit
-    other = sorted(map(tuple, D._portable_banded_cached(df2).collect()))
-    assert other != cached
-
-
-def test_assignment_memo_value_transparent(spark):
-    from salesanalytics_etl_spark.operators import ivf as I
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.5]) for i in range(20)],
-        "vec_id BIGINT, embedding ARRAY<FLOAT>",
-    )
-    plain = sorted(
-        map(tuple, I.portable_cell_assignment(emb, n_cells=4).collect())
-    )
-    cached = sorted(
-        map(tuple, I.portable_cell_assignment_cached(emb, n_cells=4).collect())
-    )
-    assert cached == plain
-    # n_cells participates in the key
-    other = I.portable_cell_assignment_cached(emb, n_cells=2)
-    assert other is not I.portable_cell_assignment_cached(emb, n_cells=4)
-
-
-def test_bruteforce_memo_value_transparent(spark):
-    from salesanalytics_etl_spark.operators import similarity as S
-
-    emb = spark.createDataFrame(
-        [(i, [float(i % 5), float(i % 3), 1.0]) for i in range(15)],
-        "vec_id BIGINT, embedding ARRAY<FLOAT>",
-    )
-    q = emb.filter(F.col("vec_id") < 2)
-    plain = sorted(
-        map(tuple, S.cosine_topk_bruteforce(emb, q, k=3).collect())
-    )
-    cached = sorted(
-        map(tuple, S.cosine_topk_bruteforce_cached(emb, q, k=3).collect())
-    )
-    assert cached == plain
-
-
-def test_clear_materialize_memos_invalidates_every_memo(spark):
-    """The r11 ADVICE invalidation hook: semanticHash keys are PLAN
-    identity, so in-session read-after-write pipelines must be able to
-    drop every cached frame in one call — and the next call re-derives
-    a FRESH entry rather than erroring or serving the dropped one."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators import ivf as I
-    from salesanalytics_etl_spark.operators import similarity as S
-    from salesanalytics_etl_spark.operators.memo import (
-        clear_materialize_memos,
-    )
-
-    docs = _docs(spark, ["clear hook corpus alpha", "clear hook beta"])
-    emb = spark.createDataFrame(
-        [(i, [float(i), 2.0, 1.0]) for i in range(12)],
-        "vec_id BIGINT, embedding ARRAY<FLOAT>",
-    )
-    banded = D._portable_banded_cached(docs)
-    assigned = I.portable_cell_assignment_cached(emb, n_cells=3)
-    topk = S.cosine_topk_bruteforce_cached(
-        emb, emb.filter(F.col("vec_id") < 2), k=2
-    )
-    assert len(D._BANDED_MEMO) >= 1
-    assert len(I._ASSIGNMENT_MEMO) >= 1 and len(I._ANCHORS_MEMO) >= 1
-    assert len(S._BRUTEFORCE_MEMO) >= 1
-    dropped = clear_materialize_memos()
-    assert dropped >= 4
-    for memo in (
-        D._BANDED_MEMO,
-        I._ASSIGNMENT_MEMO,
-        I._ANCHORS_MEMO,
-        S._BRUTEFORCE_MEMO,
-    ):
-        assert len(memo) == 0
-    # post-clear calls re-derive fresh, value-identical entries
-    assert D._portable_banded_cached(docs) is not banded
-    assert I.portable_cell_assignment_cached(emb, n_cells=3) is not assigned
-    assert sorted(
-        map(tuple, I.portable_cell_assignment_cached(emb, n_cells=3).collect())
-    ) == sorted(map(tuple, assigned.collect()))
-    assert (
-        S.cosine_topk_bruteforce_cached(
-            emb, emb.filter(F.col("vec_id") < 2), k=2
+    def topk(emb):
+        queries = emb.filter(F.col("vec_id") < 3)
+        return (
+            _sorted(cosine_topk_bruteforce(emb, queries, k=3)),
+            _sorted(cosine_topk_ivf_portable(emb, queries, k=3, n_cells=4)),
         )
-        is not topk
+
+    docs_path = str(tmp_path / "documents")
+    emb_path = str(tmp_path / "embeddings")
+    _overwrite(spark, _doc_rows(0), DOC_SCHEMA, docs_path)
+    _overwrite(spark, _emb_rows(0), EMB_SCHEMA, emb_path)
+    before_pairs = pairs(spark.read.parquet(docs_path))
+    before_topk = topk(spark.read.parquet(emb_path))
+
+    _overwrite(spark, _doc_rows(1), DOC_SCHEMA, docs_path)
+    _overwrite(spark, _emb_rows(1), EMB_SCHEMA, emb_path)
+    fresh_pairs = pairs(spark.createDataFrame(_doc_rows(1), DOC_SCHEMA))
+    fresh_topk = topk(spark.createDataFrame(_emb_rows(1), EMB_SCHEMA))
+    # the overwrite must change every answer, or this test proves nothing
+    assert fresh_pairs != before_pairs
+    assert fresh_topk[0] != before_topk[0]
+    assert fresh_topk[1] != before_topk[1]
+
+    assert pairs(spark.read.parquet(docs_path)) == fresh_pairs
+    assert topk(spark.read.parquet(emb_path)) == fresh_topk
+
+
+def test_read_after_merge_sees_merged_rows(spark, tmp_path):
+    """The same contract through the framework's own table mutator."""
+    from salesanalytics_etl_spark.operators.dedup import _portable_banded
+    from salesanalytics_etl_spark.operators.upsert import merge_upsert_table
+
+    path = str(tmp_path / "docs_tbl")
+    spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")], DOC_SCHEMA
+    ).write.parquet(path)
+    before = _portable_banded(spark.read.parquet(path)).localCheckpoint()
+    assert {r.doc_id for r in before.collect()} == {1}
+    batch = spark.createDataFrame(
+        [(2, "eta theta iota kappa lambda mu")], DOC_SCHEMA
     )
-    clear_materialize_memos()
+    merge_upsert_table(spark, path, batch, ["doc_id"])
+    after = _portable_banded(spark.read.parquet(path)).localCheckpoint()
+    assert {r.doc_id for r in after.collect()} == {1, 2}
 
 
 def test_cold_ivf_call_derives_anchors_once(spark, monkeypatch):
-    """The r11 ADVICE double-derivation: one cold cosine_topk_ivf_portable
-    call must scan the corpus for its anchor sample exactly ONCE — the
-    probe side and the memoized assignment share _portable_anchors_cached.
-    """
+    """One cosine_topk_ivf_portable call scans the corpus for its anchor
+    sample exactly ONCE: the collected anchors feed the probe side and
+    are handed to portable_cell_assignment through ``anchor_rows``."""
     from salesanalytics_etl_spark.operators import ivf as I
-    from salesanalytics_etl_spark.operators.memo import (
-        clear_materialize_memos,
-    )
 
-    clear_materialize_memos()
     emb = spark.createDataFrame(
         [(i, [float(i % 4), float(i % 7), 1.0]) for i in range(24)],
-        "vec_id BIGINT, embedding ARRAY<FLOAT>",
+        EMB_SCHEMA,
     )
-    calls = {"n": 0}
-    real = I._portable_anchors
+    derived = []
+    handed = []
+    real_anchors = I._portable_anchors
+    real_assignment = I.portable_cell_assignment
 
-    def counting(*a, **k):
-        calls["n"] += 1
-        return real(*a, **k)
+    def counting_anchors(*a, **k):
+        derived.append(1)
+        return real_anchors(*a, **k)
 
-    monkeypatch.setattr(I, "_portable_anchors", counting)
+    def recording_assignment(*a, anchor_rows=None, **k):
+        handed.append(anchor_rows)
+        return real_assignment(*a, anchor_rows=anchor_rows, **k)
+
+    monkeypatch.setattr(I, "_portable_anchors", counting_anchors)
+    monkeypatch.setattr(I, "portable_cell_assignment", recording_assignment)
     out = I.cosine_topk_ivf_portable(
         emb, emb.filter(F.col("vec_id") < 2), k=3, n_cells=4
     )
     assert out.count() > 0
-    assert calls["n"] == 1  # cold path: one anchor derivation total
-    # a second consumer of the same corpus hits the anchor memo: no new
-    # derivation at all
-    I.portable_cell_assignment_cached(emb, n_cells=4).count()
-    assert calls["n"] == 1
-    clear_materialize_memos()
-
-
-def test_memo_eviction_is_fifo_oldest_first(spark):
-    from salesanalytics_etl_spark.operators import dedup as D
-
-    D._BANDED_MEMO.clear()
-    frames = [_docs(spark, [f"corpus number {i} text"]) for i in range(6)]
-    handles = [D._portable_banded_cached(f) for f in frames]
-    assert len(D._BANDED_MEMO) == 4  # bounded
-    # the two OLDEST entries were evicted; the newest four survive
-    surviving = list(D._BANDED_MEMO.values())
-    assert handles[0] not in surviving and handles[1] not in surviving
-    for h in handles[2:]:
-        assert h in surviving
-    # an evicted input recomputes (fresh entry) without error
-    re0 = D._portable_banded_cached(frames[0])
-    assert re0 is not handles[0]
-    D._BANDED_MEMO.clear()
-
-
-def test_pair_and_source_matrix_memos_value_transparent(spark):
-    """The r12 composition memos: minhash_near_dupes_portable's verified
-    pairs (shared q109→q178) and the source-similarity matrices (shared
-    q170/q172→q176) must return byte-equal results cached vs fresh, and
-    the second call must be the SAME checkpointed frame."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators.memo import (
-        clear_materialize_memos,
-    )
-
-    clear_materialize_memos()
-    docs = spark.createDataFrame(
-        [
-            (1, "s1", "the quick brown fox jumps over the lazy dog"),
-            (2, "s1", "the quick brown fox jumps over the lazy dog!"),
-            (3, "s2", "a completely different document about spark"),
-        ],
-        "doc_id BIGINT, source STRING, text STRING",
-    )
-    p1 = D.minhash_near_dupes_portable(docs)
-    assert D.minhash_near_dupes_portable(docs) is p1  # memo hit
-    clear_materialize_memos()
-    p2 = D.minhash_near_dupes_portable(docs)
-    assert p2 is not p1
-    assert sorted(map(tuple, p2.collect())) == sorted(
-        map(tuple, p1.collect())
-    )
-    exact_plain = sorted(map(tuple, D.source_shingle_jaccard(docs).collect()))
-    exact_cached = sorted(
-        map(tuple, D.source_shingle_jaccard_cached(docs).collect())
-    )
-    assert exact_cached == exact_plain
-    assert D.source_shingle_jaccard_cached(
-        docs
-    ) is D.source_shingle_jaccard_cached(docs)
-    sk_plain = sorted(map(tuple, D.source_minhash_jaccard(docs).collect()))
-    sk_cached = sorted(
-        map(tuple, D.source_minhash_jaccard_cached(docs).collect())
-    )
-    assert sk_cached == sk_plain
-    clear_materialize_memos()
-
-
-def test_merge_auto_invalidates_memos_over_mutated_table(spark, tmp_path):
-    """The r12 ADVICE hazard end-to-end: a memoized operator scans a
-    parquet table, merge_upsert_table overwrites it IN the same session,
-    and the next memoized call must see the post-merge data — the
-    framework's own mutator invalidates, no manual hook needed. The
-    semanticHash key cannot distinguish the re-read (same path, same
-    plan), so without auto-invalidation this test serves the stale frame."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators.memo import clear_materialize_memos
-    from salesanalytics_etl_spark.operators.upsert import merge_upsert_table
-
-    clear_materialize_memos()
-    path = str(tmp_path / "docs_tbl")
-    spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")],
-        "doc_id BIGINT, text STRING",
-    ).write.parquet(path)
-    before = D._portable_banded_cached(spark.read.parquet(path))
-    assert {r.doc_id for r in before.collect()} == {1}
-    batch = spark.createDataFrame(
-        [(2, "eta theta iota kappa lambda mu")], "doc_id BIGINT, text STRING"
-    )
-    merge_upsert_table(spark, path, batch, ["doc_id"])
-    after = D._portable_banded_cached(spark.read.parquet(path))
-    assert after is not before  # entry was dropped, not served stale
-    assert {r.doc_id for r in after.collect()} == {1, 2}  # post-merge data
-    clear_materialize_memos()
-
-
-def test_merge_into_unrelated_path_keeps_memo_entries(spark, tmp_path):
-    """The invalidation is SCOPED by recorded sources: merging into a
-    staging table must not cold-restart memoized operators over OTHER
-    tables (the whole point of recording sources at set time)."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators.memo import clear_materialize_memos
-    from salesanalytics_etl_spark.operators.upsert import merge_upsert_table
-
-    clear_materialize_memos()
-    docs_path = str(tmp_path / "docs_keep")
-    spark.createDataFrame(
-        [(1, "nu xi omicron pi rho sigma")], "doc_id BIGINT, text STRING"
-    ).write.parquet(docs_path)
-    kept = D._portable_banded_cached(spark.read.parquet(docs_path))
-    other = str(tmp_path / "other_tbl")
-    merge_upsert_table(
-        spark,
-        other,
-        spark.createDataFrame([(1, "x")], "k BIGINT, v STRING"),
-        ["k"],
-    )
-    merge_upsert_table(  # second merge exercises the swap path too
-        spark,
-        other,
-        spark.createDataFrame([(2, "y")], "k BIGINT, v STRING"),
-        ["k"],
-    )
-    assert D._portable_banded_cached(spark.read.parquet(docs_path)) is kept
-    clear_materialize_memos()
-
-
-def test_unknown_source_memo_entries_drop_fail_safe(spark):
-    """Entries whose sources could not be recorded (in-memory frames:
-    inputFiles() is empty) must be dropped by ANY path invalidation —
-    unknown provenance fails safe to a recompute, never a stale hit."""
-    from salesanalytics_etl_spark.operators import dedup as D
-    from salesanalytics_etl_spark.operators.memo import (
-        clear_materialize_memos,
-        invalidate_memos_for_path,
-    )
-
-    clear_materialize_memos()
-    docs = _docs(spark, ["tau upsilon phi chi psi omega"])
-    h = D._portable_banded_cached(docs)
-    assert invalidate_memos_for_path("/nowhere/in/particular") >= 1
-    assert D._portable_banded_cached(docs) is not h
-    clear_materialize_memos()
-
-
-def test_canon_uri_matches_uri_and_bare_forms():
-    """URI-addressed sources (hdfs/s3a/file) and mutator-supplied bare
-    or URI paths canonicalize to the same key exactly when they name
-    the same object — the non-local route the r13 review found never
-    matched under the old string-prefix form."""
-    from salesanalytics_etl_spark.operators.memo import _canon_uri
-
-    assert _canon_uri("file:/a/b") == ("file", "", "/a/b")
-    assert _canon_uri("file:///a/b/") == ("file", "", "/a/b")
-    assert _canon_uri("/a/b") == ("file", "", "/a/b")
-    assert _canon_uri("hdfs://nn:8020/tbl/part-0.parquet") == (
-        "hdfs", "nn:8020", "/tbl/part-0.parquet")
-    assert _canon_uri("s3a://bucket/tbl") == ("s3a", "bucket", "/tbl")
-    # authority must participate: same path on another cluster differs
-    assert _canon_uri("hdfs://other:8020/tbl") != _canon_uri(
-        "hdfs://nn:8020/tbl")
-    # bare path never collides with a scheme'd one
-    assert _canon_uri("s3a://bucket/tbl") != _canon_uri("/bucket/tbl")
-    # URI hosts are case-insensitive — including bracketed IPv6
-    # literals, whose colons defeated the old partition(':') fold
-    # (r14 ADVICE): upper/lower forms of one address must match, the
-    # port must stay verbatim, and userinfo must survive untouched
-    assert _canon_uri("hdfs://NN:8020/t") == _canon_uri("hdfs://nn:8020/t")
-    assert _canon_uri("hdfs://[2001:DB8::1]:8020/t") == _canon_uri(
-        "hdfs://[2001:db8::1]:8020/t")
-    assert _canon_uri("hdfs://[2001:DB8::1]:8020/t") == (
-        "hdfs", "[2001:db8::1]:8020", "/t")
-    assert _canon_uri("hdfs://[2001:DB8::1]/t") == (
-        "hdfs", "[2001:db8::1]", "/t")
-    assert _canon_uri("s3a://User@[2001:DB8::2]:9000/t") == (
-        "s3a", "User@[2001:db8::2]:9000", "/t")
-
-
-def test_invalidate_memos_for_uri_path():
-    """A memo whose sources are object-store URIs is dropped when the
-    mutator passes the same URI table path, and survives other tables."""
-    from salesanalytics_etl_spark.operators import memo as memo_mod
-    from salesanalytics_etl_spark.operators.memo import (
-        invalidate_memos_for_path,
-        register_memo,
-    )
-
-    m = register_memo({})
-    try:
-        m["k1"] = "frame1"
-        m["k2"] = "frame2"
-        memo_mod._SOURCES[id(m)] = {
-            "k1": ("s3a://bucket/tbl/part-00000.parquet",),
-            "k2": ("s3a://bucket/other/part-00000.parquet",),
-        }
-        dropped = invalidate_memos_for_path("s3a://bucket/tbl")
-        assert "k1" not in m and "k2" in m
-        assert dropped >= 1
-    finally:
-        m.clear()
-        memo_mod._SOURCES.pop(id(m), None)
-        memo_mod._MEMOS.remove(m)
+    assert len(derived) == 1  # one anchor derivation in total
+    assert len(handed) == 1 and len(handed[0]) == 4

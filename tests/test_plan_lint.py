@@ -321,12 +321,11 @@ def test_plan_pins(spark, sf_dir, name):
 def test_q113_assignment_is_map_side(spark, sf_dir):
     """Quantizer assignment must be literal-anchor argmax inside ONE
     projection over ONE scan — the earlier join+window form shuffled
-    n_cells × corpus rows through a row_number exchange. Since r11 the
-    registered query consumes the assignment through a memoized
-    localCheckpoint (the scan is hidden behind an RDD scan there), so
-    the shape is pinned on the UNDERLYING operator, and the query plan
-    is pinned to its one remaining exchange (the ≤ n_cells-group stats
-    aggregate)."""
+    n_cells × corpus rows through a row_number exchange. The registered
+    query consumes the assignment through a localCheckpoint (the scan
+    is hidden behind an RDD scan there), so the shape is pinned on the
+    UNDERLYING operator, and the query plan is pinned to its one
+    remaining exchange (the ≤ n_cells-group stats aggregate)."""
     from salesanalytics_etl_spark.operators.ivf import (
         portable_cell_assignment,
     )

@@ -251,9 +251,7 @@ def test_trained_kmeans_recovers_planted_clusters(spark, planted_clusters):
     for."""
     from salesanalytics_etl_spark.operators.ivf import assign_clusters
 
-    assigned = assign_clusters(
-        spark, "twin-agreement-planted", planted_clusters, n_clusters=3
-    ).collect()
+    assigned = assign_clusters(planted_clusters, n_clusters=3).collect()
     by_label: dict[str, set[int]] = {}
     for r in assigned:
         by_label.setdefault(r.label, set()).add(r.cluster)
@@ -277,9 +275,7 @@ def test_cluster_stats_shapes_agree_between_trained_and_twin(
     )
 
     n = planted_clusters.count()
-    trained = assign_clusters(
-        spark, "twin-agreement-stats", planted_clusters, n_clusters=3
-    )
+    trained = assign_clusters(planted_clusters, n_clusters=3)
     stats = (
         trained.groupBy("cluster", "label")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -319,7 +315,7 @@ def test_trained_ivf_recall_floor_on_driver_corpus(spark, sf_dir):
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in cosine_topk_ivf(spark, emb, q, k=5).collect()
+        for r in cosine_topk_ivf(emb, q, k=5).collect()
     }
     # scores for any shared pair agree exactly is covered by the twin
     # tests; here the graded quantity is recall itself

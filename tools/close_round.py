@@ -106,22 +106,11 @@ def _recheck_floors(names: list[str], n_runs: int = 3) -> dict[str, float]:
     """Interleaved re-measure of flagged queries in one fresh session
     (the same SF dir bench ran, so floors are comparable); returns
     {query: floor_seconds}.
-
-    Memo-backed queries are rechecked COLD — the materialize-once memos
-    are cleared before every timed run — because their flag comes from
-    the SWEEP column (the warm floor is a ~0.05 s cache lookup that
-    would 'settle' any genuine cold-path regression as noise). Plain
-    queries are rechecked warm, matching the bench floor they were
-    flagged against.
     """
     import os
     import time
 
     import __spark_entry__ as entry
-    from salesanalytics_etl_spark.operators.memo import (
-        clear_materialize_memos,
-    )
-    from salesanalytics_etl_spark.plans.registry import MEMO_BACKED
     from salesanalytics_etl_spark.session import get_spark
 
     spark = get_spark(app_name="close_recheck")
@@ -132,21 +121,15 @@ def _recheck_floors(names: list[str], n_runs: int = 3) -> dict[str, float]:
         fn = qs.get(name)
         if fn is None:
             continue
-        cold = name in MEMO_BACKED
-        if cold:
-            clear_materialize_memos()
-        fn(spark, sf_dir).toPandas()  # warm JIT/footers (and memo, if any)
+        fn(spark, sf_dir).toPandas()  # warm JIT/footers
         runs = []
         for _ in range(n_runs):
-            if cold:
-                clear_materialize_memos()
             t0 = time.perf_counter()
             fn(spark, sf_dir).toPandas()
             runs.append(time.perf_counter() - t0)
         out[name] = round(min(runs), 3)
         print(
             f"recheck {name}: floor {out[name]}s"
-            f"{' (cold, memos cleared per run)' if cold else ''}"
             f" (runs {[round(r, 2) for r in runs]})"
         )
     return out
@@ -223,9 +206,9 @@ def main() -> None:
             "untrimmed_file": local.name if local.exists() else None,
         }
 
-    # floor-vs-floor report (non-fatal: memoized queries' two-pass
-    # floors are cache-hit numbers, so a "regression" here is a
-    # review-me signal, not a gate — the artifact records it either way)
+    # floor-vs-floor report (non-fatal: a "regression" here is a
+    # review-me signal, settled by the recheck below, not a gate — the
+    # artifact records it either way)
     fd = subprocess.run(
         [sys.executable, "-m", "tools.floor_diff"],
         cwd=_REPO,

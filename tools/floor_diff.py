@@ -12,16 +12,10 @@ terms, big ones in relative terms), then a summary with the shared-query
 totals. Exit code 1 when any regression crosses the threshold, so a
 closing script can gate on it.
 
-Two comparison columns (r12 verdict item 4): for ordinary queries the
-FLOOR (two-pass min) is the regression signal — sweep numbers carry
+The FLOOR (two-pass min) is the regression signal — sweep numbers carry
 neighbor effects (GC, JIT order, page cache) that two opposite-order
 passes mostly cancel (bench.py's contract since r4's false-alarm 8×
-"q08 regression"). For MEMO-BACKED queries (plans.MEMO_BACKED) the
-floor is a cache-HIT number — 0.05 s of memo lookup, blind to the cold
-path — so those are compared on the SWEEP column instead, where the
-first toucher pays the shared subtree's build, and annotated
-``[memo-backed: sweep]`` so a reader never mistakes a warm floor for
-the pipeline's cost.
+"q08 regression").
 """
 
 from __future__ import annotations
@@ -34,13 +28,6 @@ from pathlib import Path
 _REPO = Path(__file__).resolve().parent.parent
 
 ABS_FLOOR_SECONDS = 0.3  # ignore sub-0.3s absolute jitter
-
-
-def _memo_backed() -> frozenset:
-    sys.path.insert(0, str(_REPO))
-    from salesanalytics_etl_spark.plans import MEMO_BACKED
-
-    return MEMO_BACKED
 
 
 def _local_files() -> dict[int, Path]:
@@ -98,46 +85,26 @@ def main() -> int:
     prev_doc = json.loads(files[prev_n].read_text())
     cur_doc = json.loads(files[cur_n].read_text())
     prev, cur = prev_doc["floors"], cur_doc["floors"]
-    prev_sweep = prev_doc.get("queries", {})
-    cur_sweep = cur_doc.get("queries", {})
-    memo = _memo_backed()
     shared = sorted(set(prev) & set(cur))
-    regressions = []  # (delta, query, column, prev_val, cur_val)
+    regressions = []  # (delta, query, prev_val, cur_val)
     for q in shared:
-        if q in memo:
-            p, c, col = prev_sweep.get(q), cur_sweep.get(q), "sweep"
-            if p is None or c is None:
-                continue
-        else:
-            p, c, col = prev[q], cur[q], "floor"
+        p, c = prev[q], cur[q]
         d = c - p
         if d > ABS_FLOOR_SECONDS and d > p * pct / 100.0:
-            regressions.append((d, q, col, p, c))
-    for d, q, col, p, c in sorted(regressions, reverse=True):
-        tag = " [memo-backed: sweep]" if col == "sweep" else ""
+            regressions.append((d, q, p, c))
+    for d, q, p, c in sorted(regressions, reverse=True):
         print(
             f"REGRESSED {q}: {p:.2f}s -> {c:.2f}s "
-            f"(+{d:.2f}s, +{d / p * 100:.0f}%, {col} column){tag}"
+            f"(+{d:.2f}s, +{d / p * 100:.0f}%)"
         )
     tot_prev = sum(prev[q] for q in shared)
     tot_cur = sum(cur[q] for q in shared)
-    memo_shared = sorted(q for q in shared if q in memo)
     print(
         f"floor_diff r{prev_n}->r{cur_n}: {len(shared)} shared queries, "
         f"floor total {tot_prev:.1f}s -> {tot_cur:.1f}s "
         f"({tot_cur / tot_prev:.2f}x), {len(regressions)} regressed "
-        f"(> {ABS_FLOOR_SECONDS}s and > {pct:.0f}%; "
-        f"{len(memo_shared)} memo-backed queries judged on sweep column)"
+        f"(> {ABS_FLOOR_SECONDS}s and > {pct:.0f}%)"
     )
-    if memo_shared:
-        print(
-            "memo-warm floors (cache-hit numbers, NOT cold costs): "
-            + " ".join(
-                f"{q.split('_', 1)[0]}={cur[q]:.2f}s/sweep="
-                f"{cur_sweep.get(q, float('nan')):.2f}s"
-                for q in memo_shared
-            )
-        )
     new = sorted(set(cur) - set(prev))
     if new:
         print(
