@@ -11,9 +11,19 @@ MERGE); the upsert is the anti-join+union rewrite over the parquet target.
 Error stance preserved: coerce, don't crash — bad values → NULL, bad rows →
 reject files, missing files → empty frames.
 
-Scale: each per-table flow is one lazy DAG; Catalyst pushes the null-key
-filters into the scan, the dedupe is the only wide op per dim table, and
-FK validation broadcasts parent key sets (dims ≪ facts at 100 TB).
+Scale: each input is parsed, trimmed and deduped exactly once per run.
+Every cleaned table is materialized with ``localCheckpoint()`` and its row
+count observed in that same job, so the empty-parent guards read a number
+instead of firing jobs; ``orders_ok`` (parent of the detail FK and input of
+the orders MERGE) is checkpointed too. Every downstream action (reject
+writes, staged parquet writes) therefore starts from the materialized rows,
+and keep, reject and merge all see the same ``_seq``-ordered dedupe.
+Reject counts, and the final counts when ``target_dir`` is set, are
+observed on their writes instead of counted by a separate job. Only this driver materializes: ``fk_split*`` and
+``merge_upsert`` stay lazy because queries compose them into their own
+plans. Catalyst pushes the null-key filters into the scan, the dedupe is the
+only wide op per table, and FK validation broadcasts parent key sets (dims ≪
+facts at 100 TB).
 """
 
 from __future__ import annotations
@@ -37,7 +47,7 @@ from salesanalytics_etl_spark.schemas import (
     REFERENCE_SCHEMAS,
 )
 from salesanalytics_etl_spark.sources.readers import read_csv_exact
-from salesanalytics_etl_spark.sources.writers import write_rejects
+from salesanalytics_etl_spark.sources.writers import observe_rows, write_rejects
 
 
 @dataclass
@@ -106,20 +116,19 @@ def run_pipeline(
     """
     rejects_dir = rejects_dir or os.path.join(data_dir, "rejects")
 
-    raw = {
-        name: read_csv_exact(
-            spark,
-            os.path.join(data_dir, f"{name}.csv"),
-            schema,
-            with_seq=True,
+    # Parse, trim and dedupe each input once; the empty-parent guards
+    # below read the observed row counts.
+    clean: dict[str, DataFrame] = {}
+    n_clean: dict[str, int] = {}
+    for name, schema in REFERENCE_SCHEMAS.items():
+        raw = read_csv_exact(
+            spark, os.path.join(data_dir, f"{name}.csv"), schema, with_seq=True
         )
-        for name, schema in REFERENCE_SCHEMAS.items()
-    }
-
-    customers = clean_table(raw["customers"], "customers")
-    products = clean_table(raw["products"], "products")
-    orders = clean_table(raw["orders"], "orders")
-    details = clean_table(raw["order_details"], "order_details")
+        df, rows = observe_rows(clean_table(raw, name))
+        clean[name] = df.localCheckpoint()
+        n_clean[name] = rows.get["rows"]
+    customers, products = clean["customers"], clean["products"]
+    orders, details = clean["orders"], clean["order_details"]
 
     reject_counts: dict[str, int] = {}
 
@@ -130,10 +139,12 @@ def run_pipeline(
     # warehouse on a missing customers.csv).
 
     # FK: orders→customers first (cascade order, reference :198)
-    if customers.isEmpty():
+    if n_clean["customers"] == 0:
         orders_ok, orders_bad = orders, orders.limit(0)
     else:
         orders_ok, orders_bad = fk_split(orders, customers, "CustomerID")
+        # parent of the detail FK and input of the orders MERGE: join once
+        orders_ok = orders_ok.localCheckpoint()
     reject_counts["orders"] = write_rejects(orders_bad, rejects_dir, "orders")
 
     # FK: details→{post-filter orders, products}, conjunctive (reference :200-207).
@@ -143,9 +154,9 @@ def run_pipeline(
     # the (empty) post-filter set and be rejected as orphans, not pass
     # through unvalidated.
     detail_edges = []
-    if not orders.isEmpty():
+    if n_clean["orders"] > 0:
         detail_edges.append((orders_ok, "OrderID", "OrderID"))
-    if not products.isEmpty():
+    if n_clean["products"] > 0:
         detail_edges.append((products, "ProductID", "ProductID"))
     if detail_edges:
         details_ok, details_bad = fk_split_composite(details, detail_edges)
@@ -155,7 +166,7 @@ def run_pipeline(
         details_bad, rejects_dir, "order_details"
     )
 
-    cleaned = {
+    validated = {
         "customers": customers,
         "products": products,
         "orders": orders_ok,
@@ -164,7 +175,7 @@ def run_pipeline(
 
     # MERGE upsert into target state (M1); idempotent by construction.
     final: dict[str, DataFrame] = {}
-    for name, incoming in cleaned.items():
+    for name, incoming in validated.items():
         target = (existing or {}).get(name)
         final[name] = merge_upsert(target, incoming, DEDUPE_KEYS[name])
 
@@ -180,11 +191,14 @@ def run_pipeline(
         # restarting an incremental run should call it themselves before
         # reading prior state.
         recover_interrupted_swap(target_dir)
+        counts = {}
         for name, df in final.items():
             dst = os.path.join(target_dir, name)
             stage = dst + ".__stage__"
             shutil.rmtree(stage, ignore_errors=True)
+            df, rows = observe_rows(df)
             df.write.mode("overwrite").parquet(stage)
+            counts[name] = rows.get["rows"]
             old = dst + ".__old__"
             shutil.rmtree(old, ignore_errors=True)
             if os.path.exists(dst):
@@ -195,6 +209,6 @@ def run_pipeline(
             name: spark.read.parquet(os.path.join(target_dir, name))
             for name in final
         }
-
-    counts = {name: df.count() for name, df in final.items()}
+    else:
+        counts = {name: df.count() for name, df in final.items()}
     return PipelineResult(tables=final, reject_counts=reject_counts, counts=counts)

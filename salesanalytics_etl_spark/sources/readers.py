@@ -4,7 +4,7 @@
 (etl_sales_analytics.py:46-61) Spark-first:
 
 - read with an explicit schema (no inference for structure; value parsing is
-  lenient via non-ANSI casts),
+  lenient via ``try_cast``, so a bad value is NULL under any ANSI setting),
 - keep ONLY the declared columns, in declared order; columns absent from the
   file come back as typed NULLs,
 - missing file → empty DataFrame with the declared schema (reference :48-50),
@@ -13,7 +13,8 @@
 
 Scale notes: reading with ``PERMISSIVE`` mode + string-typed raw columns and
 casting afterwards keeps cast coercion (bad value → NULL) identical to
-``pd.to_numeric(errors="coerce")`` while staying fully JVM-side. On a real
+``pd.to_numeric(errors="coerce")`` while staying fully JVM-side; the header
+line is parsed on the driver, so opening a file fires no Spark job. On a real
 cluster the ``_seq`` column from ``monotonically_increasing_id`` encodes
 (partition id, row-in-partition); it reproduces file order only for a
 single-file ordered read — multi-file sources need an explicit ordering
@@ -22,7 +23,9 @@ column (SURVEY.md §7.4 risk 1).
 
 from __future__ import annotations
 
+import csv
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,26 +42,30 @@ def read_csv_exact(
     schema: T.StructType,
     with_seq: bool = False,
 ) -> DataFrame:
-    """Read one CSV with schema conformance; missing file → empty frame.
+    """Read one local CSV file with schema conformance; missing or
+    zero-byte file → empty frame.
 
-    All columns are first read as strings, then cast with Spark's coercing
-    (non-ANSI) cast so unparseable values yield NULL instead of failing —
-    semantics of the reference's to_int/to_decimal/pd.to_datetime coercion
+    All columns are first read as strings, then ``try_cast`` so unparseable
+    values yield NULL instead of failing in any session mode — semantics of
+    the reference's to_int/to_decimal/pd.to_datetime coercion
     (etl_sales_analytics.py:161-178).
     """
-    if not os.path.exists(path):
+    header = csv_header(spark, path) if os.path.exists(path) else None
+    if header is None:
         df = spark.createDataFrame([], schema)
     else:
-        # Read with the FILE's header names (all strings, no inference) and
-        # conform BY NAME afterwards. An explicit .schema() on a CSV read
-        # binds positionally (enforceSchema ignores header names), so a
-        # file with reordered columns — or a missing middle column — would
-        # silently load values under the wrong field names; header-named
-        # strings + name-based conformance make column order irrelevant.
+        # Binding is positional: with ``header`` on, a CSV read with an
+        # explicit schema skips the header line and assigns the schema's
+        # fields to the file's columns in order. The schema is therefore
+        # the FILE's own header names (all strings, in file order), so
+        # position and name agree, and conform_columns then binds the
+        # declared fields BY NAME: reordered or missing columns never
+        # load values under the wrong field.
+        raw_schema = T.StructType([T.StructField(n, T.StringType()) for n in header])
         raw = (
-            spark.read.option("header", True)
+            spark.read.schema(raw_schema)
+            .option("header", True)
             .option("mode", "PERMISSIVE")
-            .option("inferSchema", False)
             .csv(path)
         )
         df = conform_columns(raw, schema)
@@ -67,18 +74,44 @@ def read_csv_exact(
     return df
 
 
+def csv_header(spark: SparkSession, path: str) -> list[str] | None:
+    """The column names Spark's CSV header read gives ``path``, parsed on
+    the driver; None for a file without a header line.
+
+    Mirrors Spark's defaults: UTF-8 with the BOM stripped, ``"`` quotes
+    with ``\\`` escapes, blank lines skipped, an empty name becomes
+    ``_c<i>`` and a duplicate name (case-insensitive unless
+    ``spark.sql.caseSensitive``) becomes ``<name><i>``.
+    """
+    with open(path, encoding="utf-8-sig", newline="") as f:
+        names = next((r for r in csv.reader(f, escapechar="\\") if r), None)
+    if names is None:
+        return None
+    if spark.conf.get("spark.sql.caseSensitive") == "true":
+        folded = names
+    else:
+        folded = [n.lower() for n in names]
+    seen = Counter(f for f in folded if f)
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if seen[f] > 1 else n
+        for i, (n, f) in enumerate(zip(names, folded))
+    ]
+
+
 def conform_columns(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project to exactly the declared columns/order; missing → typed NULL.
 
     Mirrors reference etl_sales_analytics.py:53-56 (keep only required
-    columns, reorder, fill absent with NA) with casts folded in. Pure
-    projection — Catalyst prunes the scan to the referenced columns.
+    columns, reorder, fill absent with NA) with casts folded in. The casts
+    are ``try_cast``: a value the type cannot hold is NULL whatever
+    ``spark.sql.ansi.enabled`` says. Pure projection — Catalyst prunes the
+    scan to the referenced columns.
     """
     present = set(df.columns)
     cols = []
     for field in schema.fields:
         if field.name in present:
-            cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
+            cols.append(F.col(field.name).try_cast(field.dataType).alias(field.name))
         else:
             cols.append(F.lit(None).cast(field.dataType).alias(field.name))
     return df.select(*cols)

@@ -11,8 +11,19 @@
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an ``Observation`` that counts its rows during the first
+    action over it; read ``obs.get["rows"]`` after that action. The count
+    costs no job of its own.
+    """
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def write_rejects(df: DataFrame, rejects_dir: str, name: str) -> int:
@@ -20,14 +31,22 @@ def write_rejects(df: DataFrame, rejects_dir: str, name: str) -> int:
 
     Returns the reject count. Writes only when non-empty, mirroring the
     reference's ``if not bad.empty`` guard (etl_sales_analytics.py:195,204).
-    The count comes from a cheap ``count()`` action; at scale prefer
-    accumulating via the write's task metrics, but a count on an
-    already-filtered anti-join result is one extra narrow job.
+    ``df`` is evaluated exactly once: one CSV write to
+    ``rejects_dir/name.__stage__`` whose row count an ``Observation``
+    collects. A non-empty stage then replaces ``rejects_dir/name``; an
+    empty one is deleted and leaves any earlier ``rejects_dir/name`` as
+    it was.
     """
-    n = df.count()
+    out = os.path.join(rejects_dir, name)
+    stage = out + ".__stage__"
+    df, rows = observe_rows(df)
+    df.write.mode("overwrite").option("header", True).csv(stage)
+    n = rows.get["rows"]
     if n > 0:
-        out = os.path.join(rejects_dir, name)
-        df.write.mode("overwrite").option("header", True).csv(out)
+        shutil.rmtree(out, ignore_errors=True)
+        os.rename(stage, out)
+    else:
+        shutil.rmtree(stage)
     return n
 
 

@@ -237,3 +237,32 @@ def test_recover_interrupted_swap_ignores_partial_first_write(tmp_path):
     (stage / "part-00000.parquet").write_bytes(b"partial")
     assert recover_interrupted_swap(str(t)) == []
     assert not (t / "orders").exists()
+
+
+def test_load_and_incremental_batch_job_count(spark, data_dir, tmp_path):
+    """Each input is parsed and deduped once per run: the cleaned tables
+    and ``orders_ok`` are checkpointed with their counts observed, reject
+    and final counts are observed on their writes, and CSV headers are
+    read on the driver. A load plus one incremental batch on the fixtures
+    runs 70 Spark jobs; re-deriving the inputs for every action took 136."""
+    sc = spark.sparkContext
+    group = f"etl-job-count-{tmp_path.name}"
+    t = str(tmp_path / "warehouse")
+    sc.setJobGroup(group, "run_pipeline load + batch")
+    try:
+        r1 = run_pipeline(
+            spark, data_dir, rejects_dir=str(tmp_path / "rej1"), target_dir=t
+        )
+        r2 = run_pipeline(
+            spark,
+            data_dir,
+            rejects_dir=str(tmp_path / "rej2"),
+            target_dir=t,
+            existing=r1.tables,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert r2.counts == r1.counts
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 80, jobs

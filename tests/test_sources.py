@@ -1,9 +1,14 @@
-"""Source/sink layer: JSONL ingest (coerce-don't-crash) and compaction."""
+"""Source/sink layer: CSV and JSONL ingest (coerce-don't-crash), the reject
+sink and compaction."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import glob
+import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -165,3 +170,110 @@ def test_read_csv_exact_conforms_by_name_not_position(spark, tmp_path):
         (1, None, 9.5),
         (7, None, 2.0),
     ]
+
+
+HEADER_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.IntegerType()),
+        T.StructField("na,me", T.StringType()),
+        T.StructField("price", T.DoubleType()),
+    ]
+)
+
+HEADER_FIXTURES = {
+    "quoted_commas": '"id","na,me",price\n1,"a,b",9.5\n',
+    "reordered": 'price,"na,me",id\n9.5,a,1\n2.0,b,7\n',
+    "missing_middle": "id,price\n1,9.5\n",
+    "duplicates": 'id,"na,me",ID,"NA,ME",price\n1,a,2,b,9.5\n',
+    "empty_name": "id,,price\n1,a,9.5\n",
+    "utf8_bom": '\ufeffid,"na,me",price\n1,a,9.5\n',
+    "header_only": 'id,"na,me",price\n',
+    "zero_byte": "",
+}
+
+
+@pytest.mark.parametrize("case", sorted(HEADER_FIXTURES))
+def test_driver_header_read_matches_spark_header_read(spark, tmp_path, case):
+    """The driver-side header parse names the columns exactly as Spark's
+    own header read does, and the conformed frame equals the one built
+    from a Spark-inferred header."""
+    from salesanalytics_etl_spark.sources.readers import (
+        conform_columns,
+        csv_header,
+        read_csv_exact,
+    )
+
+    p = str(tmp_path / f"{case}.csv")
+    with open(p, "w", encoding="utf-8", newline="") as f:
+        f.write(HEADER_FIXTURES[case])
+    spark_read = spark.read.option("header", True).option("mode", "PERMISSIVE").csv(p)
+    assert (csv_header(spark, p) or []) == spark_read.columns
+
+    got = read_csv_exact(spark, p, HEADER_SCHEMA)
+    want = conform_columns(spark_read, HEADER_SCHEMA)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_read_csv_exact_is_ansi_independent(spark, tmp_path):
+    """Dirty values coerce to NULL whatever ``spark.sql.ansi.enabled``
+    says: a plain cast raises CAST_INVALID_INPUT under ANSI."""
+    from salesanalytics_etl_spark.sources.readers import read_csv_exact
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.IntegerType()),
+            T.StructField("price", T.DecimalType(10, 2)),
+            T.StructField("day", T.DateType()),
+        ]
+    )
+    p = str(tmp_path / "dirty.csv")
+    with open(p, "w") as f:
+        f.write("id,price,day\n1,abc,2024-01-02\n1.5,2.50,not-a-date\nx,,\n")
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    rows = {}
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set(key, mode)
+            rows[mode] = read_csv_exact(spark, p, schema).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert rows["true"] == rows["false"]
+    assert [tuple(r) for r in rows["true"]] == [
+        (1, None, datetime.date(2024, 1, 2)),
+        (None, decimal.Decimal("2.50"), None),
+        (None, None, None),
+    ]
+
+
+def test_write_rejects_empty_leaves_previous_output(spark, tmp_path):
+    from salesanalytics_etl_spark.sources.writers import write_rejects
+
+    prev = tmp_path / "rejects" / "orders"
+    prev.mkdir(parents=True)
+    (prev / "part-00000.csv").write_text("OrderID\n1\n")
+    empty = spark.createDataFrame([], "OrderID INT")
+    assert write_rejects(empty, str(tmp_path / "rejects"), "orders") == 0
+    assert sorted(os.listdir(prev)) == ["part-00000.csv"]
+    assert (prev / "part-00000.csv").read_text() == "OrderID\n1\n"
+    assert os.listdir(tmp_path / "rejects") == ["orders"]
+
+
+def test_write_rejects_counts_the_rows_it_writes(spark, tmp_path):
+    from salesanalytics_etl_spark.sources.writers import write_rejects
+
+    rejects = tmp_path / "rejects"
+    (rejects / "orders").mkdir(parents=True)
+    (rejects / "orders" / "stale.csv").write_text("OrderID\n99\n")
+    bad = spark.range(0, 37, numPartitions=3).selectExpr("CAST(id AS INT) AS OrderID")
+    n = write_rejects(bad, str(rejects), "orders")
+    assert n == 37
+    data_rows = 0
+    for part in glob.glob(str(rejects / "orders" / "part-*.csv")):
+        with open(part) as f:
+            lines = f.read().splitlines()
+        assert lines[0] == "OrderID"
+        data_rows += len(lines) - 1
+    assert data_rows == n
+    assert os.listdir(rejects) == ["orders"]
