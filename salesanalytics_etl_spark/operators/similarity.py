@@ -66,16 +66,6 @@ def cosine(a, b) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _seq_dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """Row-wise dot(A[i], B[i]) with strict left-to-right accumulation over
-    the dimension (vectorized across rows) — bit-identical to a scalar
-    sequential loop, unlike np.dot/BLAS."""
-    acc = np.zeros(len(A), dtype=np.float64)
-    for d in range(A.shape[1]):
-        acc += A[:, d] * B[:, d]
-    return acc
-
-
 def _seq_sqnorms(A: np.ndarray) -> np.ndarray:
     acc = np.zeros(len(A), dtype=np.float64)
     for d in range(A.shape[1]):
@@ -346,12 +336,7 @@ def cosine_topk_lsh(
         F.col(id_col).alias("query_id"),
         F.explode(bucketer(F.col(vec_col))).alias("bucket"),
     )
-    from salesanalytics_etl_spark.operators.dedup import spread_partitions
-
-    # spread the corpus scan before the Python bucketer: a single-file
-    # scan would run the pandas-UDF bucket stage on ONE task (r17; the
-    # q24/q190 lesson, plan-metadata guard no-ops on wide sources)
-    c = spread_partitions(corpus, by=id_col).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.explode(bucketer(F.col(vec_col))).alias("bucket"),
     )

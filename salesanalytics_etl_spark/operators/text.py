@@ -45,19 +45,6 @@ def token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(TOKEN_RE))
 
 
-def char_class_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc character-class profile used by quality scoring."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        F.length(t).alias("n_chars_calc"),
-        F.regexp_count(t, F.lit("[A-Za-z]")).alias("n_alpha"),
-        F.regexp_count(t, F.lit("[0-9]")).alias("n_digit"),
-        F.regexp_count(t, F.lit(r"[\s]")).alias("n_space"),
-        token_count(t).alias("n_tokens"),
-    )
-
-
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic document-quality score in [0,1].
 

@@ -14,8 +14,8 @@ repo stays dependency-free and documents the trade-off (SURVEY.md §7.4
 risk 5: O(|target|) rewrite per batch).
 
 Scale: the anti-join shuffles target+incoming on the key unless the incoming
-batch is small enough to broadcast — typical for incremental loads, so we
-hint broadcast when the batch is provably small; AQE decides otherwise.
+batch is small enough to broadcast — typical for incremental loads; AQE
+picks the join strategy at runtime.
 """
 
 from __future__ import annotations
@@ -311,14 +311,14 @@ def merge_upsert(
     target: DataFrame | None,
     incoming: DataFrame,
     keys: list[str],
-    broadcast_incoming: bool | None = None,
     evolve_schema: bool = False,
 ) -> DataFrame:
     """Upsert ``incoming`` into ``target`` by ``keys``; returns new state.
 
     ``target=None`` (first load) → incoming as-is. Incoming is assumed
     key-unique (the pipeline dedupes first, as the reference does before
-    staging).
+    staging); a key the batch repeats replaces its target row and keeps
+    every incoming copy.
 
     ``evolve_schema=False`` (default) keeps the reference's fixed-schema
     MERGE: incoming must carry every target column (a missing one raises
@@ -385,10 +385,9 @@ def merge_upsert(
             carry = target.select(*keys, *missing)
             incoming = incoming.join(carry, on=keys, how="left")
     incoming = incoming.select(*target.columns)
-    probe = incoming.select(*keys).distinct()
-    if broadcast_incoming:
-        probe = F.broadcast(probe)
-    kept = target.join(probe, on=keys, how="left_anti")
+    # a left-anti join's output is the same whether probe keys repeat or
+    # not, so the probe needs no distinct()
+    kept = target.join(incoming.select(*keys), on=keys, how="left_anti")
     return kept.unionByName(incoming)
 
 
@@ -612,12 +611,6 @@ def compact_partitions(
             pinned,
         )
     return len(crowded)
-
-
-def upsert_counts(target_before: DataFrame | None, incoming: DataFrame) -> int:
-    """Rows-affected report (M2): every staged row hits UPDATE or INSERT,
-    so the MERGE rowcount equals the incoming row count."""
-    return incoming.count()
 
 
 def scd2_apply(

@@ -8,9 +8,10 @@ Config rationale (SURVEY.md §4.2):
 - ``spark.sql.session.timeZone=UTC`` — deterministic date/timestamp derivation
   regardless of host TZ (queries repeatedly downcast timestamp→date,
   reference queries.sql:29,33).
-- AQE on — runtime join-strategy switching, partition coalescing and skew-join
-  splitting; this is the "design for 1000 executors" knob that costs nothing
-  locally.
+- AQE, partition coalescing and skew-join splitting stay at Spark's
+  defaults (all on in Spark 4): no ``spark.sql.adaptive.*`` key is set here.
+  A partitioning pin lands only with counters from both perfbench workloads
+  that differ from the default's.
 - shuffle.partitions sized to the local core count; on a real cluster this is
   overridden by AQE's coalescing anyway.
 """
@@ -55,31 +56,6 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst=true (the default) coalesces post-shuffle
-        # partitions only down to defaultParallelism, so every KB-scale
-        # intermediate stage of the audit/sketch family still schedules
-        # |cores| tasks — pure per-task overhead at ANY deployment
-        # whose shuffles are smaller than cores x advisory. false is
-        # the posture the Spark tuning docs themselves recommend
-        # (respect the advisory target size); the advisory size is the
-        # scale-dependent knob and stays env-overridable: 4m locally
-        # (sf0.1 shuffles are KB-MB; 64m would serialize mid-size
-        # compute stages like the q156 rank machinery — measured
-        # 5.5->8.1 s before parameterizing), 64-256m on a real cluster
-        # (guide posture for 100 MB-1 GB reduce partitions). Interleaved
-        # 16-query A/B at sf0.1: total mins 43.2 -> 41.9 s, rows
-        # identical, no query regressed beyond noise.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            "false",
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "4m"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Whole-stage codegen bails out above 100 schema fields
         # (spark.sql.codegen.maxFields default) and the operator falls
         # back to interpreted evaluation — the SimHash/MinHash vote and

@@ -244,7 +244,7 @@ def test_load_and_incremental_batch_job_count(spark, data_dir, tmp_path):
     and ``orders_ok`` are checkpointed with their counts observed, reject
     and final counts are observed on their writes, and CSV headers are
     read on the driver. A load plus one incremental batch on the fixtures
-    runs 70 Spark jobs; re-deriving the inputs for every action took 136."""
+    runs 66 Spark jobs; re-deriving the inputs for every action took 136."""
     sc = spark.sparkContext
     group = f"etl-job-count-{tmp_path.name}"
     t = str(tmp_path / "warehouse")
@@ -265,4 +265,4 @@ def test_load_and_incremental_batch_job_count(spark, data_dir, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert r2.counts == r1.counts
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 80, jobs
+    assert jobs <= 68, jobs

@@ -108,6 +108,22 @@ def test_merge_upsert_updates_and_inserts_and_is_idempotent(spark):
     assert {r.k: r.v for r in twice.collect()} == state  # idempotent
 
 
+def test_merge_upsert_repeated_incoming_key(spark):
+    """A key repeated in the batch replaces its target row once and keeps
+    every incoming row with its multiplicity: the anti-join probe gives
+    the same result whether its keys repeat or not."""
+    target = spark.createDataFrame(
+        [(1, "old"), (2, "keep")], ["k", "v"]
+    )
+    incoming = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (1, "a"), (3, "ins")], ["k", "v"]
+    )
+    got = sorted(
+        (r.k, r.v) for r in merge_upsert(target, incoming, ["k"]).collect()
+    )
+    assert got == [(1, "a"), (1, "a"), (1, "b"), (2, "keep"), (3, "ins")]
+
+
 def test_concat_tsql_null_as_empty(spark):
     # T-SQL CONCAT(a,' ',b) with NULL FirstName → ' Last', not NULL
     df = spark.createDataFrame(

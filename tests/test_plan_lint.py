@@ -493,3 +493,27 @@ def test_q172_signatures_scan_once(spark, sf_dir):
         "re-scan the corpus"
     )
     assert "BroadcastNestedLoopJoin" in pair_tree
+
+
+def test_q28_lsh_shuffles_twice(spark, sf_dir):
+    """q28's LSH top-k shuffles twice: the candidate-pair distinct and
+    the per-query top-k window. A repartition of the corpus before the
+    bucketer adds a third exchange, which the distinct reshuffles right
+    after."""
+    df = all_queries()["q28_ann_cosine_lsh"](spark, sf_dir)
+    tree = _formatted_plan(df).split("\n\n")[0]
+    exchanges = [
+        ln for ln in tree.splitlines()
+        if "Exchange" in ln and "BroadcastExchange" not in ln
+    ]
+    assert len(exchanges) == 2, "\n".join(exchanges)
+
+
+def test_session_sets_no_adaptive_config(spark):
+    """AQE, coalescing and skew-join settings stay at Spark's defaults:
+    ``get_spark`` pins no ``spark.sql.adaptive.*`` key."""
+    pinned = [
+        k for k, _ in spark.sparkContext.getConf().getAll()
+        if k.startswith("spark.sql.adaptive.")
+    ]
+    assert not pinned, pinned
