@@ -19,20 +19,39 @@ the orders MERGE) is checkpointed too. Every downstream action (reject
 writes, staged parquet writes) therefore starts from the materialized rows,
 and keep, reject and merge all see the same ``_seq``-ordered dedupe.
 Reject counts, and the final counts when ``target_dir`` is set, are
-observed on their writes instead of counted by a separate job. Only this driver materializes: ``fk_split*`` and
-``merge_upsert`` stay lazy because queries compose them into their own
-plans. Catalyst pushes the null-key filters into the scan, the dedupe is the
-only wide op per table, and FK validation broadcasts parent key sets (dims ≪
-facts at 100 TB).
+observed on their writes instead of counted by a separate job.
+
+The actions run in three waves; the actions of one wave do not depend on
+each other and run concurrently, each on its own thread in the caller's
+job group: (1) the four read → clean → checkpoint chains; (2) the
+``orders_ok`` checkpoint and the ``orders`` reject write; (3) the
+``order_details`` reject write and the four staged parquet writes (the
+four final counts without ``target_dir``). Most of these jobs are one
+task, so on a multi-core driver they overlap instead of queueing. Table
+directories are swapped only after every write of wave 3 has succeeded:
+a failed batch swaps no table and leaves no stage behind. The swapped
+tables are re-read concurrently too (each read infers its schema in a
+job).
+
+Only this driver materializes: ``fk_split*`` and ``merge_upsert`` stay
+lazy because queries compose them into their own plans. Catalyst pushes
+the null-key filters into the scan, the dedupe is the only wide op per
+table, and FK validation broadcasts parent key sets (dims ≪ facts at
+100 TB).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from salesanalytics_etl_spark.operators.cleaning import (
     dedupe_keep_last,
@@ -101,6 +120,19 @@ def recover_interrupted_swap(target_dir: str) -> list[str]:
     return restored
 
 
+def _concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list[Any]:
+    """Call every thunk on a thread of its own; return their results in
+    order once all have finished, or raise the first failure then.
+
+    Each thread starts with its own copy of the caller's Spark local
+    properties, so its jobs run in the caller's job group, and a
+    ``setJobGroup`` inside one thunk cannot retarget its siblings.
+    """
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]
+
+
 def run_pipeline(
     spark: SparkSession,
     data_dir: str,
@@ -111,22 +143,35 @@ def run_pipeline(
     """Run the full ETL over ``data_dir/{customers,products,orders,
     order_details}.csv``; upsert into ``existing`` state (or fresh).
 
+    Spark actions that do not depend on each other run concurrently, in
+    three waves: (1) the four read → clean → checkpoint chains; (2) the
+    ``orders_ok`` checkpoint and the ``orders`` reject write; (3) the
+    ``order_details`` reject write and the four staged table writes (the
+    four final counts without ``target_dir``). With ``target_dir``, no
+    table directory is swapped until every write of wave 3 has succeeded
+    (a failed batch leaves all four tables as they were), and the four
+    swapped tables are then re-read concurrently.
+
     Returns final table states + reject/row counts (the reference's
     [COUNT]/[WARN] reporting, :295-299).
     """
     rejects_dir = rejects_dir or os.path.join(data_dir, "rejects")
 
-    # Parse, trim and dedupe each input once; the empty-parent guards
-    # below read the observed row counts.
-    clean: dict[str, DataFrame] = {}
-    n_clean: dict[str, int] = {}
-    for name, schema in REFERENCE_SCHEMAS.items():
+    # Wave 1: parse, trim and dedupe each input once; the empty-parent
+    # guards below read the observed row counts.
+    def clean_once(name: str, schema: T.StructType) -> tuple[DataFrame, int]:
         raw = read_csv_exact(
             spark, os.path.join(data_dir, f"{name}.csv"), schema, with_seq=True
         )
         df, rows = observe_rows(clean_table(raw, name))
-        clean[name] = df.localCheckpoint()
-        n_clean[name] = rows.get["rows"]
+        df = df.localCheckpoint()
+        return df, rows.get["rows"]
+
+    cleaned = _concurrently(
+        spark, *(partial(clean_once, *item) for item in REFERENCE_SCHEMAS.items())
+    )
+    clean = {name: df for name, (df, _) in zip(REFERENCE_SCHEMAS, cleaned)}
+    n_clean = {name: rows for name, (_, rows) in zip(REFERENCE_SCHEMAS, cleaned)}
     customers, products = clean["customers"], clean["products"]
     orders, details = clean["orders"], clean["order_details"]
 
@@ -141,11 +186,15 @@ def run_pipeline(
     # FK: orders→customers first (cascade order, reference :198)
     if n_clean["customers"] == 0:
         orders_ok, orders_bad = orders, orders.limit(0)
+        keep_ok = lambda: orders_ok
     else:
         orders_ok, orders_bad = fk_split(orders, customers, "CustomerID")
         # parent of the detail FK and input of the orders MERGE: join once
-        orders_ok = orders_ok.localCheckpoint()
-    reject_counts["orders"] = write_rejects(orders_bad, rejects_dir, "orders")
+        keep_ok = orders_ok.localCheckpoint
+    # Wave 2: the checkpoint and the orders reject write.
+    orders_ok, reject_counts["orders"] = _concurrently(
+        spark, keep_ok, partial(write_rejects, orders_bad, rejects_dir, "orders")
+    )
 
     # FK: details→{post-filter orders, products}, conjunctive (reference :200-207).
     # The skip guard tests the PRE-filter parent: the reference's guard is
@@ -162,9 +211,6 @@ def run_pipeline(
         details_ok, details_bad = fk_split_composite(details, detail_edges)
     else:
         details_ok, details_bad = details, details.limit(0)
-    reject_counts["order_details"] = write_rejects(
-        details_bad, rejects_dir, "order_details"
-    )
 
     validated = {
         "customers": customers,
@@ -179,36 +225,52 @@ def run_pipeline(
         target = (existing or {}).get(name)
         final[name] = merge_upsert(target, incoming, DEDUPE_KEYS[name])
 
-    if target_dir:
-        # Stage-and-swap: on an incremental run, `existing` tables were
-        # read from these very paths, and Spark rejects overwriting a
-        # path its own plan is reading ("Cannot overwrite a path that is
-        # also being read from"). Write beside, then swap directories.
-        import shutil
+    reject_details = partial(write_rejects, details_bad, rejects_dir, "order_details")
+    if not target_dir:
+        # Wave 3 without a target: the details rejects and the counts.
+        reject_counts["order_details"], *n_final = _concurrently(
+            spark, reject_details, *(df.count for df in final.values())
+        )
+        counts = dict(zip(final, n_final))
+        return PipelineResult(tables=final, reject_counts=reject_counts, counts=counts)
 
-        # Crash recovery BEFORE writing (see recover_interrupted_swap):
-        # an interrupted swap never silently loses a table. Callers
-        # restarting an incremental run should call it themselves before
-        # reading prior state.
-        recover_interrupted_swap(target_dir)
-        counts = {}
-        for name, df in final.items():
-            dst = os.path.join(target_dir, name)
-            stage = dst + ".__stage__"
-            shutil.rmtree(stage, ignore_errors=True)
-            df, rows = observe_rows(df)
-            df.write.mode("overwrite").parquet(stage)
-            counts[name] = rows.get["rows"]
-            old = dst + ".__old__"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(dst):
-                os.rename(dst, old)
-            os.rename(stage, dst)
-            shutil.rmtree(old, ignore_errors=True)
-        final = {
-            name: spark.read.parquet(os.path.join(target_dir, name))
-            for name in final
-        }
-    else:
-        counts = {name: df.count() for name, df in final.items()}
-    return PipelineResult(tables=final, reject_counts=reject_counts, counts=counts)
+    # Stage-and-swap: on an incremental run, `existing` tables were read
+    # from these very paths, and Spark rejects overwriting a path its own
+    # plan is reading ("Cannot overwrite a path that is also being read
+    # from"). Write beside, then swap directories.
+    #
+    # Crash recovery BEFORE writing (see recover_interrupted_swap): an
+    # interrupted swap never silently loses a table. Callers restarting an
+    # incremental run should call it themselves before reading prior state.
+    recover_interrupted_swap(target_dir)
+    paths = {name: os.path.join(target_dir, name) for name in final}
+
+    def stage(name: str) -> int:
+        out = paths[name] + ".__stage__"
+        shutil.rmtree(out, ignore_errors=True)
+        df, rows = observe_rows(final[name])
+        df.write.mode("overwrite").parquet(out)
+        return rows.get["rows"]
+
+    # Wave 3: the details rejects and every staged write. A failure swaps
+    # nothing and drops every stage, so no later recovery promotes one.
+    try:
+        reject_counts["order_details"], *n_final = _concurrently(
+            spark, reject_details, *(partial(stage, name) for name in final)
+        )
+    except BaseException:
+        for dst in paths.values():
+            shutil.rmtree(dst + ".__stage__", ignore_errors=True)
+        raise
+    for dst in paths.values():
+        old = dst + ".__old__"
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(dst):
+            os.rename(dst, old)
+        os.rename(dst + ".__stage__", dst)
+        shutil.rmtree(old, ignore_errors=True)
+    counts = dict(zip(final, n_final))
+    # Each read infers its schema in a job of its own.
+    reads = (partial(spark.read.parquet, dst) for dst in paths.values())
+    tables = dict(zip(paths, _concurrently(spark, *reads)))
+    return PipelineResult(tables=tables, reject_counts=reject_counts, counts=counts)

@@ -266,3 +266,104 @@ def test_load_and_incremental_batch_job_count(spark, data_dir, tmp_path):
     assert r2.counts == r1.counts
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= 68, jobs
+
+
+def test_failed_write_swaps_no_table(spark, data_dir, tmp_path, monkeypatch):
+    """A batch whose staged write fails for one table swaps no table:
+    all four keep the previous run's rows, no ``.__stage__`` directory is
+    promoted, and a re-run over the same target succeeds. Swapping each
+    table right after its own write left the tables written before the
+    failure swapped and the rest stale."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = str(tmp_path / "warehouse")
+    r1 = run_pipeline(
+        spark, data_dir, rejects_dir=str(tmp_path / "rej1"), target_dir=t
+    )
+    tables = list(r1.tables)
+
+    def rows():  # by column name: a merge may reorder a table's columns
+        return {
+            name: {
+                tuple(sorted(r.asDict().items()))
+                for r in spark.read.parquet(os.path.join(t, name)).collect()
+            }
+            for name in tables
+        }
+
+    before = rows()
+
+    # a batch that changes every table: new customer, product, order, line
+    batch = tmp_path / "batch"
+    batch.mkdir()
+    for name, content, extra in [
+        ("customers", CUSTOMERS, "4,Edsger,Dijkstra,e@x.io,555-5,Austin,US\n"),
+        ("products", PRODUCTS, "10,Gizmo,Parts,4.25\n"),
+        ("orders", ORDERS, "104,4,2024-01-06,Pending\n"),
+        ("order_details", ORDER_DETAILS, "104,10,3,12.75\n"),
+    ]:
+        (batch / f"{name}.csv").write_text(content + extra)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if os.path.basename(path) == "orders.__stage__":
+            raise OSError("injected write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(OSError, match="injected write failure"):
+        run_pipeline(
+            spark,
+            str(batch),
+            rejects_dir=str(tmp_path / "rej2"),
+            target_dir=t,
+            existing=r1.tables,
+        )
+    monkeypatch.undo()
+
+    assert sorted(os.listdir(t)) == sorted(tables)  # no stage, no .__old__
+    assert rows() == before
+
+    r2 = run_pipeline(
+        spark,
+        data_dir,
+        rejects_dir=str(tmp_path / "rej3"),
+        target_dir=t,
+        existing=r1.tables,
+    )
+    assert r2.counts == r1.counts
+    assert rows() == before
+
+
+def test_pipeline_jobs_stay_in_caller_job_group(spark, data_dir, tmp_path):
+    """Every job of a load plus one batch runs in the caller's job group,
+    also the jobs ``run_pipeline`` launches from worker threads. Job groups
+    are thread-local: a worker that lost the group would run jobs with no
+    group, and the count ``test_load_and_incremental_batch_job_count``
+    bounds would drop without any job saved."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"etl-job-group-{tmp_path.name}"
+    t = str(tmp_path / "warehouse")
+    sc.setJobGroup(group, "run_pipeline load + batch")
+    try:
+        r1 = run_pipeline(
+            spark, data_dir, rejects_dir=str(tmp_path / "rej1"), target_dir=t
+        )
+        run_pipeline(
+            spark,
+            data_dir,
+            rejects_dir=str(tmp_path / "rej2"),
+            target_dir=t,
+            existing=r1.tables,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(tracker.getJobIdsForGroup(group)) > 0

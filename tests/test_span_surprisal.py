@@ -105,7 +105,7 @@ class TestUnigramSurprisal:
 # ---------------------------------------------------------------------------
 # Property-based: distributed results == single-node brute force
 # ---------------------------------------------------------------------------
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 # tiny alphabet + short docs → plenty of genuine cross-doc window overlap
@@ -154,10 +154,25 @@ def test_duplicate_spans_matches_brute_force(spark, texts):
     assert got == _brute_dup_spans(texts, n)
 
 
-@given(_corpus)
+# Doc 2's mean is exactly 1.73745, a 4-dp midpoint: the floor rule gives
+# 1.7375, while a float sum rounded with Python's round() gives 1.7374.
+@example(
+    texts=[
+        "a a a b b b b b b b",
+        "b b b b b b b b c c",
+        "a c c",
+        "c c c c c c c c c c",
+        "c c c c c c",
+    ]
+)
+@given(texts=_corpus)
 @_SETTINGS
 def test_surprisal_matches_brute_force(spark, texts):
+    """Per-term bits rounded to 6 dp, summed exactly as DECIMAL(18,6),
+    then ``FLOOR(sum / n * 10^4 + 0.5) / 10^4`` in doubles — the rule
+    ``unigram_surprisal`` documents."""
     import collections
+    from decimal import Decimal
 
     df = _docs(spark, list(enumerate(texts))).repartition(3)
     got = {
@@ -170,13 +185,17 @@ def test_surprisal_matches_brute_force(spark, texts):
     }
     ctf = collections.Counter(w for ws in toks.values() for w in ws)
     total = sum(ctf.values())
+    bits = {
+        w: Decimal(str(round(math.log2(total) - math.log2(ctf[w]), 6)))
+        for w in ctf
+    }
     want = {}
     for i, ws in toks.items():
         if not ws:
             continue
-        bits = {w: round(math.log2(total) - math.log2(ctf[w]), 6) for w in ctf}
         s = sum(bits[w] for w in ws)
-        want[i] = (len(ws), round(s / len(ws), 4))
+        mean = math.floor(float(s) / len(ws) * 10000.0 + 0.5) / 10000.0
+        want[i] = (len(ws), mean)
     assert got == want
 
 
