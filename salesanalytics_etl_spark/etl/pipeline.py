@@ -33,6 +33,13 @@ a failed batch swaps no table and leaves no stage behind. The swapped
 tables are re-read concurrently too (each read infers its schema in a
 job).
 
+The swap is ``sources.writers.swap_in``, the same one
+``merge_upsert_table`` and the reject sink use, and a crash mid-swap is
+repaired by its one rule (``restore_swap``, run over ``target_dir`` by
+``recover_interrupted_swap`` before any write): a missing table gets its
+complete stage, else its aside copy back; an incomplete stage is never
+promoted.
+
 Only this driver materializes: ``fk_split*`` and ``merge_upsert`` stay
 lazy because queries compose them into their own plans. Catalyst pushes
 the null-key filters into the scan, the dedupe is the only wide op per
@@ -66,7 +73,14 @@ from salesanalytics_etl_spark.schemas import (
     REFERENCE_SCHEMAS,
 )
 from salesanalytics_etl_spark.sources.readers import read_csv_exact
-from salesanalytics_etl_spark.sources.writers import observe_rows, write_rejects
+from salesanalytics_etl_spark.sources.writers import (
+    ASIDE,
+    STAGE,
+    observe_rows,
+    restore_swap,
+    swap_in,
+    write_rejects,
+)
 
 
 @dataclass
@@ -84,10 +98,9 @@ def clean_table(raw: DataFrame, name: str) -> DataFrame:
 
 
 def recover_interrupted_swap(target_dir: str) -> list[str]:
-    """Restore table directories left invisible by a crash mid
-    stage-and-swap (between ``rename(dst, old)`` and
-    ``rename(stage, dst)``): prefer a COMPLETE staged copy (newer, has
-    ``_SUCCESS``), else roll the ``.__old__`` snapshot back.
+    """Run :func:`restore_swap` on every table of ``target_dir`` that has
+    a stage or aside copy beside it, so a crash mid-swap never leaves a
+    table invisible.
 
     Public and idempotent — a caller restarting an incremental run must
     invoke this (or ``run_pipeline`` with the same ``target_dir``, which
@@ -96,28 +109,15 @@ def recover_interrupted_swap(target_dir: str) -> list[str]:
     whose ``spark.read.parquet`` of the missing table path fails first.
     Returns the table names restored.
     """
-    restored: list[str] = []
     if not os.path.isdir(target_dir):
-        return restored
-    bases = set()
-    for entry in os.listdir(target_dir):
-        for suffix in (".__old__", ".__stage__"):
-            if entry.endswith(suffix):
-                bases.add(entry[: -len(suffix)])
-    for base in sorted(bases):
-        dst = os.path.join(target_dir, base)
-        if os.path.exists(dst):
-            continue  # swap completed; leftovers are cleaned on next write
-        stage = dst + ".__stage__"
-        old = dst + ".__old__"
-        if os.path.exists(os.path.join(stage, "_SUCCESS")):
-            os.rename(stage, dst)  # staged copy is complete and newer
-        elif os.path.exists(old):
-            os.rename(old, dst)  # roll back to the pre-swap snapshot
-        else:
-            continue  # partial stage of a first-ever write: nothing to save
-        restored.append(base)
-    return restored
+        return []
+    bases = {
+        entry[: -len(suffix)]
+        for entry in os.listdir(target_dir)
+        for suffix in (STAGE, ASIDE)
+        if entry.endswith(suffix)
+    }
+    return [b for b in sorted(bases) if restore_swap(os.path.join(target_dir, b))]
 
 
 def _concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list[Any]:
@@ -246,7 +246,7 @@ def run_pipeline(
     paths = {name: os.path.join(target_dir, name) for name in final}
 
     def stage(name: str) -> int:
-        out = paths[name] + ".__stage__"
+        out = paths[name] + STAGE
         shutil.rmtree(out, ignore_errors=True)
         df, rows = observe_rows(final[name])
         df.write.mode("overwrite").parquet(out)
@@ -260,15 +260,10 @@ def run_pipeline(
         )
     except BaseException:
         for dst in paths.values():
-            shutil.rmtree(dst + ".__stage__", ignore_errors=True)
+            shutil.rmtree(dst + STAGE, ignore_errors=True)
         raise
     for dst in paths.values():
-        old = dst + ".__old__"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        os.rename(dst + ".__stage__", dst)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_in(dst)
     counts = dict(zip(final, n_final))
     # Each read infers its schema in a job of its own.
     reads = (partial(spark.read.parquet, dst) for dst in paths.values())

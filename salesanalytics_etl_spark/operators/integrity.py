@@ -29,9 +29,10 @@ def fk_split(
     """
     pk = parent_key or child_key
     keys = parent.select(F.col(pk).alias(child_key)).distinct()
+    # restore the child's column order (a USING join floats its key first)
     keep = child.join(F.broadcast(keys), on=child_key, how="left_semi")
     reject = child.join(F.broadcast(keys), on=child_key, how="left_anti")
-    return keep, reject
+    return keep.select(*child.columns), reject.select(*child.columns)
 
 
 def fk_split_composite(

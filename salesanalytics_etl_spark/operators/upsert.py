@@ -16,6 +16,14 @@ risk 5: O(|target|) rewrite per batch).
 Scale: the anti-join shuffles target+incoming on the key unless the incoming
 batch is small enough to broadcast — typical for incremental loads; AQE
 picks the join strategy at runtime.
+
+Durability: :func:`merge_upsert_table` replaces a whole table with the one
+directory swap of ``sources.writers`` (``swap_in``: stage
+``<path>.__swap_staging__``, aside copy ``<path>.__swap_old__``) and
+repairs a crashed swap with its one rule (``restore_swap``: a missing
+table gets its complete stage, else its aside copy back; an incomplete
+stage is never promoted). The partition-scoped writers stage into the
+same ``.__swap_staging__`` path and dynamic-partition-overwrite from it.
 """
 
 from __future__ import annotations
@@ -26,6 +34,13 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from salesanalytics_etl_spark.sources.writers import (
+    ASIDE,
+    STAGE,
+    restore_swap,
+    swap_in,
+)
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -217,78 +232,46 @@ def break_stale_lock(path: str, min_age_seconds: float = 3600.0) -> bool:
     return True
 
 
-def _recover_swap_old(path: str) -> None:
-    """Repair a crashed directory swap. MUST be called under the lock.
-
-    :func:`merge_upsert_table`'s whole-table path swaps directories with
-    two renames: ``path -> path.__swap_old__`` then ``staging -> path``.
-    A crash between them leaves ``path`` MISSING and the live table
-    stranded in ``.__swap_old__`` — the next merge would otherwise take
-    the first-load branch and silently replace the table with just the
-    incoming batch. A crash after the second rename (before the rmtree)
-    leaves an obsolete ``.__swap_old__`` beside a healthy table, which
-    would make the next swap's ``os.rename(path, old)`` raise.
-
-    Recovery is unambiguous in both states: restore the old dir when the
-    table is missing (it IS the table), remove it when the table exists
-    (the swap completed; old is superseded).
-    """
-    import shutil
-
-    old = path.rstrip("/") + ".__swap_old__"
-    if not os.path.exists(old):
-        return
-    if os.path.exists(path):
-        shutil.rmtree(old)  # swap completed; old state is superseded
-    else:
-        os.rename(old, path)  # swap half-done; old state IS the table
-
-
 def vacuum_stale_staging(path: str, min_age_seconds: float = 3600.0) -> bool:
-    """Remove a crashed merge's leftover staging or swap-old directory.
+    """Repair a crashed swap at ``path`` and remove a crashed merge's
+    leftover stage.
 
-    :func:`_stage_and_swap` removes its ``<path>.__swap_staging__`` in a
-    ``finally:``, but a hard crash (OOM kill, node loss) between the
-    staging write and the cleanup leaves it on disk — dead weight that
-    can double a table's footprint and, left unmonitored, fills the
-    volume. Safe to run from a janitor job at any time:
+    A hard crash (OOM kill, node loss) inside :func:`merge_upsert_table`'s
+    swap, or between :func:`_stage_and_swap`'s staging write and its
+    cleanup, leaves the stage ``<path>.__swap_staging__`` and/or the aside
+    copy ``<path>.__swap_old__`` on disk — dead weight that can double a
+    table's footprint, or the only copy of a table whose directory is
+    missing. Safe to run from a janitor job at any time:
 
-    - the ``.__swap_old__`` repair (:func:`_recover_swap_old`) runs
-      under the lock UNCONDITIONALLY — it is correctness-bearing and
-      unambiguous at any age, and the canonical crash-between-renames
-      state leaves a FRESH staging dir beside ``.__swap_old__`` with the
-      table missing (r12 ADVICE: an age gate here declined to restore
-      the table for up to an hour);
-    - the staging ``rmtree`` alone is age-gated: it refuses while the
-      NEWEST file under the staging dir is younger than
-      ``min_age_seconds``, because with the advisory lock STOLEN from a
-      dead pid a fresh staging could still belong to a cross-host writer
-      the host-local liveness check cannot see (each written file
-      refreshes recency);
+    - the swap repair (``restore_swap``) runs under the lock
+      UNCONDITIONALLY — it is correctness-bearing at any age: a missing
+      table gets its complete stage (``_SUCCESS``) or else its aside copy
+      back, and beside a present table the aside copy is dropped;
+    - the stage ``rmtree`` alone is age-gated: it refuses while the
+      NEWEST file under the stage is younger than ``min_age_seconds``,
+      because with the advisory lock STOLEN from a dead pid a fresh stage
+      could still belong to a cross-host writer the host-local liveness
+      check cannot see (each written file refreshes recency);
     - the whole body holds the table's single-writer lock, so it can
-      never race a merge that is between its staging write and its
-      dynamic overwrite (that merge holds the lock the whole time); if a
-      LIVE writer holds the lock this returns False — the running merge
-      removes its own staging and there is no crash state to repair.
+      never race a merge that is between its staging write and its swap
+      (that merge holds the lock the whole time); if a LIVE writer holds
+      the lock this returns False — the running merge removes its own
+      stage and there is no crash state to repair.
 
-    Returns True when anything was reclaimed or repaired. The staging
-    half is disk hygiene, not correctness — the next merge's staging
-    write is ``mode("overwrite")`` either way. The ``.__swap_old__``
-    half IS correctness-bearing: a stranded old dir with the table
-    missing is renamed back (it is the table); with the table present
-    it is removed (the swap completed).
+    Returns True when anything was reclaimed or repaired.
     """
     import shutil
 
-    staging = path.rstrip("/") + ".__swap_staging__"
-    had_old = os.path.exists(path.rstrip("/") + ".__swap_old__")
+    path = path.rstrip("/")
+    staging = path + STAGE
+    had_old = os.path.exists(path + ASIDE)
     if not os.path.exists(staging) and not had_old:
         return False
     try:
         with single_writer_lock(path, owner="vacuum_stale_staging"):
-            _recover_swap_old(path)
+            repaired = restore_swap(path) or had_old
             if not os.path.exists(staging):
-                return had_old  # swap-old handled; no staging to reclaim
+                return repaired  # stage promoted, or none to reclaim
             newest = os.path.getmtime(staging)
             for dp, _, fs in os.walk(staging):
                 for f in fs:
@@ -300,7 +283,7 @@ def vacuum_stale_staging(path: str, min_age_seconds: float = 3600.0) -> bool:
                         pass  # file vanished mid-walk — a live writer;
                         # recency is refreshed by its remaining siblings
             if time.time() - newest < min_age_seconds:
-                return had_old  # staging too fresh to reclaim safely
+                return repaired  # stage too fresh to reclaim safely
             shutil.rmtree(staging, ignore_errors=True)
             return True
     except ConcurrentWriterError:
@@ -470,20 +453,17 @@ def _stage_and_swap(
     """
     import shutil
 
-    staging = path.rstrip("/") + ".__swap_staging__"
+    staging = path.rstrip("/") + STAGE
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
     try:
         (
             spark.read.schema(read_schema).parquet(staging)
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
             .parquet(path)
         )
     finally:
-        spark.conf.set(key, prev)
         shutil.rmtree(staging, ignore_errors=True)
 
 
@@ -703,111 +683,33 @@ def scd2_apply(
     )
 
 
-
-
-# ---------------------------------------------------------------------------
-# Table-format seam: route a MERGE to the right writer
-# ---------------------------------------------------------------------------
-
-
-def delta_available() -> bool:
-    """True when delta-spark is importable in this environment."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def merge_upsert_delta(spark, path: str, incoming: DataFrame, keys: list[str]) -> None:
-    """MERGE ``incoming`` into the Delta table at ``path`` via
-    ``DeltaTable.merge`` — the transaction-log backend the parquet
-    writers document as the production route for MULTI-WRITER tables
-    (the advisory-lock parquet MERGE is single-writer by contract).
-
-    Semantics mirror :func:`merge_upsert` exactly: matched keys update
-    ALL non-key columns, unmatched insert (the reference's T-SQL MERGE,
-    etl_sales_analytics.py:223-283). Concurrency is delegated to Delta's
-    optimistic log protocol — concurrent writers retry/fail per the log,
-    no filesystem lock needed. Raises ImportError when delta-spark is
-    absent (this container does not ship it; the seam exists so the
-    backend lands the moment the dependency appears).
-    """
-    try:
-        from delta.tables import DeltaTable
-    except ImportError as ex:
-        raise ImportError(
-            "merge_upsert_delta needs delta-spark on the classpath; "
-            "install delta-spark and configure the SparkSession with "
-            "spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension"
-        ) from ex
-    if not DeltaTable.isDeltaTable(spark, path):
-        incoming.write.format("delta").save(path)  # first load
-        return
-    target = DeltaTable.forPath(spark, path)
-    cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-    (
-        target.alias("t")
-        .merge(incoming.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-
-
 def merge_upsert_table(
     spark,
     path: str,
     incoming: DataFrame,
     keys: list[str],
     partition_by: list[str] | None = None,
-    table_format: str = "parquet",
 ) -> None:
-    """Writer-selection seam: one MERGE entry point, backend by format.
-
-    - ``parquet`` (default, no extra dependency): the advisory-locked
-      single-writer path — partition-scoped rewrite when
-      ``partition_by`` is given, else whole-table anti-join + stage-and-
-      swap. Correct, but concurrent writers are REJECTED loudly.
-    - ``delta``: :func:`merge_upsert_delta` — file-level MERGE through
-      the Delta transaction log, safe for concurrent writers and object
-      stores. Requires delta-spark.
-
-    Callers select the backend once (config/env), not per call site —
-    swapping a deployment to Delta is this one argument.
+    """MERGE ``incoming`` into the parquet table at ``path`` under the
+    advisory single-writer lock (concurrent writers are REJECTED loudly):
+    a partition-scoped rewrite when ``partition_by`` is given, else a
+    whole-table anti-join whose result is swapped in with ``swap_in``.
     """
-    if table_format == "delta":
-        merge_upsert_delta(spark, path, incoming, keys)
-        return
-    if table_format != "parquet":
-        raise ValueError(
-            f"merge_upsert_table: unknown table_format {table_format!r} "
-            "(expected 'parquet' or 'delta')"
-        )
     if partition_by:
         merge_upsert_partitioned(spark, path, incoming, keys, partition_by)
         return
+    path = path.rstrip("/")
     with single_writer_lock(path, owner="merge_upsert_table"):
-        # A crash between the two renames below leaves the table
-        # stranded in .__swap_old__ with `path` missing; repair BEFORE
-        # the first-load existence check or that state would be
-        # mistaken for an empty table and replaced by the batch alone.
-        _recover_swap_old(path)
+        # Repair a crashed swap BEFORE the first-load existence check, or
+        # a table stranded in its aside copy would read as missing and be
+        # replaced by the batch alone.
+        restore_swap(path)
         if not os.path.exists(path):
             incoming.write.parquet(path)
             return
         target = spark.read.schema(incoming.schema).parquet(path)
         merged = merge_upsert(target, incoming, keys)
-        # Spark cannot overwrite a path it is reading: stage the merged
-        # state beside the table, then swap directories. The swap window
-        # is covered by the writer lock; a crash leaves the old table,
-        # the staged dir, or a half-swapped .__swap_old__ — all three
-        # reclaimed by vacuum_stale_staging / _recover_swap_old.
-        import shutil
-
-        staging = path.rstrip("/") + ".__swap_staging__"
-        merged.write.mode("overwrite").parquet(staging)
-        old = path.rstrip("/") + ".__swap_old__"
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old)
+        # Spark cannot overwrite a path it is reading: write the merged
+        # state to the stage, then swap directories.
+        merged.write.mode("overwrite").parquet(path + STAGE)
+        swap_in(path)

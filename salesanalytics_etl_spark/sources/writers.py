@@ -6,6 +6,18 @@
 - ``write_table`` — parquet table writer, the Spark-native replacement for
   the reference's staging+MERGE machinery (the upsert itself lives in
   operators/upsert.py).
+- ``swap_in`` / ``restore_swap`` — the one directory swap behind every
+  whole-directory replace (the ETL's tables, ``merge_upsert_table``, the
+  reject sink). Spark cannot overwrite a path its plan reads, so the new
+  state is written to the stage ``<dst>.__swap_staging__`` and renamed
+  into place; the previous ``dst`` waits in the aside copy
+  ``<dst>.__swap_old__`` between the two renames. Recovery rule
+  (``restore_swap``): with ``dst`` missing, a stage holding ``_SUCCESS``
+  is promoted, else the aside copy is restored; with ``dst`` present, a
+  leftover aside copy is dropped; an incomplete stage is never touched.
+  (``streaming/agg_maintenance.py`` keeps its own ``.compact``/``.old``
+  log swap: its reads run beside a live compactor, so its read-side
+  recovery only restores and never deletes or promotes a ``.compact``.)
 """
 
 from __future__ import annotations
@@ -15,6 +27,9 @@ import shutil
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+STAGE = ".__swap_staging__"
+ASIDE = ".__swap_old__"
 
 
 def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -31,23 +46,57 @@ def write_rejects(df: DataFrame, rejects_dir: str, name: str) -> int:
 
     Returns the reject count. Writes only when non-empty, mirroring the
     reference's ``if not bad.empty`` guard (etl_sales_analytics.py:195,204).
-    ``df`` is evaluated exactly once: one CSV write to
-    ``rejects_dir/name.__stage__`` whose row count an ``Observation``
-    collects. A non-empty stage then replaces ``rejects_dir/name``; an
-    empty one is deleted and leaves any earlier ``rejects_dir/name`` as
-    it was.
+    ``df`` is evaluated exactly once: one CSV write to the stage of
+    ``rejects_dir/name`` whose row count an ``Observation`` collects. A
+    non-empty stage is then swapped in (:func:`swap_in`); an empty one is
+    deleted and leaves any earlier ``rejects_dir/name`` as it was.
     """
     out = os.path.join(rejects_dir, name)
-    stage = out + ".__stage__"
     df, rows = observe_rows(df)
-    df.write.mode("overwrite").option("header", True).csv(stage)
+    df.write.mode("overwrite").option("header", True).csv(out + STAGE)
     n = rows.get["rows"]
     if n > 0:
-        shutil.rmtree(out, ignore_errors=True)
-        os.rename(stage, out)
+        swap_in(out)
     else:
-        shutil.rmtree(stage)
+        shutil.rmtree(out + STAGE)
     return n
+
+
+def swap_in(dst: str) -> None:
+    """Replace ``dst`` with its complete stage ``dst + STAGE``: rename
+    ``dst`` aside, rename the stage to ``dst``, drop the aside copy (a
+    leftover one is dropped first: the stage supersedes it). A crash
+    between the renames leaves ``dst`` missing beside the aside copy and
+    the complete stage; :func:`restore_swap` repairs it.
+    """
+    aside = dst + ASIDE
+    shutil.rmtree(aside, ignore_errors=True)
+    if os.path.exists(dst):
+        os.rename(dst, aside)
+    os.rename(dst + STAGE, dst)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def restore_swap(dst: str) -> bool:
+    """Repair what a crashed :func:`swap_in` left at ``dst``. With ``dst``
+    missing, a stage holding ``_SUCCESS`` is promoted (it is the newer,
+    complete state), else the aside copy is restored; with ``dst``
+    present, a leftover aside copy is dropped. An incomplete stage is
+    never touched. Idempotent; returns True when ``dst`` was missing and
+    is back.
+    """
+    stage, aside = dst + STAGE, dst + ASIDE
+    restored = False
+    if not os.path.exists(dst):
+        if os.path.exists(os.path.join(stage, "_SUCCESS")):
+            os.rename(stage, dst)
+            restored = True
+        elif os.path.exists(aside):
+            os.rename(aside, dst)
+            restored = True
+    if os.path.exists(dst):
+        shutil.rmtree(aside, ignore_errors=True)
+    return restored
 
 
 def write_table(
@@ -94,13 +143,11 @@ def backfill_partitions(
     Static overwrite would drop every other partition of the table; the
     dynamic mode rewrites just the touched dates, so a late-data
     reprocess of one day never disturbs the rest of a 100 TB table. The
-    session config is set per-write and restored (it's a global knob).
+    mode is a write option, so the session conf is never touched.
     """
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )

@@ -152,7 +152,7 @@ def test_incremental_run_over_same_target_dir(spark, data_dir, tmp_path):
         existing=r1.tables,
     )
     assert r2.counts == r1.counts  # idempotent over the same input
-    assert not any(d.endswith("__stage__") for d in os.listdir(t))
+    assert not any(d.endswith("__swap_staging__") for d in os.listdir(t))
 
 
 def test_details_rejected_when_all_orders_fail_fk(spark, tmp_path):
@@ -179,9 +179,40 @@ def test_details_rejected_when_all_orders_fail_fk(spark, tmp_path):
     assert r.reject_counts["order_details"] == 1
 
 
+def test_orders_keep_declared_column_order(spark, data_dir, tmp_path):
+    """A first load and an incremental batch into one target both write
+    ``orders`` in its declared column order, and so does the orders
+    rejects CSV header. The FK split's join must not float its key
+    (CustomerID) to the front."""
+    import glob
+
+    from salesanalytics_etl_spark.schemas import REFERENCE_SCHEMAS
+
+    want = REFERENCE_SCHEMAS["orders"].fieldNames()
+    t = str(tmp_path / "warehouse")
+    existing = None
+    for run in ("load", "batch"):
+        rejects = tmp_path / f"rej-{run}"
+        r = run_pipeline(
+            spark,
+            data_dir,
+            rejects_dir=str(rejects),
+            target_dir=t,
+            existing=existing,
+        )
+        assert r.reject_counts["orders"] > 0
+        assert spark.read.parquet(os.path.join(t, "orders")).columns == want
+        parts = glob.glob(str(rejects / "orders" / "part-*.csv"))
+        assert parts
+        for part in parts:
+            with open(part) as f:
+                assert f.readline().rstrip("\n") == ",".join(want)
+        existing = r.tables
+
+
 def test_recover_interrupted_swap_rolls_back_old(spark, data_dir, tmp_path):
     """Crash window between rename(dst, old) and rename(stage, dst):
-    the table path is missing and the snapshot is stranded in .__old__ —
+    the table path is missing and the snapshot is stranded in .__swap_old__ —
     recovery must roll it back (no staged copy to prefer)."""
     import shutil
 
@@ -195,17 +226,17 @@ def test_recover_interrupted_swap_rolls_back_old(spark, data_dir, tmp_path):
         spark, data_dir, rejects_dir=str(tmp_path / "rej"), target_dir=t
     )
     dst = os.path.join(t, "customers")
-    os.rename(dst, dst + ".__old__")  # simulate the crash
+    os.rename(dst, dst + ".__swap_old__")  # simulate the crash
     assert recover_interrupted_swap(t) == ["customers"]
     assert spark.read.parquet(dst).count() == r1.counts["customers"]
     # idempotent: nothing left to restore
     assert recover_interrupted_swap(t) == []
 
     # crash window with a COMPLETE staged copy: recovery must prefer it
-    # (it is the newer state) over the .__old__ snapshot
-    stage = dst + ".__stage__"
+    # (it is the newer state) over the .__swap_old__ snapshot
+    stage = dst + ".__swap_staging__"
     shutil.copytree(dst, stage)
-    os.rename(dst, dst + ".__old__")
+    os.rename(dst, dst + ".__swap_old__")
     assert recover_interrupted_swap(t) == ["customers"]
     assert os.path.exists(dst) and not os.path.exists(stage)
     assert spark.read.parquet(dst).count() == r1.counts["customers"]
@@ -226,13 +257,13 @@ def test_recover_interrupted_swap_rolls_back_old(spark, data_dir, tmp_path):
 
 
 def test_recover_interrupted_swap_ignores_partial_first_write(tmp_path):
-    """A first-ever write that crashed mid-stage (no dst, no .__old__,
+    """A first-ever write that crashed mid-stage (no dst, no .__swap_old__,
     stage without _SUCCESS) has nothing to restore — recovery must not
     promote the incomplete directory."""
     from salesanalytics_etl_spark.etl.pipeline import recover_interrupted_swap
 
     t = tmp_path / "warehouse"
-    stage = t / "orders.__stage__"
+    stage = t / "orders.__swap_staging__"
     stage.mkdir(parents=True)
     (stage / "part-00000.parquet").write_bytes(b"partial")
     assert recover_interrupted_swap(str(t)) == []
@@ -270,7 +301,7 @@ def test_load_and_incremental_batch_job_count(spark, data_dir, tmp_path):
 
 def test_failed_write_swaps_no_table(spark, data_dir, tmp_path, monkeypatch):
     """A batch whose staged write fails for one table swaps no table:
-    all four keep the previous run's rows, no ``.__stage__`` directory is
+    all four keep the previous run's rows, no ``.__swap_staging__`` directory is
     promoted, and a re-run over the same target succeeds. Swapping each
     table right after its own write left the tables written before the
     failure swapped and the rest stale."""
@@ -307,7 +338,7 @@ def test_failed_write_swaps_no_table(spark, data_dir, tmp_path, monkeypatch):
     real_parquet = DataFrameWriter.parquet
 
     def parquet(self, path, *args, **kwargs):
-        if os.path.basename(path) == "orders.__stage__":
+        if os.path.basename(path) == "orders.__swap_staging__":
             raise OSError("injected write failure")
         return real_parquet(self, path, *args, **kwargs)
 
@@ -322,7 +353,7 @@ def test_failed_write_swaps_no_table(spark, data_dir, tmp_path, monkeypatch):
         )
     monkeypatch.undo()
 
-    assert sorted(os.listdir(t)) == sorted(tables)  # no stage, no .__old__
+    assert sorted(os.listdir(t)) == sorted(tables)  # no stage, no .__swap_old__
     assert rows() == before
 
     r2 = run_pipeline(

@@ -1,19 +1,10 @@
-"""Writer-selection seam (r10 verdict item 7): the parquet MERGE is
-single-writer by contract; the Delta backend exists as code behind an
-import gate so a deployment with delta-spark gets transaction-log
-multi-writer MERGE by flipping one argument. The Delta test itself is
-skipped in this container (no delta-spark) but pins the exact semantics
-the backend must satisfy the moment the dependency appears."""
+"""The locked parquet MERGE writer (``merge_upsert_table``): whole-table
+and partition-scoped merges, and crash recovery around its directory
+swap (the one swap of ``sources.writers``)."""
 
 from __future__ import annotations
 
-import pytest
-
-from salesanalytics_etl_spark.operators.upsert import (
-    delta_available,
-    merge_upsert_delta,
-    merge_upsert_table,
-)
+from salesanalytics_etl_spark.operators.upsert import merge_upsert_table
 
 
 def _rows(spark, path):
@@ -117,46 +108,30 @@ def test_vacuum_reclaims_swap_old_both_states(spark, tmp_path):
     assert _rows(spark, path) == [(1, "a", 1.0)]
 
 
-def test_unknown_format_raises(spark, tmp_path):
-    df = spark.createDataFrame([(1,)], "k INT")
-    with pytest.raises(ValueError, match="unknown table_format"):
-        merge_upsert_table(spark, str(tmp_path / "t3"), df, ["k"],
-                           table_format="iceberg")
+def test_vacuum_promotes_complete_stage_over_aside_copy(spark, tmp_path):
+    """One recovery rule for every swap: a merge that crashed between the
+    swap's renames leaves the table missing, the pre-merge rows in the
+    aside copy and the merged rows in a complete (``_SUCCESS``) stage.
+    Like the ETL's recovery, the janitor must promote the stage, not roll
+    back to the pre-merge rows."""
+    import os
 
+    from salesanalytics_etl_spark.operators.upsert import vacuum_stale_staging
 
-def test_delta_backend_absent_is_loud(spark, tmp_path):
-    if delta_available():
-        pytest.skip("delta-spark present; the loud-ImportError path is moot")
-    df = spark.createDataFrame([(1,)], "k INT")
-    with pytest.raises(ImportError, match="delta-spark"):
-        merge_upsert_table(spark, str(tmp_path / "t4"), df, ["k"],
-                           table_format="delta")
-
-
-@pytest.mark.skipif(not delta_available(), reason="delta-spark not installed")
-def test_delta_backend_merge_semantics(spark, tmp_path):
-    """merge_upsert through DeltaTable.merge: matched keys update ALL
-    non-key columns, unmatched insert, re-run is a fixpoint — the exact
-    contract of the parquet path."""
-    path = str(tmp_path / "t5")
+    path = str(tmp_path / "t_promote")
     base = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)], "k INT, s STRING, v DOUBLE"
     )
-    merge_upsert_delta(spark, path, base, ["k"])
-    batch = spark.createDataFrame(
-        [(2, "B", 20.0), (3, "c", 3.0)], "k INT, s STRING, v DOUBLE"
+    merge_upsert_table(spark, path, base, ["k"])
+    merged = [(1, "a", 1.0), (2, "B", 20.0), (3, "c", 3.0)]
+    spark.createDataFrame(merged, "k INT, s STRING, v DOUBLE").write.parquet(
+        path + ".__swap_staging__"
     )
-    merge_upsert_delta(spark, path, batch, ["k"])
-    got = sorted(
-        (r.k, r.s, r.v)
-        for r in spark.read.format("delta").load(path).collect()
-    )
-    assert got == [(1, "a", 1.0), (2, "B", 20.0), (3, "c", 3.0)]
-    merge_upsert_delta(spark, path, batch, ["k"])  # fixpoint
-    assert got == sorted(
-        (r.k, r.s, r.v)
-        for r in spark.read.format("delta").load(path).collect()
-    )
+    os.rename(path, path + ".__swap_old__")
+    assert vacuum_stale_staging(path) is True
+    assert _rows(spark, path) == merged
+    assert not os.path.exists(path + ".__swap_old__")
+    assert not os.path.exists(path + ".__swap_staging__")
 
 
 def test_crash_injected_mid_swap_then_next_merge_recovers(

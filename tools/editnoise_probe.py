@@ -18,7 +18,10 @@ near-duplicates with pairwise shingle Jaccard ~0.6-0.9 — and measures:
    the analytic S-curve 1-(1-J^5)^6.
 3. Precision context: emitted pairs OUTSIDE the cliques (organic
    near-dups of the base corpus, scaled).
-4. Bucket shape: the q116 audit (band bucket sizes, cap drops) under
+4. Portable recall: the same per-band recall for the oracle-replayable
+   ``minhash_near_dupes_portable`` on the same ground truth, printed
+   beside production's overall recall (ROADMAP item 8's 0.02 gate).
+5. Bucket shape: the q116 audit (band bucket sizes, cap drops) under
    the realistic regime.
 
 Usage:
@@ -51,12 +54,48 @@ os.environ.setdefault("SPARK_GRAFT_PROBE_EDITNOISE", "1")
 from tools import scale_probe  # noqa: E402  (reads env at import)
 
 
+def _band_recall(target, found, band, label: str, analytic: bool) -> tuple[int, int]:
+    """Print the recall of ``found`` (doc_a, doc_b pairs) on the GT pairs
+    ``target``, binned by true-Jaccard ``band``; return (hits, GT pairs).
+    ``analytic`` adds the production banding's S-curve 1-(1-J^5)^6."""
+    from pyspark.sql import functions as F
+
+    gt_by = target.select(band).groupBy("band").agg(F.count("*").alias("n_gt"))
+    hit_by = (
+        target.join(found, ["doc_a", "doc_b"], "left_semi")
+        .select(band)
+        .groupBy("band")
+        .agg(F.count("*").alias("n_hit"))
+    )
+    recall = (
+        gt_by.join(hit_by, "band", "left")
+        .select("band", "n_gt", F.coalesce("n_hit", F.lit(0)).alias("n_hit"))
+        .orderBy("band")
+        .collect()
+    )
+    tot_gt = tot_hit = 0
+    for r in recall:
+        curve = ""
+        if analytic:
+            s_curve = 1 - (1 - (r.band / 10000 + 0.025) ** 5) ** 6
+            curve = f"  (analytic {s_curve:.3f})"
+        print(
+            f"  {label}J[{r.band/10000:.2f},{r.band/10000+0.05:.2f}): "
+            f"GT {r.n_gt:>7} hit {r.n_hit:>7} "
+            f"recall {r.n_hit/r.n_gt:6.3f}{curve}"
+        )
+        tot_gt += r.n_gt
+        tot_hit += r.n_hit
+    return tot_hit, tot_gt
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
     from salesanalytics_etl_spark.operators.dedup import (
         lsh_bucket_audit,
         minhash_near_dupes,
+        minhash_near_dupes_portable,
         shingle_rows,
         shingle_sets,
     )
@@ -135,9 +174,6 @@ def main() -> None:
     target = gt.filter(F.col("j_bp") >= 5000).persist()
     target.count()
     band = F.expr("least(j_bp, 9999) div 500 * 500").alias("band")
-    gt_by = target.select(band).groupBy("band").agg(
-        F.count("*").alias("n_gt")
-    )
     knee: list[tuple[int, int, float, float]] = []
     for recover in recovers:
         t0 = time.perf_counter()
@@ -150,29 +186,7 @@ def main() -> None:
             f"pipeline (recover_rounds={recover}): {n_found} pairs "
             f"in {dt:.1f}s; GT clique pairs: {n_gt}"
         )
-
-        hit = target.join(found, ["doc_a", "doc_b"], "left_semi")
-        hit_by = hit.select(band).groupBy("band").agg(
-            F.count("*").alias("n_hit")
-        )
-        recall = (
-            gt_by.join(hit_by, "band", "left")
-            .select(
-                "band", "n_gt", F.coalesce("n_hit", F.lit(0)).alias("n_hit")
-            )
-            .orderBy("band")
-            .collect()
-        )
-        tot_gt = tot_hit = 0
-        for r in recall:
-            s_curve = 1 - (1 - (r.band / 10000 + 0.025) ** 5) ** 6
-            print(
-                f"  J[{r.band/10000:.2f},{r.band/10000+0.05:.2f}): "
-                f"GT {r.n_gt:>7} hit {r.n_hit:>7} "
-                f"recall {r.n_hit/r.n_gt:6.3f}  (analytic {s_curve:.3f})"
-            )
-            tot_gt += r.n_gt
-            tot_hit += r.n_hit
+        tot_hit, tot_gt = _band_recall(target, found, band, "", analytic=True)
         print(
             f"overall clique recall (J>=0.5, R={recover}): "
             f"{tot_hit}/{tot_gt} = {tot_hit/max(tot_gt,1):.3f}"
@@ -189,14 +203,30 @@ def main() -> None:
                 ds = dt - knee[i - 1][3]
                 marg = f"  marginal {dh} hits / {ds:+.1f}s"
             print(f"  R={rr:>2}: hits {th} recall {rc:.3f} wall {dt:.1f}s{marg}")
+
+    # --- 3. portable twin on the same GT (recover_rounds=0) ------------
+    t0 = time.perf_counter()
+    pfound = minhash_near_dupes_portable(docs).localCheckpoint()
+    n_pfound = pfound.count()
+    print(
+        f"portable pipeline: {n_pfound} pairs in "
+        f"{time.perf_counter()-t0:.1f}s"
+    )
+    p_hit, p_gt = _band_recall(target, pfound, band, "portable ", analytic=False)
+    p_recall = p_hit / max(p_gt, 1)
+    print(
+        f"overall clique recall (J>=0.5): portable {p_hit}/{p_gt} = "
+        f"{p_recall:.3f}, production (R={knee[0][0]}) {knee[0][2]:.3f}, "
+        f"gap {knee[0][2] - p_recall:+.3f}"
+    )
     target.unpersist()
 
-    # --- 3. bucket shape under the realistic regime -------------------
+    # --- 4. bucket shape under the realistic regime -------------------
     audit = lsh_bucket_audit(docs).collect()
     for r in audit:
         print(f"  bucket audit: {r}")
 
-    # --- 4. production SimHash path on the same cliques ----------------
+    # --- 5. production SimHash path on the same cliques ----------------
     # SimHash(<=3) targets the near-exact tail; this measures how much
     # of the realistic-edit clique mass it sees, per true-J band.
     # --simhash-recover R runs the r15 capped-bucket recovery pass —
