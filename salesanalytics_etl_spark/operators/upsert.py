@@ -371,7 +371,8 @@ def merge_upsert(
     # a left-anti join's output is the same whether probe keys repeat or
     # not, so the probe needs no distinct()
     kept = target.join(incoming.select(*keys), on=keys, how="left_anti")
-    return kept.unionByName(incoming)
+    # a USING join puts the keys first; the table keeps its own order
+    return kept.unionByName(incoming).select(*target.columns)
 
 
 def merge_upsert_partitioned(

@@ -593,7 +593,9 @@ def q28_ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,
     doc="approximate top-5 via IVF: KMeans(16) coarse quantizer, probe-4 "
     "clusters, exact rescoring within probed clusters — candidate "
-    "fraction n_probe/k, monotone recall dial (rows-only by design)",
+    "fraction n_probe/k, monotone recall dial. Same SQL assignment and "
+    "probe/rescore code as q112; only the trained quantizer is not "
+    "engine-portable (rows-only by design)",
 )
 def q34_ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from salesanalytics_etl_spark.operators.ivf import cosine_topk_ivf
@@ -2205,10 +2207,10 @@ def q88_lang_metadata_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q89_embedding_cluster_stats",
     oracle=None,
     doc="KMeans(16) cluster profile of the embedding corpus: per-cluster "
-    "size, mean intra-cluster cosine to the centroid, and dominant label "
-    "— reuses the IVF coarse quantizer (sample-fit); "
-    "iterative fit -> rows-only for the gate, semantics pinned by the "
-    "IVF planted-cluster unit tests",
+    "size, mean intra-cluster cosine (6dp) to the centroid, and dominant "
+    "label — the IVF coarse quantizer (sample-fit) through q113's SQL "
+    "assignment kernel; iterative fit -> rows-only for the gate, "
+    "semantics pinned by the IVF planted-cluster unit tests",
 )
 def q89_embedding_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -3461,7 +3463,9 @@ def q111_hdr_percentile_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cosine_topk_ivf_portable) — assignment, probe-4, and rescore are the
     # real IVF mechanics, and with md5-sampled anchors instead of trained
     # KMeans centroids every stage replays in SQL, so the APPROXIMATE
-    # answer is hash-checked (q34 keeps the trained quantizer, rows-only).
+    # answer is hash-checked. q34 runs the same assignment and search code
+    # over trained centroids (rows-only: the md5 anchors recall less —
+    # 0.50-0.54 vs 0.58-0.64 at recall@5 — and split planted clusters).
     oracle="""
     WITH vecs AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
@@ -3507,8 +3511,9 @@ def q111_hdr_percentile_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "n_cells sims per row on the scan (no shuffle), candidates via cell "
     "equi-join, exact rescore inside probed cells only (candidate "
     "fraction ~ n_probe/n_cells). DuckDB replays quantizer/assign/probe/"
-    "rescore, hash-checking the approximate answer; q34 keeps the "
-    "trained-KMeans quantizer (rows-only, recall-probed in unit tests)",
+    "rescore, hash-checking the approximate answer; q34 runs the same "
+    "code over the trained-KMeans quantizer (rows-only, recall-probed "
+    "in unit tests)",
 )
 def q112_ivf_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from salesanalytics_etl_spark.operators.ivf import cosine_topk_ivf_portable
@@ -3522,10 +3527,11 @@ def q112_ivf_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q113_cell_stats_replay",
     # Cluster-statistics report over the deterministic quantizer cells
     # (q112's assignment stage) — the portable twin of q89's KMeans
-    # cluster stats: trained centroids aren't engine-portable, but the
-    # cell-stats MECHANISM (assign -> per-cell count / similarity
-    # dispersion) is, and the mean is exact-integer-accumulated
-    # (micro-units) so it is partitioning-insensitive and hash-stable.
+    # cluster stats: both run one SQL assignment kernel, only the trained
+    # centroids aren't engine-portable, so the cell-stats MECHANISM
+    # (assign -> per-cell count / similarity dispersion) is checked here;
+    # the mean is exact-integer-accumulated (micro-units) so it is
+    # partitioning-insensitive and hash-stable.
     oracle="""
     WITH vecs AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings

@@ -108,8 +108,9 @@ def test_read_after_merge_sees_merged_rows(spark, tmp_path):
 
 def test_cold_ivf_call_derives_anchors_once(spark, monkeypatch):
     """One cosine_topk_ivf_portable call scans the corpus for its anchor
-    sample exactly ONCE: the collected anchors feed the probe side and
-    are handed to portable_cell_assignment through ``anchor_rows``."""
+    sample exactly ONCE: the collected anchors are handed to the shared
+    IVF search through ``anchor_rows`` and feed both the probes and the
+    corpus assignment."""
     from salesanalytics_etl_spark.operators import ivf as I
 
     emb = spark.createDataFrame(
@@ -119,18 +120,18 @@ def test_cold_ivf_call_derives_anchors_once(spark, monkeypatch):
     derived = []
     handed = []
     real_anchors = I._portable_anchors
-    real_assignment = I.portable_cell_assignment
+    real_search = I._ivf_search
 
     def counting_anchors(*a, **k):
         derived.append(1)
         return real_anchors(*a, **k)
 
-    def recording_assignment(*a, anchor_rows=None, **k):
+    def recording_search(corpus, queries, anchor_rows, *a, **k):
         handed.append(anchor_rows)
-        return real_assignment(*a, anchor_rows=anchor_rows, **k)
+        return real_search(corpus, queries, anchor_rows, *a, **k)
 
     monkeypatch.setattr(I, "_portable_anchors", counting_anchors)
-    monkeypatch.setattr(I, "portable_cell_assignment", recording_assignment)
+    monkeypatch.setattr(I, "_ivf_search", recording_search)
     out = I.cosine_topk_ivf_portable(
         emb, emb.filter(F.col("vec_id") < 2), k=3, n_cells=4
     )

@@ -124,6 +124,21 @@ def test_merge_upsert_repeated_incoming_key(spark):
     assert got == [(1, "a"), (1, "a"), (1, "b"), (2, "keep"), (3, "ins")]
 
 
+def test_merge_upsert_keeps_target_column_order(spark):
+    """The merged table keeps the target's column order even when the
+    key is not its first column (a USING anti-join moves keys first)."""
+    target = spark.createDataFrame(
+        [("x", 1, "old"), ("y", 2, "keep")], ["s", "k", "v"]
+    )
+    incoming = spark.createDataFrame([("z", 1, "new")], ["s", "k", "v"])
+    merged = merge_upsert(target, incoming, ["k"])
+    assert merged.columns == ["s", "k", "v"]
+    assert sorted(map(tuple, merged.collect())) == [
+        ("y", 2, "keep"),
+        ("z", 1, "new"),
+    ]
+
+
 def test_concat_tsql_null_as_empty(spark):
     # T-SQL CONCAT(a,' ',b) with NULL FirstName → ' Last', not NULL
     df = spark.createDataFrame(

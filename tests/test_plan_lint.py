@@ -339,6 +339,18 @@ def test_q113_assignment_is_map_side(spark, sf_dir):
     assert qtree.count("Exchange") == 1, "only the cell-stats agg may shuffle"
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["q34_ann_cosine_ivf", "q89_embedding_cluster_stats", "q112_ivf_replay"],
+)
+def test_ivf_plans_run_no_python_udf(spark, sf_dir, name):
+    """Both IVF quantizers run through the one SQL assignment kernel:
+    no query of the family may cross into Python per row."""
+    plan = _formatted_plan(all_queries()[name](spark, sf_dir))
+    for node in ("ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, f"{name} plans a Python UDF ({node})"
+
+
 def test_q115_is_map_only(spark, sf_dir):
     """q115's whole point at scale: per-doc signals computed with array
     expressions in ONE projection over ONE scan — a refactor that
