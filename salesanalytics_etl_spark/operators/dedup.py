@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import logging
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -147,37 +148,181 @@ def minhash_signatures(sh_rows: DataFrame) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
+def _md5_salt(tag: str) -> Callable[[list[str]], Column]:
+    """Recovery salt over the named columns: the 24-bit md5 prefix of
+    ``tag-c1-…-cn``. Every piece is ANSI SQL, so an oracle rebuilds the
+    same sub-buckets."""
+
+    def salt(cols: list[str]) -> Column:
+        parts = ", ".join(f"cast(`{c}` as string)" for c in cols)
+        return F.expr(
+            f"cast(conv(substr(md5(concat_ws('-', '{tag}', {parts})), 1, 6),"
+            " 16, 10) as int)"
+        )
+
+    return salt
+
+
+def _bucket_pairs(
+    members: DataFrame,
+    keys: list[str],
+    cap: int,
+    rule: str = "drop",
+    payload: str | None = None,
+    recover_rounds: int = 0,
+    salt: Callable[[list[str]], Column] | None = None,
+    budget: int | None = None,
+) -> DataFrame:
+    """Candidate pairs of a bucket index — the one bucket→pair kernel of
+    the MinHash bands, SimHash chunks and winnow posting lists/min-bands.
+
+    ``members`` has one row per (bucket ``keys``…, ``doc_id``) and an
+    optional ``payload`` column. The result is ``(doc_a, doc_b[,
+    {payload}_a, {payload}_b])`` with doc_a < doc_b, once per bucket the
+    two docs share: callers apply their own ``distinct()`` or count.
+
+    A bucket of m members pairs by ``rule``:
+
+    - ``"drop"``: whole when 2 ≤ m ≤ ``cap``, not at all when m > cap
+      (a boilerplate cluster of 10⁵ docs would emit 5·10⁹ pairs);
+    - ``"truncate"``: its first ``cap`` members by doc_id.
+
+    m is ``count(*) over (partition by keys)`` and the pairs are a
+    self-join on the keys: both join sides (and the recovery branch) read
+    one shuffle of ``members``, and window sorters spill, so no bucket is
+    ever held in one buffer however large it grows. Pass ``members``
+    lazy or localCheckpointed, not persisted: AQE does not reuse a
+    shuffle over a cached scan, so each side would shuffle it again.
+
+    ``recover_rounds = R > 0`` re-admits every over-cap bucket with
+    bounded work: in round r a member joins sub-bucket
+    ``pmod(salt([*keys, "_r", "doc_id"]), ceil(m/cap))``, and the
+    sub-buckets pair by the truncate rule. That is at most R·(cap−1)/2
+    pairs per member, never the bucket's m(m−1)/2. The bucket key is in
+    the salt, so every (bucket, round) is an independent partition and a
+    dropped pair returns with probability ≈ 1−(1−cap/m)^(kR), k being
+    the number of buckets that hold it. R=0 leaves the base plan alone.
+
+    ``budget``: Σ m(m−1)/2 in bigint over the kept buckets and
+    sub-buckets (m after truncation) is counted before any pair
+    expansion, and a count above ``budget`` raises. The count and the
+    pairs are two jobs, so ``members`` is materialized once for both.
+    """
+    if budget is not None:
+        members = members.localCheckpoint()
+    cols = [*keys, "doc_id", *([payload] if payload else [])]
+    sized = _sized(members.select(*cols), keys)
+    kept = [(_capped(sized, keys, cap, rule), keys)]
+    if recover_rounds > 0:
+        rkeys = [*keys, "_r", "_g"]
+        sub = (
+            sized.filter(F.col("_m") > cap)
+            .select(
+                *cols,
+                "_m",
+                F.explode(F.sequence(F.lit(0), F.lit(recover_rounds - 1))).alias(
+                    "_r"
+                ),
+            )
+            .select(
+                *cols,
+                "_r",
+                F.pmod(
+                    salt([*keys, "_r", "doc_id"]),
+                    F.expr(f"(_m + {cap} - 1) div {cap}"),
+                ).alias("_g"),
+            )
+        )
+        kept.append((_capped(_sized(sub, rkeys), rkeys, cap, "truncate"), rkeys))
+    if budget is not None:
+        # a kept bucket of m is m rows of (m - 1), so the sum is Σ m(m-1)
+        n = (
+            reduce(DataFrame.unionByName, [k.select("_m") for k, _ in kept])
+            .agg(F.expr("sum(_m - 1) div 2"))
+            .first()[0]
+            or 0
+        )
+        if n > budget:
+            raise RuntimeError(
+                f"{n} candidate pairs (base + recovery) exceed the budget "
+                f"({budget}); a degenerate bucket is going quadratic under "
+                "the lifted cap, or recover_rounds is multiplying a "
+                "collapsed corpus. Raise candidate_budget to proceed "
+                "anyway, or restore a finite max_bucket / lower "
+                "recover_rounds."
+            )
+    return reduce(
+        DataFrame.unionByName, [_pair_up(k, bk, payload) for k, bk in kept]
+    )
+
+
+def _sized(frame: DataFrame, keys: list[str]) -> DataFrame:
+    """``frame`` + ``_m``, its bucket's member count. The window is
+    ordered by doc_id so the truncate rule's row_number shares its sort."""
+    return frame.withColumn(
+        "_m",
+        F.expr(
+            f"count(1) over (partition by {', '.join(keys)} order by doc_id"
+            " rows between unbounded preceding and unbounded following)"
+        ),
+    )
+
+
+def _capped(sized: DataFrame, keys: list[str], cap: int, rule: str) -> DataFrame:
+    """The members that pair under ``rule``, ``_m`` reset to the number
+    of them in the bucket."""
+    if rule == "drop":
+        return sized.filter(f"_m BETWEEN 2 AND {cap}")
+    return (
+        sized.withColumn(
+            "_rn",
+            F.expr(
+                f"row_number() over (partition by {', '.join(keys)}"
+                " order by doc_id)"
+            ),
+        )
+        .filter(f"_m >= 2 AND _rn <= {cap}")
+        .withColumn("_m", F.least("_m", F.lit(cap).cast("long")))
+    )
+
+
+def _pair_up(kept: DataFrame, keys: list[str], payload: str | None) -> DataFrame:
+    """The doc_a < doc_b pairs of every bucket: a self-join on ``keys``."""
+
+    def side(s: str) -> DataFrame:
+        extra = [f"`{payload}` as `{payload}_{s}`"] if payload else []
+        return kept.selectExpr(*keys, f"doc_id as doc_{s}", *extra)
+
+    out = [f"{payload}_a", f"{payload}_b"] if payload else []
+    return (
+        side("a")
+        .join(side("b"), keys)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", *out)
+    )
+
+
 def lsh_candidates(
     sigs: DataFrame,
     max_bucket: int = MAX_BUCKET,
     recover_rounds: int = 0,
 ) -> DataFrame:
     """LSH banding: docs agreeing on any band become candidate pairs
-    (doc_a < doc_b).
+    (doc_a < doc_b), each pair once.
 
-    Buckets larger than ``max_bucket`` are dropped before pairing — a
-    degenerate bucket of m docs contributes m(m-1)/2 pairs, so one
-    boilerplate cluster of 10⁵ docs would otherwise emit 5·10⁹ candidates.
-    Exact duplicates of such clusters are still caught by exact_dedupe;
+    A band bucket pairs whole when it holds 2..``max_bucket`` docs and
+    not at all above (the drop rule of :func:`_bucket_pairs`). Exact
+    duplicates of a dropped cluster are still caught by exact_dedupe;
     LSH targets the *near*-dup tail, where buckets are small by nature.
 
-    ``recover_rounds`` (r13 SCALE.md band-2 finding: at 30× probe volume
-    241 capped buckets held ~300 members each — 10.7M dropped candidate
-    pairs that raising the cap alone cannot reclaim) re-admits capped
-    buckets with BOUNDED work instead of dropping them: each of the R
-    rounds hashes the members of every oversized bucket into
-    ceil(m/max_bucket) salted sub-buckets and pairs only within a
-    sub-bucket. Cost is linear in the dropped-member count — at most
-    R·(max_bucket−1)/2 pairs per member, never the bucket's m(m−1)/2 —
-    and a given dropped pair is recovered with probability
-    ≈ 1−(1−max_bucket/m)^(kR) where k is the number of bands whose
-    capped bucket holds the pair (the salt includes the band, so bands
-    are independent trials: 0.85 for m=300, cap 64, R=8, k=1), highest
-    exactly where the drop hurt most (m just over the cap). R=0 (the
-    default) is byte-identical to the pre-r14 drop behavior.
+    ``recover_rounds = R`` re-admits the dropped buckets through the
+    kernel's salted sub-buckets, salted with xxhash64 — the production
+    hash family, like the band keys. For a bucket of m=300 at cap 64,
+    R=8 recovers a pair held in one band with probability 0.85; the
+    recovery reclaims most where the drop hurts most, m just over the
+    cap. R=0 (the default) is the plain drop.
     """
-    # SQL-string band hashes (one py4j call each — r16 opt round, see
-    # estimate_filter); identical xxhash64 over the same operands
+    # one SQL-string band hash per band (one py4j call each)
     band_hashes = [
         F.expr(
             "xxhash64("
@@ -192,89 +337,13 @@ def lsh_candidates(
     banded = sigs.select(
         "doc_id", F.posexplode(F.array(*band_hashes)).alias("band_id", "band_hash")
     )
-    # one shuffle key throughout: rank members within each (band, hash)
-    # and TRUNCATE at max_bucket+1 BEFORE collecting — a degenerate
-    # bucket of 10⁶ boilerplate docs would otherwise accumulate all 10⁶
-    # entries in one collect_list aggregation buffer (agg buffers can't
-    # spill) before the size filter dropped it. The window sorter spills
-    # to disk, the collect buffer is now ≤ max_bucket+1 entries, and the
-    # +1 sentinel preserves the exact drop semantics: any truncated
-    # bucket shows size max_bucket+1 and is filtered out.
-    w = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
-    buckets = (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_bucket + 1)
-        .groupBy("band_id", "band_hash")
-        .agg(F.collect_list("doc_id").alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
-    )
-    pairs = (
-        buckets.select(F.explode("ids").alias("doc_a"), "ids")
-        .select("doc_a", F.explode("ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-    )
-    if recover_rounds > 0:
-        # members of capped buckets, with the true bucket size m —
-        # separate (band, hash)-keyed pass so the R=0 plan is untouched
-        sized = banded.withColumn(
-            "m",
-            F.count(F.lit(1)).over(
-                Window.partitionBy("band_id", "band_hash")
-            ),
-        ).filter(F.col("m") > max_bucket)
-        sub = (
-            sized.select(
-                "band_id",
-                "band_hash",
-                "doc_id",
-                F.expr(
-                    f"(m + {max_bucket} - 1) div {max_bucket}"
-                ).alias("g_n"),
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(recover_rounds - 1))
-                ).alias("r"),
-            )
-            # salted sub-bucket id: a fresh partition of the bucket per
-            # (band, round) — the BAND is in the salt so an entity
-            # oversized in several bands gets independent partitions in
-            # each (post-close review: a doc-only salt made all bands
-            # repeat the same partition — 6x duplicated pair work that
-            # distinct() discarded, zero extra recall). xxhash64 — the
-            # production hash family, like the band keys themselves.
-            .withColumn(
-                "g",
-                F.pmod(
-                    F.xxhash64(
-                        F.lit("lshrec"),
-                        F.col("band_id"),
-                        F.col("band_hash"),
-                        F.col("r"),
-                        F.col("doc_id"),
-                    ),
-                    F.col("g_n"),
-                ),
-            )
-        )
-        rw = Window.partitionBy("band_id", "band_hash", "r", "g").orderBy(
-            "doc_id"
-        )
-        rbuckets = (
-            sub.withColumn("_rn", F.row_number().over(rw))
-            # truncate (don't drop): a sub-bucket lands near max_bucket
-            # members by construction; hash variance can overshoot and
-            # the bound must hold regardless
-            .filter(F.col("_rn") <= max_bucket)
-            .groupBy("band_id", "band_hash", "r", "g")
-            .agg(F.collect_list("doc_id").alias("ids"))
-            .filter(F.size("ids") > 1)
-        )
-        rpairs = (
-            rbuckets.select(F.explode("ids").alias("doc_a"), "ids")
-            .select("doc_a", F.explode("ids").alias("doc_b"))
-            .filter(F.col("doc_a") < F.col("doc_b"))
-        )
-        pairs = pairs.unionByName(rpairs)
-    return pairs.distinct()
+    return _bucket_pairs(
+        banded,
+        ["band_id", "band_hash"],
+        max_bucket,
+        recover_rounds=recover_rounds,
+        salt=lambda cols: F.expr(f"xxhash64('lshrec', {', '.join(cols)})"),
+    ).distinct()
 
 
 def jaccard_verify(
@@ -384,20 +453,18 @@ def minhash_near_dupes(
     if min_agree is None:
         min_agree = max(1, int(N_HASHES * (threshold - 0.125)))
     # NB: shingle rows feed both the signature and verification branches
-    # but are NOT persisted — the exploded rows are the LARGEST dataset in
-    # the pipeline (≫ corpus), so caching them trades memory/spill for a
-    # recompute that is codegen'd and scan-parallel; measured no faster
+    # but are NOT materialized — the exploded rows are the LARGEST dataset
+    # in the pipeline (≫ corpus), so caching them trades memory/spill for
+    # a recompute that is codegen'd and scan-parallel; measured no faster
     # persisted at sf0.1. The signatures (|corpus| × 32 longs) ARE
-    # persisted: banding and the estimate filter both consume them.
+    # materialized, eagerly: banding and the estimate filter both consume
+    # them, and a lazy cache lets concurrent stages each recompute the
+    # shingle explode + signature aggregation (measured 18s → 11s).
+    # localCheckpoint, not persist: the bucket self-join's two sides then
+    # share one shuffle (AQE does not reuse an exchange over a cached
+    # scan), and there is no cache to release.
     rows = shingle_rows(df, text_col)
-    # Materialize the persisted signatures EAGERLY (count() is a cheap
-    # action over the cached 32-long rows): downstream consumers schedule
-    # their stages concurrently, and a lazy persist lets each recompute
-    # the full shingle-explode + signature aggregation before any cache
-    # partition lands (measured 18s → 11s originally; re-confirmed this
-    # round — dropping the eager count regressed 6.0s → 9.2s).
-    sigs = minhash_signatures(rows).persist()
-    sigs.count()
+    sigs = minhash_signatures(rows).localCheckpoint()
     # The estimate filter exists to protect the verify stage from a flood
     # of hopeless candidates; when banding already produced a small set,
     # its two signature joins cost more than the verify work they'd save
@@ -428,10 +495,9 @@ def minhash_near_dupes(
         rows.join(docs_in_pairs, "doc_id", "left_semi")
     ).persist()
     # materialize the (tiny) verified-pair set, then release the
-    # intermediate caches — a lazy return would pin sigs/cands in executor
+    # intermediate caches — a lazy return would pin cands/sets in executor
     # memory for every call of the operator
     out = jaccard_verify(cands, sets, threshold).localCheckpoint()
-    sigs.unpersist()
     cands.unpersist()
     sets.unpersist()
     return out
@@ -559,103 +625,25 @@ def minhash_near_dupes_portable(
     implying unverifiable once the randomness is deterministic and
     portable).
 
-    Differences from the production :func:`minhash_near_dupes`, all forced
-    by portability, none structural: md5-prefix shingle hashes instead of
-    xxhash64; xor-mask permutations instead of xxhash64 re-hashes; band
-    keys are md5 of the joined signature slice instead of xxhash64; bucket
-    membership via size-filter + self-join instead of the truncating
-    collect_list (identical drop semantics: a bucket of m docs pairs iff
-    2 <= m <= max_bucket); no estimate filter (a performance pruner,
-    budget-gated off at gate scale in production too). Shuffle shape is
-    unchanged: signature groupBy on doc_id, candidate equi-join on
-    (band_id, band_key), verify joins on doc ids.
+    Buckets, the cap and recovery are the same :func:`_bucket_pairs`
+    call as the production :func:`minhash_near_dupes`; the candidate
+    pairs differ only in the hash family, all forced by portability:
+    md5-prefix shingle hashes and xor-mask permutations instead of
+    xxhash64 (the signature hash), md5 of the joined signature slice
+    instead of xxhash64 (the band key), and an md5 recovery salt instead
+    of xxhash64. The twin skips the estimate filter, a performance
+    pruner that production runs only past 200 000 candidates. Shuffle
+    shape: signature groupBy on doc_id, bucket self-join on (band_id,
+    band_key), verify joins on doc ids.
     """
     t_bp = int(round(threshold * 10000))
-    # checkpointed: bucket sizing and both sides of the pair self-join
-    # consume `banded`, and the signature scan is the most expensive stage
-    banded = _portable_banded(df, text_col).localCheckpoint()
-    bsize = banded.groupBy("band_id", "band_key").agg(
-        F.count(F.lit(1)).alias("m")
+    raw = _bucket_pairs(
+        _portable_banded(df, text_col),
+        ["band_id", "band_key"],
+        max_bucket,
+        recover_rounds=recover_rounds,
+        salt=_md5_salt("lshrec"),
     )
-    ok = bsize.filter(
-        (F.col("m") >= 2) & (F.col("m") <= max_bucket)
-    ).select("band_id", "band_key")
-    member = banded.join(ok, ["band_id", "band_key"], "left_semi")
-    raw = (
-        member.select("band_id", "band_key", F.col("doc_id").alias("doc_a"))
-        .join(
-            member.select(
-                "band_id", "band_key", F.col("doc_id").alias("doc_b")
-            ),
-            ["band_id", "band_key"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    if recover_rounds > 0:
-        # portable twin of lsh_candidates' capped-bucket recovery: the
-        # salted sub-bucket id is the md5 24-bit hash of
-        # 'lshrec-{band_id}-{band_key}-{round}-{doc_id}' mod
-        # ceil(m/max_bucket) (band in the salt — bands are independent
-        # recovery trials), truncation via row_number — every piece
-        # ANSI-replayable, so the oracle rebuilds the recovered pair
-        # set bit-for-bit
-        over = bsize.filter(F.col("m") > max_bucket)
-        omember = banded.join(over, ["band_id", "band_key"])
-        sub = omember.select(
-            "band_id",
-            "band_key",
-            "doc_id",
-            "m",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(recover_rounds - 1))
-            ).alias("r"),
-        ).withColumn(
-            "g",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "-",
-                            F.lit("lshrec"),
-                            F.col("band_id").cast("string"),
-                            F.col("band_key"),
-                            F.col("r").cast("string"),
-                            F.col("doc_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    6,
-                ),
-                16,
-                10,
-            ).cast("int")
-            % F.expr(f"(m + {max_bucket} - 1) div {max_bucket}"),
-        )
-        rw = Window.partitionBy("band_id", "band_key", "r", "g").orderBy(
-            "doc_id"
-        )
-        submem = (
-            sub.withColumn("_rn", F.row_number().over(rw))
-            .filter(F.col("_rn") <= max_bucket)
-            .select("band_id", "band_key", "r", "g", "doc_id")
-        )
-        rraw = (
-            submem.select(
-                "band_id", "band_key", "r", "g",
-                F.col("doc_id").alias("doc_a"),
-            )
-            .join(
-                submem.select(
-                    "band_id", "band_key", "r", "g",
-                    F.col("doc_id").alias("doc_b"),
-                ),
-                ["band_id", "band_key", "r", "g"],
-            )
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-        )
-        raw = raw.unionByName(rraw)
     cands = raw.distinct().persist()
     # consumed by docs_in_pairs and the verify joins
     cands.count()
@@ -920,18 +908,6 @@ def md5_token_hash(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
 
 
-def _bucket_pair_count(members_col: str) -> Column:
-    """m·(m−1)/2 candidate pairs for a bucket's member ARRAY, computed in
-    64-bit: ``size()`` is a 32-bit int, and with exact-mode caps lifted a
-    degenerate bucket of 46 341+ members makes the int product wrap
-    SILENTLY (non-ANSI) to a small/negative count — defeating the very
-    budget the count guards. The cast must happen before the multiply."""
-    return F.expr(
-        f"cast(size({members_col}) as bigint)"
-        f" * (size({members_col}) - 1) div 2"
-    )
-
-
 def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -1000,25 +976,20 @@ def simhash_near_dupes(
     ``candidate_budget``: with the cap lifted for exact mode, a
     shared-template corpus (many docs voting to near-identical
     signatures) can make one chunk bucket quadratic. The budget counts
-    the candidate pairs FROM THE BUCKET SIZES — Σ m·(m−1)/2, exact
-    integers, no pair expansion (the q116 audit trick) — and raises
-    loudly when exceeded instead of grinding through the pair join.
+    the candidate pairs of the base buckets and recovery sub-buckets
+    FROM THEIR SIZES — Σ m·(m−1)/2 in bigint, no pair expansion — and
+    raises loudly when exceeded instead of grinding through the pair
+    join.
 
-    ``recover_rounds > 0``: the SimHash twin of
-    :func:`lsh_candidates`' capped-bucket recovery (r15 — the reorder
-    probe showed the CAP, not Hamming, limits this path's recall when
-    permutation-invariant signatures collapse the chunk buckets: recall
-    0.028 at J≥0.95 on the 30× reorder corpus, SCALE.md Round-15 §2).
-    Each of the R rounds hashes every over-cap bucket's members into
-    ceil(m/max_bucket) salted sub-buckets of ≤ cap and pairs only
-    within — ≤ R·(max_bucket−1)/2 pairs per dropped member, never the
-    bucket's m(m−1)/2; the exact Hamming check still verifies every
-    recovered pair. Unlike the LSH path's xxhash64 salt, the sub-bucket
-    id here derives from md5 of 'simrec-chunk_id-chunk_val-r-doc_id'
-    (24-bit prefix) so that with ``token_hash=md5_token_hash`` the
-    ENTIRE pipeline — signatures, chunks, recovery partitions — is
-    engine-portable and the production function value-gates directly
-    against DuckDB (q201). R=0 is byte-identical to the drop behavior.
+    ``recover_rounds > 0`` re-admits over-cap chunk buckets through the
+    salted sub-buckets of :func:`_bucket_pairs`. Permutation-invariant
+    signatures collapse whole near-dup clusters into one chunk bucket,
+    so there the cap, not Hamming, bounds recall. The salt is the md5
+    24-bit prefix of 'simrec-chunk_id-chunk_val-r-doc_id', so with
+    ``token_hash=md5_token_hash`` every stage — signatures, chunks,
+    recovery partitions — is engine-portable and the production
+    function value-gates directly against DuckDB (q201). The exact
+    Hamming check verifies every recovered pair; R=0 is the plain drop.
     """
     sigs = simhash_signatures(df, text_col, token_hash=token_hash)
     chunks = sigs.select(
@@ -1033,161 +1004,21 @@ def simhash_near_dupes(
             )
         ).alias("chunk_id", "chunk_val"),
     )
-    if recover_rounds > 0:
-        # doc-grain ×4 rows, consumed by BOTH the base-bucket path and
-        # the over-cap recovery path — checkpointed so the signature
-        # aggregation (the pipeline's dominant exchange) runs once, not
-        # once per branch (r16 opt round; the winnow recovery branch got
-        # the same fix in the r16 build's post-close review).
-        # NB (r16 advice): localCheckpoint trades fault tolerance for
-        # lineage truncation — an executor lost after the checkpoint
-        # fails the job instead of recomputing. Accepted codebase-wide
-        # for bounded intra-query frames (this, rmem/fpsets in the
-        # winnow recovery branch, the 1-row audit results): the frames
-        # die with the query and a retry re-runs it.
-        chunks = chunks.localCheckpoint()
-    # same bucket-list pair generation as the MinHash path: carry
-    # (doc_id, simhash) structs so the Hamming check needs no join back.
-    # Truncate-at-cap+1 before collecting (see lsh_candidates) so one
-    # degenerate chunk bucket can't blow the aggregation buffer.
-    w = Window.partitionBy("chunk_id", "chunk_val").orderBy("doc_id")
-    buckets = (
-        chunks.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_bucket + 1)
-        .groupBy("chunk_id", "chunk_val")
-        .agg(
-            F.collect_list(F.struct("doc_id", "simhash")).alias("members")
-        )
-        .filter((F.size("members") > 1) & (F.size("members") <= max_bucket))
-    )
-    rbuckets = None
-    if recover_rounds > 0:
-        # members of over-cap chunk buckets with true size m — separate
-        # (chunk, value)-keyed pass so the R=0 plan is untouched
-        sized = chunks.withColumn(
-            "m",
-            F.count(F.lit(1)).over(
-                Window.partitionBy("chunk_id", "chunk_val")
-            ),
-        ).filter(F.col("m") > max_bucket)
-        sub = sized.select(
-            "chunk_id",
-            "chunk_val",
-            "doc_id",
-            "simhash",
-            F.expr(f"(m + {max_bucket} - 1) div {max_bucket}").alias(
-                "g_n"
-            ),
-            F.explode(
-                F.sequence(F.lit(0), F.lit(recover_rounds - 1))
-            ).alias("r"),
-        ).withColumn(
-            # md5-salted sub-bucket id (portable — see docstring); the
-            # CHUNK is in the salt so a doc oversized in several chunks
-            # gets an independent partition in each
-            "g",
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "-",
-                                F.lit("simrec"),
-                                F.col("chunk_id").cast("string"),
-                                F.col("chunk_val").cast("string"),
-                                F.col("r").cast("string"),
-                                F.col("doc_id").cast("string"),
-                            )
-                        ),
-                        1,
-                        6,
-                    ),
-                    16,
-                    10,
-                ).cast("int"),
-                F.col("g_n"),
-            ),
-        )
-        rw = Window.partitionBy("chunk_id", "chunk_val", "r", "g").orderBy(
-            "doc_id"
-        )
-        rbuckets = (
-            sub.withColumn("_rn", F.row_number().over(rw))
-            # truncate (don't drop): hash variance can overshoot the
-            # ~cap-sized target; the bound must hold regardless
-            .filter(F.col("_rn") <= max_bucket)
-            .groupBy("chunk_id", "chunk_val", "r", "g")
-            .agg(
-                F.collect_list(F.struct("doc_id", "simhash")).alias(
-                    "members"
-                )
-            )
-            .filter(F.size("members") > 1)
-        )
-    if candidate_budget is not None:
-        # the budget must cover EVERY source of candidate pairs:
-        # recovery sub-buckets are bounded per member, but an enormous
-        # collapsed corpus at high R still multiplies — counting only
-        # the base buckets would let recovery silently bypass the
-        # "raise loudly instead of grinding" guarantee (r15 review)
-        buckets = buckets.persist()
-        n_cands = (
-            buckets.select(
-                F.sum(_bucket_pair_count("members")).alias("n")
-            ).collect()[0].n
-            or 0
-        )
-        if rbuckets is not None:
-            rbuckets = rbuckets.persist()
-            n_cands += (
-                rbuckets.select(
-                    F.sum(_bucket_pair_count("members")).alias("n")
-                ).collect()[0].n
-                or 0
-            )
-        if n_cands > candidate_budget:
-            buckets.unpersist()
-            if rbuckets is not None:
-                rbuckets.unpersist()
-            raise RuntimeError(
-                f"simhash_near_dupes: {n_cands} candidate pairs "
-                f"(base + recovery) exceed the budget "
-                f"({candidate_budget}); a degenerate chunk bucket is "
-                "going quadratic under the lifted cap, or "
-                "recover_rounds is multiplying a collapsed corpus. "
-                "Raise candidate_budget to proceed anyway, or restore "
-                "a finite max_bucket / lower recover_rounds."
-            )
-
-    def _expand(bkts: DataFrame) -> DataFrame:
-        return (
-            bkts.select(F.explode("members").alias("a"), "members")
-            .select("a", F.explode("members").alias("b"))
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.simhash").alias("sh_a"),
-                F.col("b.simhash").alias("sh_b"),
-            )
-        )
-
-    pairs = _expand(buckets)
-    if rbuckets is not None:
-        pairs = pairs.unionByName(_expand(rbuckets))
-    pairs = pairs.distinct()
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    out = pairs.select("doc_a", "doc_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-    if candidate_budget is not None:
-        # materialize the (bounded: within budget) result, then release
-        # the bucket caches — a lazy return would pin them indefinitely
-        out = out.localCheckpoint()
-        buckets.unpersist()
-        if rbuckets is not None:
-            rbuckets.unpersist()
-    return out
+    pairs = _bucket_pairs(
+        chunks,
+        ["chunk_id", "chunk_val"],
+        max_bucket,
+        payload="simhash",
+        recover_rounds=recover_rounds,
+        salt=_md5_salt("simrec"),
+        budget=candidate_budget,
+    ).distinct()
+    # the payload carries both signatures, so the check needs no join back
+    return pairs.select(
+        "doc_a",
+        "doc_b",
+        F.expr("bit_count(simhash_a ^ simhash_b)").alias("hamming"),
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -1385,7 +1216,7 @@ def exact_jaccard_join(
     hb = hsets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("h_b"))
     # cast BEFORE the ×10000: size() is a 32-bit int, and a doc of
     # >214,748 shingles would wrap the admission product silently
-    # (same class as _bucket_pair_count's overflow)
+    # (the overflow class the bucket-pair budget counts in bigint for)
     ov = F.size(F.array_intersect("h_a", "h_b")).cast("long")
     uni = F.col("sz_a") + F.col("sz_b") - ov
     # admit on the EXACT integer comparison ov/uni >= t (ov*10000 >=
@@ -1670,12 +1501,10 @@ def winnow_near_dupes(
     """
     t_bp = int(round(threshold * 10000))
     # build the fingerprint frame ONCE when the recovery branch will
-    # need it too (r16 review: the branch previously recomputed the
-    # pipeline's dominant exchange from scratch)
+    # need it too: it is the pipeline's dominant exchange
     fps = None
     if recover_bands > 0:
-        fps = winnow_fingerprints(df, text_col).persist()
-        fps.count()
+        fps = winnow_fingerprints(df, text_col).localCheckpoint()
     est = (
         winnow_candidate_scores(df, text_col, max_bucket, min_shared, fps)
         .filter(F.col("w_lb_bp") >= F.lit(t_bp - slack_bp))
@@ -1712,31 +1541,17 @@ def winnow_near_dupes(
             .groupBy("doc_id", "r")
             .agg(F.min("h").alias("g"))
         )
-        rw = Window.partitionBy("r", "g").orderBy("doc_id")
-        # bounded (≤ |docs|·R rows after the per-round min) and consumed
-        # by BOTH self-join aliases — checkpointed so the salted
-        # explode+md5+min+window subtree runs once, not once per alias
-        # (r16 opt round; the round-7 self-join lesson)
-        rmem = (
-            salted.withColumn("_rn", F.row_number().over(rw))
-            .filter(F.col("_rn") <= max_bucket)
-            .localCheckpoint()
-        )
-        ra = rmem.select("r", "g", F.col("doc_id").alias("doc_a"))
-        rb = rmem.select("r", "g", F.col("doc_id").alias("doc_b"))
-        rcand = (
-            ra.join(rb, ["r", "g"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
+        # min-band buckets TRUNCATE (a giant one is an exact-dup class)
+        rcand = _bucket_pairs(
+            salted, ["r", "g"], max_bucket, rule="truncate"
+        ).distinct()
         rdocs = (
             rcand.select(F.col("doc_a").alias("doc_id"))
             .unionByName(rcand.select(F.col("doc_b").alias("doc_id")))
             .distinct()
         )
-        # candidate-doc-grain and consumed by BOTH pair aliases —
-        # checkpointed for the same reason as rmem
+        # candidate-doc-grain and consumed by BOTH pair aliases, whose
+        # projections differ — checkpointed so each does not recompute it
         fpsets = (
             fps.join(rdocs, "doc_id", "left_semi")
             .groupBy("doc_id")
@@ -1762,12 +1577,8 @@ def winnow_near_dupes(
             )
             .select("doc_a", "doc_b")
         )
-        # materialize the recovered-candidate union BEFORE releasing the
-        # fingerprint cache — est is lazy, and an unpersisted fps would
-        # be recomputed through the whole fingerprint stage when the
-        # verify step finally runs it
+        # materialized: docs_in_pairs and the verify join both consume it
         est = est.unionByName(rest).distinct().localCheckpoint()
-        fps.unpersist()
     est = est.persist()
     docs_in_pairs = (
         est.select(F.col("doc_a").alias("doc_id"))
@@ -1800,29 +1611,19 @@ def winnow_candidate_scores(
     Exposed separately so q204's slack-sensitivity curve can score the
     SAME candidate set at several slack values without re-running the
     fingerprint stages. ``fps`` lets a caller that already built (and
-    persisted) the fingerprint frame share it — the recovery branch of
-    :func:`winnow_near_dupes` would otherwise recompute the pipeline's
-    dominant exchange (r16 review); a passed-in frame is the caller's
-    to persist and release.
+    materialized) the fingerprint frame share it — the recovery branch
+    of :func:`winnow_near_dupes` would otherwise recompute the
+    pipeline's dominant exchange.
     """
-    owns_fps = fps is None
-    if owns_fps:
-        fps = winnow_fingerprints(df, text_col).persist()
-        fps.count()  # eager: sizes / posting filter / self-join all consume it
+    if fps is None:
+        # sizes and the posting pairs both consume it; localCheckpoint so
+        # the pair self-join's sides share one shuffle (see
+        # :func:`_bucket_pairs`)
+        fps = winnow_fingerprints(df, text_col).localCheckpoint()
     sizes = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    posting = fps.join(
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("dfc"))
-        .filter((F.col("dfc") >= 2) & (F.col("dfc") <= max_bucket))
-        .select("fp"),
-        "fp",
-        "left_semi",
-    )
-    a = posting.select(F.col("doc_id").alias("doc_a"), "fp")
-    b = posting.select(F.col("doc_id").alias("doc_b"), "fp")
+    # posting lists over the cap DROP whole (the MOSS stopword rule)
     cand = (
-        a.join(b, "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _bucket_pairs(fps, ["fp"], max_bucket)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -1845,6 +1646,4 @@ def winnow_candidate_scores(
         )
         .localCheckpoint()
     )
-    if owns_fps:
-        fps.unpersist()
     return out

@@ -37,7 +37,11 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from salesanalytics_etl_spark.operators.similarity import cosine
+from salesanalytics_etl_spark.operators.similarity import (
+    _dot_sql,
+    _norm_sql,
+    cosine,
+)
 
 N_CLUSTERS = 16
 N_PROBE = 4
@@ -90,11 +94,6 @@ def _fit_centroids(
     return list(enumerate(_spherical_kmeans(sample, k)))
 
 
-def _sum_sql(terms: str) -> str:
-    """Left-to-right float64 sum of an array expression, starting at 0."""
-    return f"aggregate({terms}, 0.0D, (acc, v) -> acc + v)"
-
-
 def _assign(df: DataFrame, anchor_rows, vec_col: str) -> DataFrame:
     """``df`` + (cell, cell_sim): the nearest anchor of ``vec_col``.
 
@@ -113,10 +112,7 @@ def _assign(df: DataFrame, anchor_rows, vec_col: str) -> DataFrame:
         a = [float(x) for x in a_vec]
         anorm = math.sqrt(sum((x * x for x in a), 0.0))
         lits = ",".join(map(repr, a))
-        dot = _sum_sql(
-            f"zip_with({v}, CAST(split('{lits}', ',') AS ARRAY<DOUBLE>), "
-            "(x, y) -> CAST(x AS DOUBLE) * y)"
-        )
+        dot = _dot_sql(v, f"CAST(split('{lits}', ',') AS ARRAY<DOUBLE>)")
         cands.append(
             f"named_struct('s', round({dot} / (_cn * {anorm!r}D), 6), "
             f"'nid', {-int(aid)}L)"
@@ -125,9 +121,8 @@ def _assign(df: DataFrame, anchor_rows, vec_col: str) -> DataFrame:
         cands = ["CAST(NULL AS STRUCT<s: DOUBLE, nid: BIGINT>)"]
     best = cands[0] if len(cands) == 1 else f"greatest({', '.join(cands)})"
     # |c| is hoisted to one column per row instead of one per anchor
-    norm = _sum_sql(f"transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
     return (
-        df.withColumn("_cn", F.expr(f"sqrt({norm})"))
+        df.withColumn("_cn", F.expr(_norm_sql(v)))
         .withColumn("_b", F.expr(best))
         .select(
             *df.columns,
@@ -161,7 +156,7 @@ def _ivf_search(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
         )
         .join(F.broadcast(anchors))
-        .withColumn("s", F.round(cosine(F.col("q_vec"), F.col("a_vec")), 6))
+        .withColumn("s", F.round(cosine("q_vec", "a_vec"), 6))
         .withColumn("_rn", F.row_number().over(wq))
         .filter(F.col("_rn") <= n_probe)
         .select("query_id", "q_vec", F.col("anchor_id").alias("cell"))
@@ -176,9 +171,7 @@ def _ivf_search(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias(
-                "cosine_sim"
-            ),
+            F.round(cosine("q_vec", "c_vec"), 6).alias("cosine_sim"),
         )
     )
     wk = Window.partitionBy("query_id").orderBy(

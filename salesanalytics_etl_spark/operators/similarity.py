@@ -44,26 +44,29 @@ N_TABLES = 8  # independent hash tables; a pair is a candidate if it
 # N_PLANES to cut candidates by 2^Δ.
 
 
-def _dot(a, b) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _dot_sql(a: str, b: str) -> str:
+    """SQL dot product of two array expressions: float64 products summed
+    left to right from 0."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
+        "CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
     )
 
 
-def _norm(a) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+def _norm_sql(a: str) -> str:
+    """SQL Euclidean norm of an array expression, summed like
+    :func:`_dot_sql`."""
+    return (
+        f"sqrt(aggregate(transform({a}, x -> CAST(x AS DOUBLE) * "
+        "CAST(x AS DOUBLE)), 0.0D, (acc, v) -> acc + v))"
     )
 
 
-def cosine(a, b) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def cosine(a: str, b: str) -> Column:
+    """Cosine of array columns ``a`` and ``b``, built as ONE SQL
+    expression: one py4j call, where Column lambdas cost one per node."""
+    a, b = f"`{a}`", f"`{b}`"
+    return F.expr(f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")
 
 
 def _seq_sqnorms(A: np.ndarray) -> np.ndarray:
@@ -212,7 +215,7 @@ def cosine_topk_bruteforce(
     c = spread_partitions(corpus, by=id_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    sim = F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
+    sim = F.round(cosine("q_vec", "c_vec"), 6)
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -229,25 +232,6 @@ def cosine_topk_bruteforce(
         [F.desc("cosine_sim"), F.asc("neighbor_id")],
         k,
     )
-
-
-def _lsh_bucket(vec, planes: list[list[float]]) -> Column:
-    """Sign-of-projection bucket id: bit p = (vec · plane_p) > 0."""
-    bucket = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(x) for x in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(2 ** p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
 
 
 def _deterministic_planes(
@@ -268,23 +252,11 @@ def _deterministic_planes(
     return planes
 
 
-def _bucket_array(vec, dim: int) -> Column:
-    """array of (table_id*2^planes + bucket) keys, one per LSH table."""
-    keys = []
-    for t in range(N_TABLES):
-        planes = _deterministic_planes(dim, N_PLANES, table=t)
-        keys.append(
-            _lsh_bucket(vec, planes) + F.lit(t * (2 ** N_PLANES)).cast("long")
-        )
-    return F.array(*keys)
-
-
 def _bucket_array_pandas(dim: int):
     """Vectorized bucket computation: one Arrow batch → numpy matmul over
-    the stacked plane matrix → N_TABLES bucket keys per vector. The
-    per-row JVM expression form (_bucket_array) evaluates 32 interpreted
-    higher-order lambdas per vector; this is the same math at matrix speed
-    (sign bits only, so BLAS accumulation order is irrelevant here).
+    the stacked plane matrix → N_TABLES bucket keys per vector, bit p of a
+    table's key = (vec · plane_p) > 0. Sign bits only, so the BLAS
+    accumulation order is irrelevant here.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -346,7 +318,7 @@ def cosine_topk_lsh(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    sim = F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
+    sim = F.round(cosine("q_vec", "c_vec"), 6)
     scored = (
         cand.join(F.broadcast(qbase), on="query_id")
         .join(

@@ -5,6 +5,8 @@ known near-duplicates must be found, known-distinct docs must not be."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from salesanalytics_etl_spark.operators.dedup import (
@@ -633,3 +635,96 @@ def test_winnow_recovery_restores_capped_recall(spark, sf_dir):
     # recovered pairs carry the same verified jaccard as the full run
     for k in set(rec) & set(full):
         assert rec[k] == full[k]
+
+
+_memberships = st.sets(
+    st.tuples(
+        st.integers(min_value=0, max_value=3),  # bucket: few → big buckets
+        st.integers(min_value=0, max_value=40),  # doc_id
+    ),
+    max_size=40,
+)
+
+
+def _reference_bucket_pairs(members, cap, rule, rounds, salt):
+    """Pure-Python enumeration of the bucket→pair kernel: the pair
+    multiset and Σ k(k−1)/2 over kept buckets and sub-buckets."""
+    from collections import Counter, defaultdict
+
+    pairs, budget = Counter(), 0
+
+    def pair_up(ds):
+        nonlocal budget
+        budget += len(ds) * (len(ds) - 1) // 2
+        pairs.update(
+            (a, b, 7 * a + 1, 7 * b + 1) for a in ds for b in ds if a < b
+        )
+
+    by = defaultdict(list)
+    for b, d in members:
+        by[b].append(d)
+    for b, ds in by.items():
+        ds, m = sorted(ds), len(ds)
+        if rule == "truncate":
+            pair_up(ds[:cap])
+        elif m <= cap:
+            pair_up(ds)
+        if m > cap:
+            gn = -(-m // cap)
+            for r in range(rounds):
+                sub = defaultdict(list)
+                for d in ds:
+                    sub[salt(b, r, d) % gn].append(d)
+                for sd in sub.values():
+                    pair_up(sorted(sd)[:cap])
+    return pairs, budget
+
+
+@given(
+    _memberships,
+    st.integers(min_value=1, max_value=6),
+    st.sampled_from(["drop", "truncate"]),
+    st.integers(min_value=0, max_value=3),
+)
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+def test_bucket_pair_kernel_matches_enumeration(spark, members, cap, rule, rounds):
+    """The one bucket→pair kernel (drop/truncate rule, salted recovery,
+    bigint budget) equals a pure-Python enumeration: identical pair
+    multiset, and the budget raises at count−1 and passes at count."""
+    import hashlib
+    from collections import Counter
+
+    from salesanalytics_etl_spark.operators.dedup import (
+        _bucket_pairs,
+        _md5_salt,
+    )
+
+    def salt(b, r, d):
+        return int(hashlib.md5(f"t-{b}-{r}-{d}".encode()).hexdigest()[:6], 16)
+
+    want, count = _reference_bucket_pairs(members, cap, rule, rounds, salt)
+    df = spark.createDataFrame(
+        [(b, d, 7 * d + 1) for b, d in sorted(members)],
+        "b int, doc_id long, p long",
+    )
+
+    def run(budget):
+        return _bucket_pairs(
+            df,
+            ["b"],
+            cap,
+            rule=rule,
+            payload="p",
+            recover_rounds=rounds,
+            salt=_md5_salt("t"),
+            budget=budget,
+        )
+
+    got = Counter(tuple(r) for r in run(count).collect())
+    assert got == want
+    with pytest.raises(RuntimeError, match=f"^{count} candidate pairs"):
+        run(count - 1)

@@ -709,16 +709,21 @@ def test_compact_partitions_rewrites_only_crowded(spark, tmp_path):
     assert compact_partitions(spark, path, ["dt"]) == 0  # idempotent
 
 
-def test_bucket_pair_count_is_64bit(spark):
+def test_bucket_pairs_budget_is_64bit(spark):
     """The candidate-budget count must survive buckets whose pair count
     overflows 32-bit int (m >= 46342): a silent int wrap would make the
     budget see a small/negative count and wave the quadratic join
     through — the exact blow-up it exists to refuse."""
-    from salesanalytics_etl_spark.operators.dedup import _bucket_pair_count
+    import pytest
 
-    df = spark.range(1).select(F.expr("sequence(1, 50000)").alias("members"))
-    got = df.select(_bucket_pair_count("members").alias("n")).collect()[0].n
-    assert got == 50000 * 49999 // 2  # 1,249,975,000 > 2^31-1
+    from salesanalytics_etl_spark.operators.dedup import _bucket_pairs
+
+    members = spark.range(50000).select(
+        F.lit(1).alias("b"), F.col("id").alias("doc_id")
+    )
+    n = 50000 * 49999 // 2  # 1,249,975,000 > 2^31-1
+    with pytest.raises(RuntimeError, match=f"^{n} candidate pairs"):
+        _bucket_pairs(members, ["b"], 1 << 20, budget=n - 1)
 
 
 def test_merge_upsert_never_evolves_key_columns(spark):

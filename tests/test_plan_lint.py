@@ -196,12 +196,6 @@ _AGG_BUFFER_ALLOWLIST = {
     # postings list capped at max_postings=20 by the rank-gated WHEN
     # inside the collect (operators/text.py:432) — k-bounded buffer
     "q66_inverted_index": 1,
-    # r15: the simhash recovery gate runs the production pipeline
-    # INLINE (no candidate_budget -> no localCheckpoint fold): its two
-    # member collects (normal buckets + recovery sub-buckets) are both
-    # row_number-TRUNCATED at the bucket cap (4; +1 sentinel) BEFORE
-    # collecting — buffers of <= 5 structs per group, never data-scaled
-    "q201_simhash_recovery_gate": 2,
     # r16: the slack-curve query verifies its candidate set INLINE
     # (winnow_candidate_scores checkpoints, but the verify-side
     # shingle_sets does not — q204 needs the unfiltered candidate/verify
@@ -209,11 +203,13 @@ _AGG_BUFFER_ALLOWLIST = {
     # group = one document, buffer bounded by document length — the q57
     # bound
     "q204_winnow_slack_curve": 2,
-    # (calibrated r9 against every registered plan: these are the ONLY
-    # two queries whose physical plans carry a collecting aggregate —
-    # the LSH/simhash/jaccard family's per-doc collects run in eager
-    # pre-stages or fold before the registered plan; q37/q68 now ride
-    # the distributed rank path and plan none)
+    # (calibrated against every registered plan: these are the ONLY
+    # queries whose physical plans carry a collecting aggregate — the
+    # dedup families pair buckets by a window-sized self-join
+    # (operators/dedup.py:_bucket_pairs), never a member collect, and
+    # their per-doc collects run in eager pre-stages or fold before the
+    # registered plan; q37/q68 ride the distributed rank path and plan
+    # none)
 }
 
 
