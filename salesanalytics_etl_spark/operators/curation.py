@@ -33,7 +33,10 @@ from salesanalytics_etl_spark import telemetry
 
 from salesanalytics_etl_spark.functions.scalar import floor_round
 
-from salesanalytics_etl_spark.operators.dedup import spread_partitions
+from salesanalytics_etl_spark.operators.dedup import (
+    spread_partitions,
+    word_shingle_rows,
+)
 from salesanalytics_etl_spark.operators.text import (
     normalize_text,
     token_count,
@@ -66,31 +69,6 @@ def split_label(bucket) -> "F.Column":
     )
 
 
-def ngram_rows(df: DataFrame, n: int = NGRAM_N, text_col: str = "text") -> DataFrame:
-    """(doc_id, ngram) rows: token n-grams of the normalized text.
-
-    Docs shorter than n tokens emit nothing. explode(transform(sequence))
-    over the token array — all codegen'd, no Python.
-    """
-    toks = (
-        spread_partitions(df.select("doc_id", F.col(text_col)))
-        .select(
-            "doc_id",
-            tokens(F.col(text_col)).alias("toks"),
-        )
-        .filter(F.size("toks") >= n)
-    )
-    return toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(toks) - {n - 1}), "
-                f"i -> array_join(slice(toks, i, {n}), ' '))"
-            )
-        ).alias("ngram"),
-    )
-
-
 def decontaminate(
     corpus: DataFrame, benchmark: DataFrame, n: int = NGRAM_N
 ) -> DataFrame:
@@ -103,17 +81,17 @@ def decontaminate(
     the n-gram key.
     """
     bench = F.broadcast(
-        ngram_rows(benchmark, n)
-        .select(F.col("doc_id").alias("bench_id"), "ngram")
+        word_shingle_rows(benchmark, n=n)
+        .select(F.col("doc_id").alias("bench_id"), "sh")
         .distinct()
     )
     # no distinct on the corpus stream: the broadcast join filters it down
     # to contaminated hits FIRST (a distinct-before-join would shuffle the
     # entire corpus n-gram stream — the largest dataset in the plan), and
     # countDistinct dedups repeated (doc, ngram) hits in the aggregation
-    hits = ngram_rows(corpus, n).join(bench, "ngram")
+    hits = word_shingle_rows(corpus, n=n).join(bench, "sh")
     return hits.groupBy("doc_id").agg(
-        F.countDistinct("ngram").alias("n_hit_ngrams"),
+        F.countDistinct("sh").alias("n_hit_ngrams"),
         F.countDistinct("bench_id").alias("n_bench_docs"),
     )
 
@@ -328,15 +306,14 @@ def curation_pipeline(
     # AQE coalesces the (tiny) fingerprint-window shuffle output to ~1
     # partition; the n-gram explode multiplies rows 100-1000× AFTER that,
     # so the explode must re-spread first (measured 8.3s → 5.4s cold /
-    # 1.9s warm at sf0.1) — ngram_rows' internal spread_partitions does
-    # exactly that on its input projection.
-    corpus_ngrams = ngram_rows(corpus.select("doc_id", text_col), n, text_col)
+    # 1.9s warm at sf0.1) — word_shingle_rows spreads its input
+    # projection before it explodes.
     flagged = (
-        corpus_ngrams.join(
+        word_shingle_rows(corpus, text_col, n).join(
             F.broadcast(
-                ngram_rows(bench, n, text_col).select("ngram").distinct()
+                word_shingle_rows(bench, text_col, n).select("sh").distinct()
             ),
-            "ngram",
+            "sh",
         )
         .select("doc_id")
         .distinct()
@@ -581,7 +558,7 @@ def decontaminate_fuzzy(
     contamination hits, exactly like :func:`decontaminate`.
     """
     bench = F.broadcast(
-        ngram_rows(benchmark, n).select("ngram").distinct()
+        word_shingle_rows(benchmark, n=n).select("sh").distinct()
     )
     grams_expr = (
         f"transform(sequence(1, size(_toks) - {n - 1}),"
@@ -601,10 +578,10 @@ def decontaminate_fuzzy(
         )
     )
     hits = (
-        ngram_rows(corpus, n)
-        .join(bench, "ngram")
+        word_shingle_rows(corpus, n=n)
+        .join(bench, "sh")
         .groupBy("doc_id")
-        .agg(F.countDistinct("ngram").alias("n_hit_ngrams"))
+        .agg(F.countDistinct("sh").alias("n_hit_ngrams"))
     )
     return (
         denom.join(hits, "doc_id")

@@ -85,7 +85,32 @@ def spread_partitions(df: DataFrame, by: str | None = "doc_id") -> DataFrame:
     finalizes the adaptive plan and EXECUTES upstream shuffle stages at
     DataFrame-construction time — a silent whole-stage recompute per
     call.) ``by=None`` round-robins instead of hash-partitioning — use it
-    when no high-cardinality key survives the projection."""
+    when no high-cardinality key survives the projection. A streaming
+    frame is returned unchanged: the probe is batch-only, and a
+    micro-batch is as wide as its files.
+
+    Where the spread is decided — one site per text unit, and each
+    other site names a fan-out that is not a text unit:
+
+    - :func:`shingle_rows` (char k-grams), :func:`word_shingle_rows`
+      (word n-grams) and ``text._token_rows`` (tokens): every char-gram,
+      word-n-gram and token explode goes through one of these three;
+    - ``text.lang_id``: its marker regex pass is the cost, no explode;
+    - ``similarity.cosine_topk_bruteforce`` and
+      ``similarity.int8_topk_recall``: the |corpus|×|queries| embedding
+      cross-joins;
+    - ``linkage.deletion_variants``: the name deletion neighborhoods;
+    - ``curation.label_centroids``: the embedding posexplode, with
+      ``by=None`` because its only key is the low-cardinality label;
+    - ``editnoise.editnoise_pairs``: the per-token perturbation of the
+      sampled docs, before any gram exists;
+    - :func:`simhash_signatures`: its explode is over DISTINCT tokens;
+    - ``text.bigram_surprisal``: the token transitions;
+    - q83: the sentence split.
+
+    ``tests/test_plan_lint.py`` pins this set of call sites."""
+    if df.isStreaming:
+        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if len(df.inputFiles()) >= target:
@@ -98,10 +123,14 @@ def shingle_rows(
     text_col: str = "text",
     k: int = SHINGLE_K,
     with_pos: bool = False,
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(doc_id[, i], sh) rows: k-char shingles of the normalized text, WITH
-    duplicates (min-aggregation downstream is duplicate-insensitive);
-    ``with_pos`` keeps the 1-based shingle position (winnowing needs it).
+    """(doc_id[, *keep][, i], sh) rows: k-char shingles of the normalized
+    text, WITH duplicates (min-aggregation downstream is
+    duplicate-insensitive); ``with_pos`` keeps the 1-based shingle
+    position (winnowing needs it), ``keep`` passes metadata columns
+    (e.g. ``source``) through. A doc shorter than k emits one shingle:
+    its whole normalized text.
 
     Deliberately explode(sequence)+substr — flat codegen'd operators —
     rather than a ``transform`` lambda: higher-order functions are
@@ -109,17 +138,18 @@ def shingle_rows(
     shingle), an order-of-magnitude difference at scale. The norm column is
     materialized in its own projection so the regex runs once per doc.
     """
-    normed = spread_partitions(df.select("doc_id", F.col(text_col))).select(
-        "doc_id", normalize_text(F.col(text_col)).alias("norm")
-    )
+    normed = spread_partitions(
+        df.select("doc_id", *keep, F.col(text_col))
+    ).select("doc_id", *keep, normalize_text(F.col(text_col)).alias("norm"))
     exploded = normed.select(
         "doc_id",
+        *keep,
         "norm",
         F.explode(
             F.sequence(F.lit(1), F.greatest(F.length("norm") - (k - 1), F.lit(1)))
         ).alias("i"),
     )
-    cols = ["doc_id", "i"] if with_pos else ["doc_id"]
+    cols = ["doc_id", *keep, "i"] if with_pos else ["doc_id", *keep]
     return exploded.select(*cols, F.expr(f"substr(norm, i, {k})").alias("sh"))
 
 
@@ -367,6 +397,16 @@ def jaccard_verify(
     )
 
 
+def _agree_sql(a: str, b: str) -> str:
+    """SQL count of agreeing signature components ``{a}i = {b}i`` over
+    the N_HASHES columns. One SQL string, so one py4j call; a NULL side
+    (no signature) counts as no match."""
+    return " + ".join(
+        f"(case when {a}{i} = {b}{i} then 1 else 0 end)"
+        for i in range(N_HASHES)
+    )
+
+
 def estimate_filter(
     candidates: DataFrame, sigs: DataFrame, min_agree: int
 ) -> DataFrame:
@@ -380,26 +420,17 @@ def estimate_filter(
     hash joins on doc id + 32 codegen'd comparisons per pair, instead of
     materializing shingle sets and running array_intersect on each.
     """
-    # selectExpr: one py4j call per frame (r16 opt round)
+    # selectExpr: one py4j call per frame
     a = sigs.selectExpr(
         "doc_id as doc_a", *[f"mh{i} as _a{i}" for i in range(N_HASHES)]
     )
     b = sigs.selectExpr(
         "doc_id as doc_b", *[f"mh{i} as _b{i}" for i in range(N_HASHES)]
     )
-    # one SQL-string expression (single py4j call) — the former reduce
-    # of when/otherwise Columns cost ~5 py4j round-trips per term at
-    # DataFrame-construction time (r16 opt round); identical semantics
-    agree = F.expr(
-        " + ".join(
-            f"(case when _a{i} = _b{i} then 1 else 0 end)"
-            for i in range(N_HASHES)
-        )
-    )
     return (
         candidates.join(a, "doc_a")
         .join(b, "doc_b")
-        .filter(agree >= min_agree)
+        .filter(F.expr(_agree_sql("_a", "_b")) >= min_agree)
         .select("doc_a", "doc_b")
     )
 
@@ -519,6 +550,16 @@ def _portable_perm_constants(n: int = N_HASHES) -> list[int]:
     ]
 
 
+def _portable_signatures(rows: DataFrame, key: str) -> DataFrame:
+    """(key, mh0..mh31): the portable xor-mask min-wise signatures of
+    ``(key, h)`` hash rows. Each aggregate is one SQL string (one py4j
+    call)."""
+    perms = _portable_perm_constants()
+    return rows.groupBy(key).agg(
+        *[F.expr(f"min(h ^ {perms[i]}L) as mh{i}") for i in range(N_HASHES)]
+    )
+
+
 def _portable_banded(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, band_id, band_key) rows of the PORTABLE MinHash pipeline:
     md5-prefix shingle hashes → xor-mask min-wise signatures → md5 band
@@ -532,19 +573,10 @@ def _portable_banded(df: DataFrame, text_col: str = "text") -> DataFrame:
     — a full-corpus distinct was the single hottest stage of the first
     cut: 9.1s, see ROUND6.md).
     """
-    perms = _portable_perm_constants()
     raw = shingle_rows(df, text_col).select(
         "doc_id", md5_token_hash(F.col("sh")).alias("h")
     )
-    # SQL-string expressions (one py4j call each) — see estimate_filter's
-    # note on driver-side construction cost (r16 opt round); identical
-    # expression trees after parsing
-    sigs = raw.groupBy("doc_id").agg(
-        *[
-            F.expr(f"min(h ^ {perms[i]}L) as mh{i}")
-            for i in range(N_HASHES)
-        ]
-    )
+    sigs = _portable_signatures(raw, "doc_id")
     band_keys = [
         F.expr(
             "md5(concat_ws(',', "
@@ -749,31 +781,10 @@ def source_minhash_signatures(
     state store keeps |sources| × N_HASHES running mins and every
     micro-batch folds in map-side. No distinct anywhere (min is
     duplicate-insensitive)."""
-    perms = _portable_perm_constants()
-    base = df.select(key_col, text_col)
-    if not df.isStreaming:  # inputFiles() probe is batch-only
-        base = spread_partitions(base, by=None)
-    n = base.select(key_col, normalize_text(F.col(text_col)).alias("norm"))
-    h = (
-        n.select(
-            key_col,
-            F.explode(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length("norm") - 4, F.lit(1))
-                )
-            ).alias("i"),
-            "norm",
-        )
-        .select(key_col, F.expr("substr(norm, i, 5)").alias("g"))
-        .select(key_col, md5_token_hash(F.col("g")).alias("h"))
+    h = shingle_rows(df, text_col, keep=(key_col,)).select(
+        key_col, md5_token_hash(F.col("sh")).alias("h")
     )
-    # SQL-string aggregates (one py4j call each — r16 opt round)
-    return h.groupBy(key_col).agg(
-        *[
-            F.expr(f"min(h ^ {perms[i]}L) as mh{i}")
-            for i in range(N_HASHES)
-        ]
-    )
+    return _portable_signatures(h, key_col)
 
 
 def signature_pair_estimates(
@@ -792,9 +803,8 @@ def signature_pair_estimates(
     bounded."""
     sigs = sigs.localCheckpoint()
     # selectExpr / SQL-string forms: one py4j call per frame instead of
-    # two per column (r16 opt round); identical projections. key_col is
-    # backtick-quoted (r16 advice) so identifiers that F.col() tolerated
-    # (dots, spaces, reserved words) keep parsing.
+    # two per column. key_col is backtick-quoted so identifiers that
+    # F.col() tolerated (dots, spaces, reserved words) keep parsing.
     a = sigs.selectExpr(
         f"`{key_col}` as source_a",
         *[f"mh{i} as a{i}" for i in range(N_HASHES)],
@@ -803,12 +813,7 @@ def signature_pair_estimates(
         f"`{key_col}` as source_b",
         *[f"mh{i} as b{i}" for i in range(N_HASHES)],
     )
-    matching = F.expr(
-        " + ".join(
-            f"(case when a{i} = b{i} then 1 else 0 end)"
-            for i in range(N_HASHES)
-        )
-    )
+    matching = F.expr(_agree_sql("a", "b"))
     return (
         a.join(F.broadcast(b), F.col("source_a") < F.col("source_b"))
         .select(
@@ -834,27 +839,16 @@ def source_shingle_jaccard(df: DataFrame, text_col: str = "text") -> DataFrame:
     self-join (only shingles in 2+ sources produce rows) and bounded
     |sources|² rollups. Unordered; callers apply their own ORDER BY.
     """
-    n = spread_partitions(df.select("source", text_col), by=None).select(
-        "source", normalize_text(F.col(text_col)).alias("norm")
-    )
     sh = (
-        n.select(
-            "source",
-            F.explode(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length("norm") - 4, F.lit(1))
-                )
-            ).alias("i"),
-            "norm",
-        )
-        .select("source", F.expr("substr(norm, i, 5)").alias("g"))
+        shingle_rows(df, text_col, keep=("source",))
+        .select("source", "sh")
         .distinct()
     )
     sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col("source").alias("source_a"), "g")
-    b = sh.select(F.col("source").alias("source_b"), "g")
+    a = sh.select(F.col("source").alias("source_a"), "sh")
+    b = sh.select(F.col("source").alias("source_b"), "sh")
     inter = (
-        a.join(b, "g")
+        a.join(b, "sh")
         .filter(F.col("source_a") < F.col("source_b"))
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("ov"))
@@ -1289,21 +1283,11 @@ def duplicate_spans(
     for AQE to broadcast them in practice). The span text itself never
     shuffles. Collision risk at 128 bits is negligible at any corpus size.
     """
-    normed = spread_partitions(df.select("doc_id", F.col(text_col))).select(
-        "doc_id", tokens(F.col(text_col)).alias("w")
+    spans = (
+        word_shingle_rows(df, text_col, n)
+        .select("doc_id", F.md5("sh").alias("span_fp"))
+        .persist()  # consumed twice: the dup aggregate and the flag join-back
     )
-    spans = normed.select(
-        "doc_id",
-        "w",
-        F.explode(
-            F.when(
-                F.size("w") >= n, F.sequence(F.lit(1), F.size("w") - (n - 1))
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("i"),
-    ).select(
-        "doc_id",
-        F.md5(F.expr(f"concat_ws(' ', slice(w, i, {n}))")).alias("span_fp"),
-    ).persist()  # consumed twice: the dup aggregate and the flag join-back
     dup = (
         spans.groupBy("span_fp")
         .agg(F.min("doc_id").alias("_mn"), F.max("doc_id").alias("_mx"))

@@ -45,6 +45,7 @@ from salesanalytics_etl_spark.operators.dedup import (
     N_SIM_BITS,
     ROWS_PER_BAND,
     SHINGLE_K,
+    _agree_sql,
     _portable_perm_constants,
     md5_token_hash,
     spread_partitions,
@@ -254,6 +255,45 @@ def _sided(pairs: DataFrame) -> DataFrame:
     ).select("doc_id", "s.side", "s.txt")
 
 
+def _gram_rows(sided: DataFrame, k: int, with_pos: bool = False) -> DataFrame:
+    """(doc_id, side[, i], h): md5-hashed char k-grams of each side's
+    text. A side shorter than k emits NO gram: its shingle set is empty
+    (it has no signature in the production pipeline either), where
+    ``dedup.shingle_rows`` would emit one truncated phantom gram and skew
+    tiny-doc pairs."""
+    ex = sided.filter(F.length("txt") >= k).select(
+        "doc_id",
+        "side",
+        F.explode(F.sequence(F.lit(1), F.length("txt") - (k - 1))).alias("i"),
+        "txt",
+    )
+    cols = ["doc_id", "side", "i"] if with_pos else ["doc_id", "side"]
+    return ex.select(
+        *cols, md5_token_hash(F.expr(f"substr(txt, i, {k})")).alias("h")
+    )
+
+
+def _pair_jaccard(h_rows: DataFrame, out: str) -> DataFrame:
+    """(doc_id, out): exact original-vs-variant Jaccard of the hash sets
+    in ``(doc_id, side, h)`` rows, in integer basis points
+    (floor(ov/un·1e4 + .5)). No pre-distinct needed: the (doc_id, h)
+    groupBy's ``max`` flags are duplicate-insensitive."""
+    per_h = h_rows.groupBy("doc_id", "h").agg(
+        F.max((F.col("side") == "o").cast("int")).alias("in_o"),
+        F.max((F.col("side") == "v").cast("int")).alias("in_v"),
+    )
+    return (
+        per_h.groupBy("doc_id")
+        .agg(
+            F.sum("in_o").alias("sz_o"),
+            F.sum("in_v").alias("sz_v"),
+            F.sum(F.col("in_o") * F.col("in_v")).alias("ov"),
+        )
+        .withColumn("un", F.col("sz_o") + F.col("sz_v") - F.col("ov"))
+        .select("doc_id", F.expr("(ov * 20000 + un) div (2 * un)").alias(out))
+    )
+
+
 def editnoise_lsh_audit(
     df: DataFrame,
     text_col: str = "text",
@@ -280,49 +320,22 @@ def editnoise_lsh_audit(
 
     Scale shape: one explode->hash scan of 2x the sampled corpus, one
     doc-keyed 64-column min-aggregation (map-side combinable), one
-    (doc, shingle) distinct for the exact side, two doc-keyed rollups.
+    (doc, shingle) groupBy for the exact side, two doc-keyed rollups.
     No pair join; output <=10 rows at any volume.
     """
     perms = _portable_perm_constants()
     pairs = editnoise_pairs(
         df, text_col, drop_mod=drop_mod, sample_mod=sample_mod, edits=edits
     )
-    # a side shorter than the gram size contributes an EMPTY shingle set
-    # (it has no signature in the production pipeline either) — the
-    # pre-r14 greatest(...,1) bound emitted one truncated phantom gram
-    # for such sides, skewing tiny-doc pairs (r13 ADVICE). A pair where
-    # NEITHER side has a k-gram drops out of the audit; a pair with one
-    # sub-gram side lands in decile 0 with est 0 (in mixed mode an
-    # insert/replace can give the VARIANT grams a tiny original lacks,
-    # so either side can be the empty one).
-    ex = (
-        _sided(pairs)
-        .filter(F.length("txt") >= SHINGLE_K)
-        .select(
-            "doc_id",
-            "side",
-            F.explode(
-                F.sequence(
-                    F.lit(1), F.length("txt") - (SHINGLE_K - 1)
-                )
-            ).alias("i"),
-            "txt",
-        )
-        .select(
-            "doc_id",
-            "side",
-            md5_token_hash(F.expr(f"substr(txt, i, {SHINGLE_K})")).alias(
-                "h"
-            ),
-        )
-    )
+    # a pair where NEITHER side has a k-gram drops out of the audit; a
+    # pair with one sub-gram side lands in decile 0 with est 0 (in mixed
+    # mode an insert/replace can give the VARIANT grams a tiny original
+    # lacks, so either side can be the empty one)
+    ex = _gram_rows(_sided(pairs), SHINGLE_K)
     # signatures of BOTH sides in one doc-keyed agg: min is
     # duplicate-insensitive, so the raw (never distinct'd) shingle
-    # stream feeds 2 x N_HASHES conditional partial-mins
-    # built as SQL strings — one py4j call per expression instead of the
-    # former ~10-call Column-combinator loops, which made DataFrame
-    # construction (driver Python) a multi-second fixed cost per audit
-    # (measured r16 opt round; semantics identical)
+    # stream feeds 2 x N_HASHES conditional partial-mins, each one SQL
+    # string (one py4j call)
     sig_aggs = [
         F.expr(
             f"min(case when side = '{side}' then h ^ {perms[i]}L end)"
@@ -332,15 +345,9 @@ def editnoise_lsh_audit(
         for i in range(N_HASHES)
     ]
     sigs = ex.groupBy("doc_id").agg(*sig_aggs)
-    # when-form (not a bare cast of the equality): a sub-gram-length
-    # side leaves its mins NULL, and NULL must count as "no match", not
-    # poison the whole sum
-    match_cnt = F.expr(
-        " + ".join(
-            f"(case when o{i} = v{i} then 1 else 0 end)"
-            for i in range(N_HASHES)
-        )
-    )
+    # a sub-gram-length side leaves its mins NULL, which counts as "no
+    # match" rather than poisoning the whole sum
+    match_cnt = F.expr(_agree_sql("o", "v"))
     band_hits = F.expr(
         " + ".join(
             # a band collides iff all its rows agree — exactly the
@@ -360,26 +367,9 @@ def editnoise_lsh_audit(
         match_cnt.alias("match_cnt"),
         band_hits.alias("band_hits"),
     )
-    # exact Jaccard: per-hash side membership, then per-doc sizes/overlap
-    # — all doc-keyed. No pre-distinct: the (doc_id, h) groupBy's ``max``
-    # flags are duplicate-insensitive, so the former ``ex.distinct()``
-    # exchange was redundant with the groupBy's own partial aggregation
-    # (guide §2.4; r16 opt round, results bit-identical)
-    per_h = ex.groupBy("doc_id", "h").agg(
-        F.max((F.col("side") == "o").cast("int")).alias("in_o"),
-        F.max((F.col("side") == "v").cast("int")).alias("in_v"),
-    )
-    stats = per_h.groupBy("doc_id").agg(
-        F.sum("in_o").alias("sz_o"),
-        F.sum("in_v").alias("sz_v"),
-        F.sum(F.col("in_o") * F.col("in_v")).alias("ov"),
-    )
     per = (
-        stats.join(sigstats, "doc_id")
-        .withColumn("un", F.col("sz_o") + F.col("sz_v") - F.col("ov"))
-        .withColumn(
-            "j_bp", F.expr("(ov * 20000 + un) div (2 * un)")
-        )
+        _pair_jaccard(ex, "j_bp")
+        .join(sigstats, "doc_id")
         .withColumn(
             "est_bp",
             F.expr(
@@ -538,54 +528,13 @@ def editnoise_winnow_audit(
         df, text_col, drop_mod=drop_mod, sample_mod=sample_mod, edits=edits
     )
     sided = _sided(pairs)
-
-    def _gram_rows(k: int, with_pos: bool) -> DataFrame:
-        # sub-gram-length sides emit EMPTY sets (no phantom truncated
-        # gram — r13 ADVICE); see editnoise_lsh_audit for the semantics
-        ex = sided.filter(F.length("txt") >= k).select(
-            "doc_id",
-            "side",
-            F.explode(
-                F.sequence(F.lit(1), F.length("txt") - (k - 1))
-            ).alias("i"),
-            "txt",
-        )
-        cols = ["doc_id", "side", "i"] if with_pos else ["doc_id", "side"]
-        return ex.select(
-            *cols,
-            md5_token_hash(F.expr(f"substr(txt, i, {k})")).alias("h"),
-        )
-
-    def _pair_jaccard(distinct_h: DataFrame, out: str) -> DataFrame:
-        per_h = distinct_h.groupBy("doc_id", "h").agg(
-            F.max((F.col("side") == "o").cast("int")).alias("in_o"),
-            F.max((F.col("side") == "v").cast("int")).alias("in_v"),
-        )
-        return (
-            per_h.groupBy("doc_id")
-            .agg(
-                F.sum("in_o").alias("sz_o"),
-                F.sum("in_v").alias("sz_v"),
-                F.sum(F.col("in_o") * F.col("in_v")).alias("ov"),
-            )
-            .withColumn("un", F.col("sz_o") + F.col("sz_v") - F.col("ov"))
-            .select(
-                "doc_id",
-                F.expr("(ov * 20000 + un) div (2 * un)").alias(out),
-            )
-        )
-
-    # no pre-distinct on either side: _pair_jaccard's (doc_id, h) groupBy
-    # aggregates with duplicate-insensitive ``max`` flags, so the former
-    # ``.distinct()`` calls were redundant gram-grain exchanges (guide
-    # §2.4; r16 opt round, results bit-identical)
-    exact = _pair_jaccard(_gram_rows(SHINGLE_K, with_pos=False), "j_bp")
+    exact = _pair_jaccard(_gram_rows(sided, SHINGLE_K), "j_bp")
     w = (
         Window.partitionBy("doc_id", "side")
         .orderBy("i")
         .rowsBetween(-3, 0)
     )
-    winnowed = _gram_rows(8, with_pos=True).select(
+    winnowed = _gram_rows(sided, 8, with_pos=True).select(
         "doc_id", "side", F.min("h").over(w).alias("h")
     )
     winnow = _pair_jaccard(winnowed, "w_bp")

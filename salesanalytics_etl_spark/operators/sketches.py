@@ -385,12 +385,14 @@ def bloom_decontaminate_audit(
     rebuild the filter bit-for-bit, so even the measured FP count is
     hash-checked.
     """
-    from salesanalytics_etl_spark.operators.curation import ngram_rows
-    from salesanalytics_etl_spark.operators.dedup import md5_token_hash
+    from salesanalytics_etl_spark.operators.dedup import (
+        md5_token_hash,
+        word_shingle_rows,
+    )
 
     def grams(df: DataFrame) -> DataFrame:
-        return ngram_rows(df, n).select(
-            "doc_id", md5_token_hash(F.col("ngram")).alias("h")
+        return word_shingle_rows(df, n=n).select(
+            "doc_id", md5_token_hash(F.col("sh")).alias("h")
         )
 
     def positions(df: DataFrame) -> DataFrame:

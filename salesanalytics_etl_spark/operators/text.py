@@ -191,9 +191,12 @@ def tokens(text: Column) -> Column:
     return F.split(normalize_text(cjk_segment(text)), r"\s+")
 
 
-def _token_rows(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, term) rows: whitespace tokens of the normalized text —
-    the shared tokenization for TF-IDF / inverted index / repetition.
+def _token_rows(
+    df: DataFrame, text_col: str = "text", keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """(doc_id[, *keep], term) rows: whitespace tokens of the normalized
+    text — the shared tokenization for TF-IDF / inverted index /
+    repetition / source KL; ``keep`` passes metadata columns through.
 
     Spread before the explode: a single-file corpus scan plans as one
     task, and the ~300× token fan-out would otherwise run serially on it
@@ -201,8 +204,11 @@ def _token_rows(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     from salesanalytics_etl_spark.operators.dedup import spread_partitions
 
-    return spread_partitions(df.select("doc_id", F.col(text_col))).select(
+    return spread_partitions(
+        df.select("doc_id", *keep, F.col(text_col))
+    ).select(
         "doc_id",
+        *keep,
         F.explode(tokens(F.col(text_col))).alias("term"),
     ).filter(F.length("term") > 0)
 
@@ -321,12 +327,7 @@ def source_kl_divergence(df: DataFrame, text_col: str = "text") -> DataFrame:
     per-source totals are a |sources|-row broadcast join; the scoring
     join is per-source-vocab ⋈ corpus-vocab on term (Zipf-small).
     """
-    from salesanalytics_etl_spark.operators.dedup import spread_partitions
-
-    toks = spread_partitions(df.select("doc_id", "source", F.col(text_col))).select(
-        "source",
-        F.explode(tokens(F.col(text_col))).alias("term"),
-    ).filter(F.length("term") > 0)
+    toks = _token_rows(df, text_col, keep=("source",))
     sv = (
         toks.groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("ctf_s"))

@@ -563,29 +563,14 @@ def q162_centroid_distance_matrix(
     "formula.",
 )
 def q163_trigram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from salesanalytics_etl_spark.operators.dedup import (
-        normalize_text,
-        spread_partitions,
-    )
+    from salesanalytics_etl_spark.operators.dedup import shingle_rows
 
     (documents,) = _t(spark, sf_dir, "documents")
-    n = spread_partitions(documents.select("doc_id", "text")).select(
-        "doc_id", normalize_text(F.col("text")).alias("norm")
-    )
-    tg = n.select(
-        "doc_id",
-        F.explode(
-            F.sequence(
-                F.lit(1), F.greatest(F.length("norm") - 2, F.lit(1))
-            )
-        ).alias("i"),
-        "norm",
-    ).select("doc_id", F.expr("substr(norm, i, 3)").alias("g"))
-    return tg.groupBy("doc_id").agg(
+    return shingle_rows(documents, k=3).groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_trigrams"),
-        F.countDistinct("g").cast("bigint").alias("n_distinct"),
+        F.countDistinct("sh").cast("bigint").alias("n_distinct"),
         floor_round(
-            F.countDistinct("g").cast("double") / F.count(F.lit(1)), 4
+            F.countDistinct("sh").cast("double") / F.count(F.lit(1)), 4
         ).alias("ttr"),
     )
 

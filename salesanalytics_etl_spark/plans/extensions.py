@@ -1822,22 +1822,10 @@ def q80_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q81_bigram_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from salesanalytics_etl_spark.operators.dedup import spread_partitions
-    from salesanalytics_etl_spark.operators.text import tokens
+    from salesanalytics_etl_spark.operators.dedup import word_shingle_rows
 
     (documents,) = _t(spark, sf_dir, "documents")
-    toks = spread_partitions(documents.select("doc_id", "text")).select(
-        tokens(F.col("text")).alias("toks")
-    )
-    pairs = toks.filter(F.size("toks") >= 2).select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1), "
-                "i -> concat_ws(' ', element_at(toks, i), "
-                "element_at(toks, i + 1)))"
-            )
-        ).alias("pair")
-    )
+    pairs = word_shingle_rows(documents, n=2).select(F.col("sh").alias("pair"))
     counted = pairs.groupBy("pair").agg(
         F.count(F.lit(1)).alias("n_occurrences")
     )

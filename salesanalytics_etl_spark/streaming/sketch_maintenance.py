@@ -53,7 +53,8 @@ def read_documents_stream(
 
 def maintain_source_signatures(stream: DataFrame) -> DataFrame:
     """The streaming signature aggregation — the batch builder applied
-    to a streaming frame (it skips the batch-only repartition probe)."""
+    to a streaming frame (``spread_partitions`` returns a stream
+    unchanged, so the shingle explode runs on each micro-batch as is)."""
     return source_minhash_signatures(stream)
 
 

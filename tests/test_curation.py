@@ -11,11 +11,11 @@ import pytest
 from salesanalytics_etl_spark.operators.curation import (
     decontaminate,
     language_rebalance,
-    ngram_rows,
     pack_sequences,
     quantize_embeddings,
     source_overlap,
 )
+from salesanalytics_etl_spark.operators.dedup import word_shingle_rows
 
 THIRTEEN = "a b c d e f g h i j k l m"  # exactly 13 tokens -> one 13-gram
 
@@ -40,12 +40,12 @@ def bench_docs(spark):
 
 def test_ngram_rows_count_and_boundaries(spark):
     df = spark.createDataFrame([(1, THIRTEEN + " n")], ["doc_id", "text"])
-    grams = [r.ngram for r in ngram_rows(df, n=13).collect()]
+    grams = [r.sh for r in word_shingle_rows(df, n=13).collect()]
     assert len(grams) == 2  # 14 tokens -> two 13-grams
     assert grams[0].startswith("a b c") and grams[1].endswith("m n")
     # short doc emits nothing
     short = spark.createDataFrame([(2, "a b c")], ["doc_id", "text"])
-    assert ngram_rows(short, n=13).count() == 0
+    assert word_shingle_rows(short, n=13).count() == 0
 
 
 def test_decontaminate_flags_only_real_overlap(corpus, bench_docs):
@@ -416,7 +416,7 @@ def test_language_rebalance_zero_token_language_keeps_all(spark):
 def test_curation_pipeline_honors_text_col(spark):
     """Every stage (including the decontamination n-gram joins) must read
     the caller's text column — a corpus without a 'text' column used to
-    crash in ngram_rows."""
+    crash in the n-gram generator."""
     from salesanalytics_etl_spark.operators.curation import curation_pipeline
 
     filler = " ".join(f"w{i}" for i in range(15))

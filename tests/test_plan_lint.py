@@ -525,3 +525,67 @@ def test_session_sets_no_adaptive_config(spark):
         if k.startswith("spark.sql.adaptive.")
     ]
     assert not pinned, pinned
+
+
+# Every spread_partitions call site in the package, keyed by (module,
+# enclosing function), with the reason it spreads. The text units spread
+# once each, in their row generator; the other sites multiply rows that
+# are not text units.
+_SPREAD_SITES = {
+    ("operators/dedup.py", "shingle_rows"): "char k-gram generator",
+    ("operators/dedup.py", "word_shingle_rows"): "word n-gram generator",
+    ("operators/text.py", "_token_rows"): "token generator",
+    ("operators/text.py", "lang_id"): "marker regex pass, no explode",
+    ("operators/similarity.py", "cosine_topk_bruteforce"):
+        "embedding cross-join re-rank",
+    ("operators/similarity.py", "int8_topk_recall"):
+        "quantized embedding cross-join re-rank",
+    ("operators/linkage.py", "deletion_variants"): "name deletion variants",
+    ("operators/curation.py", "label_centroids"):
+        "embedding posexplode, keyed only by a low-cardinality label",
+    ("operators/editnoise.py", "editnoise_pairs"):
+        "per-token perturbation before any gram exists",
+    ("operators/dedup.py", "simhash_signatures"): "distinct-token explode",
+    ("operators/text.py", "bigram_surprisal"): "token transitions",
+    ("plans/extensions.py", "q83_sentence_dedup_stats"): "sentence split",
+}
+
+
+def _spread_call_sites() -> list[tuple[str, str]]:
+    import ast
+    from pathlib import Path
+
+    import salesanalytics_etl_spark
+
+    def calls(node, fn_name):
+        # each call is credited to its innermost enclosing function
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from calls(child, child.name)
+                continue
+            if isinstance(child, ast.Call) and "spread_partitions" in (
+                getattr(child.func, "id", None),
+                getattr(child.func, "attr", None),
+            ):
+                yield fn_name
+            yield from calls(child, fn_name)
+
+    root = Path(salesanalytics_etl_spark.__file__).parent
+    return [
+        (path.relative_to(root).as_posix(), fn_name)
+        for path in sorted(root.rglob("*.py"))
+        for fn_name in calls(ast.parse(path.read_text()), None)
+    ]
+
+
+def test_spread_partitions_sites_are_pinned():
+    """Corpus-width spreads are decided at these twelve sites only: a new
+    char-gram, word-n-gram or token fan-out goes through its generator
+    instead of spreading again, and a removed site is a plan change that
+    needs its own measurement."""
+    sites = _spread_call_sites()
+    assert len(sites) == len(set(sites)), sites
+    added = sorted(set(sites) - set(_SPREAD_SITES))
+    removed = sorted(set(_SPREAD_SITES) - set(sites))
+    assert not added and not removed, f"added {added}, removed {removed}"
+    assert len(sites) == 12

@@ -40,8 +40,10 @@ from tools import scale_probe  # noqa: E402  (reads env at import)
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from salesanalytics_etl_spark.operators.curation import ngram_rows
-    from salesanalytics_etl_spark.operators.dedup import md5_token_hash
+    from salesanalytics_etl_spark.operators.dedup import (
+        md5_token_hash,
+        word_shingle_rows,
+    )
     from salesanalytics_etl_spark.operators.sketches import (
         bloom_decontaminate_audit,
     )
@@ -67,8 +69,8 @@ def main() -> None:
 
     # benchmark gram domain + filter load, by the audit's own md5 scheme
     bench_h = (
-        ngram_rows(bench, n)
-        .select(md5_token_hash(F.col("ngram")).alias("h"))
+        word_shingle_rows(bench, n=n)
+        .select(md5_token_hash(F.col("sh")).alias("h"))
         .distinct()
     )
     n_grams = bench_h.count()
