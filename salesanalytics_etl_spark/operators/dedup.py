@@ -125,12 +125,15 @@ def shingle_rows(
     with_pos: bool = False,
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(doc_id[, *keep][, i], sh) rows: k-char shingles of the normalized
-    text, WITH duplicates (min-aggregation downstream is
-    duplicate-insensitive); ``with_pos`` keeps the 1-based shingle
-    position (winnowing needs it), ``keep`` passes metadata columns
-    (e.g. ``source``) through. A doc shorter than k emits one shingle:
-    its whole normalized text.
+    """(doc_id[, *keep][, i, norm], sh) rows: k-char shingles of the
+    normalized text, WITH duplicates (min-aggregation downstream is
+    duplicate-insensitive); ``keep`` passes metadata columns (e.g.
+    ``source``) through. A doc shorter than k emits one shingle: its
+    whole normalized text. ``with_pos`` keeps the 1-based shingle
+    position ``i`` and the normalized text ``norm``, so a caller can
+    derive a longer gram from the same positions (see
+    :func:`_winnow_rows`); project ``norm`` away before any sort or
+    shuffle, since every row of a doc carries the whole text.
 
     Deliberately explode(sequence)+substr — flat codegen'd operators —
     rather than a ``transform`` lambda: higher-order functions are
@@ -149,7 +152,7 @@ def shingle_rows(
             F.sequence(F.lit(1), F.greatest(F.length("norm") - (k - 1), F.lit(1)))
         ).alias("i"),
     )
-    cols = ["doc_id", *keep, "i"] if with_pos else ["doc_id", *keep]
+    cols = ["doc_id", *keep, "i", "norm"] if with_pos else ["doc_id", *keep]
     return exploded.select(*cols, F.expr(f"substr(norm, i, {k})").alias("sh"))
 
 
@@ -158,8 +161,10 @@ def shingle_sets(sh_rows: DataFrame) -> DataFrame:
     return sh_rows.groupBy("doc_id").agg(F.collect_set("sh").alias("shingles"))
 
 
-def minhash_signatures(sh_rows: DataFrame) -> DataFrame:
-    """Per-doc MinHash signature as N_HASHES columns ``mh0..mh31``.
+def minhash_signatures(sh_rows: DataFrame, *also: Column) -> DataFrame:
+    """Per-doc MinHash signature as N_HASHES columns ``mh0..mh31``, plus
+    the ``also`` aggregates over the same rows (``sh`` and its hash
+    ``h`` are in scope).
 
     The variable-length shingle string is hashed ONCE to a long; the 32
     per-function hashes are fixed-width ``xxhash64(i, h)`` re-hashes of
@@ -168,14 +173,23 @@ def minhash_signatures(sh_rows: DataFrame) -> DataFrame:
     at sf0.1). ``min`` partials combine map-side; the only shuffle is on
     doc_id.
     """
-    hashed = sh_rows.select("doc_id", F.xxhash64("sh").alias("h"))
+    hashed = sh_rows.select("doc_id", "sh", F.xxhash64("sh").alias("h"))
     # SQL-string aggregates (one py4j call each; int literal {i} is the
     # same IntegerType operand F.lit(i) produced — identical hashes)
     aggs = [
         F.expr(f"min(xxhash64({i}, h)) as mh{i}")
         for i in range(N_HASHES)
     ]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*aggs, *also)
+
+
+def _minhash_doc_rows(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, mh0..mh31, shingles): each document's production
+    signature and its shingle set, from one aggregate over its shingle
+    rows."""
+    return minhash_signatures(
+        shingle_rows(df, text_col), F.collect_set("sh").alias("shingles")
+    )
 
 
 def _md5_salt(tag: str) -> Callable[[list[str]], Column]:
@@ -236,12 +250,13 @@ def _bucket_pairs(
     ``budget``: Σ m(m−1)/2 in bigint over the kept buckets and
     sub-buckets (m after truncation) is counted before any pair
     expansion, and a count above ``budget`` raises. The count and the
-    pairs are two jobs, so ``members`` is materialized once for both.
+    pairs are two jobs, so the sized members (the window's shuffle and
+    sort) are localCheckpointed once for both.
     """
-    if budget is not None:
-        members = members.localCheckpoint()
     cols = [*keys, "doc_id", *([payload] if payload else [])]
     sized = _sized(members.select(*cols), keys)
+    if budget is not None:
+        sized = sized.localCheckpoint()
     kept = [(_capped(sized, keys, cap, rule), keys)]
     if recover_rounds > 0:
         rkeys = [*keys, "_r", "_g"]
@@ -446,10 +461,14 @@ def minhash_near_dupes(
     """End-to-end MinHash+LSH near-duplicate pairs with exact verification.
 
     Banding proposes candidates; the signature-estimate filter kills the
-    hopeless ones cheaply; exact Jaccard verifies the survivors. Shingle
-    sets are only materialized for docs that survive the estimate filter
-    (semi-join): at scale candidates ≪ corpus, so the collect_set shuffle
-    is proportional to the near-dup tail, not the data.
+    hopeless ones cheaply; exact Jaccard verifies the survivors. Each
+    document is shingled once: one aggregate over its shingle rows gives
+    its 32 signature lanes AND its shingle set, and banding, the
+    estimate filter and the verify all read that one checkpointed row.
+    The trade: the checkpoint holds every document's set (bounded by the
+    document's length), not only the candidates', in exchange for one
+    corpus read, normalize and explode instead of two, and no second
+    collect_set exchange.
 
     ``min_agree`` defaults to ``N_HASHES·(threshold − 0.125)`` — the
     verify threshold minus ~1.5σ of the 32-hash estimate (σ≈0.088 at
@@ -483,55 +502,34 @@ def minhash_near_dupes(
     """
     if min_agree is None:
         min_agree = max(1, int(N_HASHES * (threshold - 0.125)))
-    # NB: shingle rows feed both the signature and verification branches
-    # but are NOT materialized — the exploded rows are the LARGEST dataset
-    # in the pipeline (≫ corpus), so caching them trades memory/spill for
-    # a recompute that is codegen'd and scan-parallel; measured no faster
-    # persisted at sf0.1. The signatures (|corpus| × 32 longs) ARE
-    # materialized, eagerly: banding and the estimate filter both consume
-    # them, and a lazy cache lets concurrent stages each recompute the
-    # shingle explode + signature aggregation (measured 18s → 11s).
-    # localCheckpoint, not persist: the bucket self-join's two sides then
-    # share one shuffle (AQE does not reuse an exchange over a cached
-    # scan), and there is no cache to release.
-    rows = shingle_rows(df, text_col)
-    sigs = minhash_signatures(rows).localCheckpoint()
+    # The per-doc row (lanes + shingle set) is materialized, eagerly:
+    # banding, the estimate filter and both verify join sides consume
+    # it, and lazily each would re-run the shingle explode and the
+    # aggregation. localCheckpoint, not persist: the bucket self-join's
+    # two sides then share one shuffle (AQE does not reuse an exchange
+    # over a cached scan), and there is no cache to release.
+    sigs = _minhash_doc_rows(df, text_col).localCheckpoint()
     # The estimate filter exists to protect the verify stage from a flood
     # of hopeless candidates; when banding already produced a small set,
     # its two signature joins cost more than the verify work they'd save
     # — so it only runs past a candidate budget. At 100 TB the budget is
-    # always exceeded and the filter always runs; locally it saves a job.
-    raw = lsh_candidates(sigs, max_bucket, recover_rounds).persist()
-    if raw.count() > 200_000:
-        cands = estimate_filter(raw, sigs, min_agree).persist()
-        cands.count()
-        raw.unpersist()
-    else:
-        cands = raw
-    docs_in_pairs = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
+    # always exceeded and the filter always runs. The count materializes
+    # the candidates for the verify that reads them next.
+    cands = lsh_candidates(sigs, max_bucket, recover_rounds).localCheckpoint(
+        eager=False
     )
-    # semi-join on the exploded shingle rows, not on the documents: a
-    # doc-level semi-join shuffles full text payloads and replans worse
-    # (measured +70% at sf0.1); filtering the codegen'd shingle stream is
-    # cheaper than re-shuffling the corpus
-    # persist: jaccard_verify consumes sets through TWO aliases (a and b
-    # sides of the pair join) — unpersisted, each alias re-runs the full
-    # shingle explode + collect_set, and the two stages schedule
-    # concurrently so neither hits shuffle reuse (measured 7.6s → 1.5s
-    # for the verify step at sf0.1)
-    sets = shingle_sets(
-        rows.join(docs_in_pairs, "doc_id", "left_semi")
-    ).persist()
-    # materialize the (tiny) verified-pair set, then release the
-    # intermediate caches — a lazy return would pin cands/sets in executor
-    # memory for every call of the operator
-    out = jaccard_verify(cands, sets, threshold).localCheckpoint()
-    cands.unpersist()
-    sets.unpersist()
-    return out
+    if cands.count() > 200_000:
+        cands = estimate_filter(cands, sigs, min_agree)
+    else:
+        # At most 200 000 pairs (3.2 MB): broadcast them, so the verify
+        # streams the per-doc rows in parallel. The checkpoint keeps the
+        # self-join's size estimate (terabytes), so unhinted the per-doc
+        # rows were broadcast and every pair verified in one task
+        # (2.7 s of q25 at sf0.1).
+        cands = F.broadcast(cands)
+    # materialize the (tiny) verified-pair set: the caller's actions then
+    # never re-run the pipeline
+    return jaccard_verify(cands, sigs, threshold).localCheckpoint()
 
 
 def _portable_perm_constants(n: int = N_HASHES) -> list[int]:
@@ -550,33 +548,36 @@ def _portable_perm_constants(n: int = N_HASHES) -> list[int]:
     ]
 
 
-def _portable_signatures(rows: DataFrame, key: str) -> DataFrame:
-    """(key, mh0..mh31): the portable xor-mask min-wise signatures of
-    ``(key, h)`` hash rows. Each aggregate is one SQL string (one py4j
-    call)."""
+def _portable_signatures(
+    sh_rows: DataFrame, key: str, *also: Column
+) -> DataFrame:
+    """(key, mh0..mh31[, also]): the portable xor-mask min-wise
+    signatures of ``(key, sh)`` shingle rows over their md5-prefix hash
+    ``h``, plus the ``also`` aggregates over the same rows (``h`` is in
+    scope). Each aggregate is one SQL string (one py4j call).
+
+    The raw hash rows are NOT deduplicated or persisted: min-aggregation
+    is duplicate-insensitive, so the signature stage consumes the
+    codegen'd explode stream directly (map-side combine, no distinct
+    shuffle of the largest dataset in the pipeline — a full-corpus
+    distinct was the single hottest stage of the first cut: 9.1s, see
+    ROUND6.md)."""
     perms = _portable_perm_constants()
-    return rows.groupBy(key).agg(
-        *[F.expr(f"min(h ^ {perms[i]}L) as mh{i}") for i in range(N_HASHES)]
+    return (
+        sh_rows.select(key, md5_token_hash(F.col("sh")).alias("h"))
+        .groupBy(key)
+        .agg(
+            *[F.expr(f"min(h ^ {perms[i]}L) as mh{i}") for i in range(N_HASHES)],
+            *also,
+        )
     )
 
 
-def _portable_banded(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, band_id, band_key) rows of the PORTABLE MinHash pipeline:
-    md5-prefix shingle hashes → xor-mask min-wise signatures → md5 band
-    keys (N_BANDS × ROWS_PER_BAND). Shared by the q109 replay join and
-    the q116 bucket audit so both see the identical banding.
-
-    The raw (doc_id, h) shingle-hash rows are NOT deduplicated or
-    persisted: min-aggregation is duplicate-insensitive, so the signature
-    stage consumes the codegen'd explode stream directly (map-side
-    combine, no distinct shuffle of the largest dataset in the pipeline
-    — a full-corpus distinct was the single hottest stage of the first
-    cut: 9.1s, see ROUND6.md).
-    """
-    raw = shingle_rows(df, text_col).select(
-        "doc_id", md5_token_hash(F.col("sh")).alias("h")
-    )
-    sigs = _portable_signatures(raw, "doc_id")
+def _portable_bands(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_key) rows of a portable signature frame:
+    md5 band keys over N_BANDS × ROWS_PER_BAND lanes. The q109 pipeline
+    and the q116 bucket audit both band through here, so both see the
+    identical buckets."""
     band_keys = [
         F.expr(
             "md5(concat_ws(',', "
@@ -591,6 +592,23 @@ def _portable_banded(df: DataFrame, text_col: str = "text") -> DataFrame:
     return sigs.select(
         "doc_id",
         F.posexplode(F.array(*band_keys)).alias("band_id", "band_key"),
+    )
+
+
+def _portable_doc_rows(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, mh0..mh31, hset): each document's portable signature and
+    its shingle-hash set, from one aggregate over its shingle rows."""
+    return _portable_signatures(
+        shingle_rows(df, text_col), "doc_id", F.collect_set("h").alias("hset")
+    )
+
+
+def _portable_banded(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, band_id, band_key) rows of the PORTABLE MinHash pipeline
+    over a documents frame: md5-prefix shingle hashes → xor-mask
+    min-wise signatures → md5 band keys."""
+    return _portable_bands(
+        _portable_signatures(shingle_rows(df, text_col), "doc_id")
     )
 
 
@@ -669,53 +687,31 @@ def minhash_near_dupes_portable(
     band_key), verify joins on doc ids.
     """
     t_bp = int(round(threshold * 10000))
-    raw = _bucket_pairs(
-        _portable_banded(df, text_col),
+    # one corpus pass: each doc's lanes and its hash set, checkpointed —
+    # banding and both verify join sides read it (see minhash_near_dupes)
+    sigs = _portable_doc_rows(df, text_col).localCheckpoint()
+    cands = _bucket_pairs(
+        _portable_bands(sigs),
         ["band_id", "band_key"],
         max_bucket,
         recover_rounds=recover_rounds,
         salt=_md5_salt("lshrec"),
-    )
-    cands = raw.distinct().persist()
-    # consumed by docs_in_pairs and the verify joins
-    cands.count()
-    docs_in_pairs = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # set semantics (collect_set) applied only to candidate docs' rows —
-    # candidates ≪ corpus at scale, so this shuffle is proportional to
-    # the near-dup tail, not the data. Re-shingle FROM THE SOURCE after
-    # semi-joining the documents themselves: a semi-join on the raw
-    # hash stream would re-run the shingle explode + md5 over the FULL
-    # corpus before filtering (the join can't push below the explode).
+    ).distinct()
     # Verify staging matches the production path (jaccard_verify):
     # bounded per-doc hash-set arrays + native array_intersect on the
     # pair rows, NOT a per-hash-row expansion join — the expansion
     # shuffles |pairs| × |doc set| rows where this joins |pairs| rows
     # carrying two bounded arrays (measured ~2× on the verify stage).
     # The threshold compare stays exact integer basis points.
-    cand_docs = df.join(docs_in_pairs, "doc_id", "left_semi")
-    # persisted: BOTH join aliases below (hs_a, hs_b) consume sh_sets,
-    # and a self-join recomputes an unpersisted subtree once per alias
-    # (the q108 lesson — this was ~1.5s of the q109 floor at sf0.1)
-    sh_sets = (
-        shingle_rows(cand_docs, text_col)
-        .select("doc_id", md5_token_hash(F.col("sh")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hset"))
-        .persist()
-    )
-    out = (
+    return (
         cands.join(
-            sh_sets.select(
+            sigs.select(
                 F.col("doc_id").alias("doc_a"), F.col("hset").alias("hs_a")
             ),
             "doc_a",
         )
         .join(
-            sh_sets.select(
+            sigs.select(
                 F.col("doc_id").alias("doc_b"), F.col("hset").alias("hs_b")
             ),
             "doc_b",
@@ -735,9 +731,6 @@ def minhash_near_dupes_portable(
         )
         .localCheckpoint()
     )
-    sh_sets.unpersist()
-    cands.unpersist()
-    return out
 
 
 def source_minhash_jaccard(
@@ -755,7 +748,7 @@ def source_minhash_jaccard(
     ``N_HASHES`` longs, and the pairwise compare runs on a
     ``|sources|``-row frame. No distinct anywhere — min-aggregation is
     duplicate-insensitive, the same trick the doc-grain signature stage
-    uses (see :func:`_portable_banded`).
+    uses (see :func:`_portable_signatures`).
 
     Portable hash family throughout (md5-prefix shingle hashes, xor-mask
     permutations from ``md5('perm-'||i)``), so a DuckDB oracle replays
@@ -781,10 +774,9 @@ def source_minhash_signatures(
     state store keeps |sources| × N_HASHES running mins and every
     micro-batch folds in map-side. No distinct anywhere (min is
     duplicate-insensitive)."""
-    h = shingle_rows(df, text_col, keep=(key_col,)).select(
-        key_col, md5_token_hash(F.col("sh")).alias("h")
+    return _portable_signatures(
+        shingle_rows(df, text_col, keep=(key_col,)), key_col
     )
-    return _portable_signatures(h, key_col)
 
 
 def signature_pair_estimates(
@@ -1087,10 +1079,10 @@ def exact_jaccard_join(
     # worst admit a false candidate (killed by the verifier) or inflate
     # one pair's intersection by 1 (P ~ 2^-45 per pair, and the DuckDB
     # twin computes on raw strings — the gate would surface it).
-    # persisted + EAGER (same lesson as minhash_near_dupes: concurrent
-    # consumers of a lazy persist each recompute the full upstream before
-    # any cache partition lands): sets_rows feeds sizes/dfreq/prefix-join
-    # and the verify-side semi-join
+    # persisted + EAGER (concurrent consumers of a lazy persist each
+    # recompute the full upstream before any cache partition lands):
+    # sets_rows feeds sizes/dfreq/prefix-join and the verify-side
+    # semi-join
     sets_rows = (
         raw_rows.select("doc_id", F.xxhash64("sh").alias("sh"))
         .distinct()
@@ -1384,29 +1376,75 @@ WINNOW_W = 4  # window width: min over WINNOW_W consecutive k-gram hashes
 WINNOW_SLACK_BP = 3000
 
 
-def winnow_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, fp) DISTINCT winnowed document fingerprints.
+def _winnow_rows(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, sh, fp): one row per SHINGLE_K-gram position ``i`` of the
+    normalized text — the one row generator of the winnow pipeline, for
+    its fingerprints and its verify sets alike.
 
-    Schleimer et al.'s winnowing (public algorithm, the MOSS sampler):
-    hash every WINNOW_K-char gram of the normalized text, keep the MIN
-    hash of each sliding window of WINNOW_W grams, dedupe. Guarantees a
-    shared fingerprint for any common run >= WINNOW_W + WINNOW_K - 1
-    chars while storing ~2/(WINNOW_W+1) of the gram hashes. Fingerprints
-    are 60-bit longs from the portable md5-prefix family, so the whole
-    downstream pipeline (and the q202 oracle) is engine-replayable.
-    Shape: one explode scan + one (doc_id)-partitioned running-min window
-    + a distinct keyed by doc — data-grain, no funnel (the q60 plan).
+    ``sh`` is the SHINGLE_K-gram at ``i``. Where a WINNOW_K-gram starts
+    at ``i`` (``i <= greatest(len - WINNOW_K + 1, 1)``; a doc shorter
+    than WINNOW_K has one, its whole text), ``fp`` is the winnowed
+    fingerprint of that position (Schleimer et al.'s winnowing, the MOSS
+    sampler): the MIN md5-prefix hash over the window of WINNOW_W
+    WINNOW_K-grams ending at ``i``. ``fp`` is NULL on the other rows,
+    which sort after every valid one, so no window reaches them.
+    Fingerprints are 60-bit longs from the portable hash family, so the
+    whole downstream pipeline (and the q202 oracle) is engine-replayable.
+    One explode and one (doc_id)-partitioned running-min window over
+    rows that the spread already partitioned by doc_id.
     """
-    rows = shingle_rows(df, text_col, k=WINNOW_K, with_pos=True).withColumn(
-        "kh",
-        F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("long"),
+    rows = shingle_rows(df, text_col, with_pos=True).select(
+        "doc_id",
+        "i",
+        "sh",
+        F.when(
+            F.col("i")
+            <= F.greatest(F.length("norm") - (WINNOW_K - 1), F.lit(1)),
+            md5_token_hash(F.expr(f"substr(norm, i, {WINNOW_K})")),
+        ).alias("kh"),
     )
     w = (
         Window.partitionBy("doc_id")
         .orderBy("i")
         .rowsBetween(-(WINNOW_W - 1), 0)
     )
-    return rows.select("doc_id", F.min("kh").over(w).alias("fp")).distinct()
+    return rows.select(
+        "doc_id",
+        "sh",
+        F.when(F.col("kh").isNotNull(), F.min("kh").over(w)).alias("fp"),
+    )
+
+
+def winnow_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, fp) DISTINCT winnowed document fingerprints (see
+    :func:`_winnow_rows`). Guarantees a shared fingerprint for any
+    common run >= WINNOW_W + WINNOW_K - 1 chars while storing
+    ~2/(WINNOW_W+1) of the gram hashes."""
+    return (
+        _winnow_rows(df, text_col)
+        .filter(F.col("fp").isNotNull())
+        .select("doc_id", "fp")
+        .distinct()
+    )
+
+
+def winnow_doc_sets(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, fset, shingles), localCheckpointed: each document's
+    distinct winnow fingerprints and its SHINGLE_K-gram set, from one
+    aggregate over :func:`_winnow_rows`. The aggregate reads rows the
+    spread already partitioned by doc_id, so it adds no exchange; the
+    postings, the recovery bands and the exact verify all read this
+    one checkpoint, whose per-doc sets are bounded by document length.
+    """
+    return (
+        _winnow_rows(df, text_col)
+        .groupBy("doc_id")
+        .agg(
+            F.collect_set("fp").alias("fset"),
+            F.collect_set("sh").alias("shingles"),
+        )
+        .localCheckpoint()
+    )
 
 
 def winnow_near_dupes(
@@ -1425,8 +1463,10 @@ def winnow_near_dupes(
 
     Stages (every join keyed, no cross product):
 
-    1. **Fingerprint**: :func:`winnow_fingerprints` — |fp rows| ~
-       2/(w+1) of the gram rows, the cheapest sketch of the four.
+    1. **Fingerprint**: :func:`winnow_doc_sets` — each doc's
+       fingerprint set (~2/(w+1) of its gram hashes, the cheapest
+       sketch of the four) and its 5-gram verify set, from one corpus
+       pass, checkpointed.
     2. **Inverted index**: documents sharing a fingerprint are
        candidates. Fingerprints held by > ``max_bucket`` docs are
        DROPPED WHOLESALE (the MOSS stopword rule): a fingerprint that
@@ -1447,8 +1487,7 @@ def winnow_near_dupes(
        the measured estimator bias, not a fudge.
     5. **Exact verify**: 5-gram shingle Jaccard on survivors only
        (:func:`jaccard_verify` — same verifier as the MinHash path),
-       semi-joined shingle sets so the collect_set shuffle is
-       proportional to the candidate tail, not the corpus.
+       reading the sets of step 1's checkpoint.
 
     Recall is set by the fingerprint sample (any pair whose shared runs
     all sit inside capped fingerprints is missed — q203 measures the
@@ -1477,26 +1516,22 @@ def winnow_near_dupes(
     byte-identical to the plain pipeline. All md5 — the whole branch
     replays in DuckDB (q206 value-gates it).
 
-    Scale: fingerprint rows ≪ shingle rows; the self-join shuffles on
-    fp with bounded buckets; n_shared groupBy shuffles on the pair key;
-    verify joins on doc id. At 100 TB the dominant exchange is the
-    fingerprint distinct — ~2/(w+1) of the MinHash signature build's
-    input, with no 32-hash aggregation on top.
+    Scale: the per-doc aggregate rides the spread's doc_id exchange;
+    the self-join shuffles the ~2/(w+1)-sized postings on fp with
+    bounded buckets; n_shared groupBy shuffles on the pair key; verify
+    joins on doc id.
     """
     t_bp = int(round(threshold * 10000))
-    # build the fingerprint frame ONCE when the recovery branch will
-    # need it too: it is the pipeline's dominant exchange
-    fps = None
-    if recover_bands > 0:
-        fps = winnow_fingerprints(df, text_col).localCheckpoint()
+    sets = winnow_doc_sets(df, text_col)
     est = (
-        winnow_candidate_scores(df, text_col, max_bucket, min_shared, fps)
+        winnow_candidate_scores(df, text_col, max_bucket, min_shared, sets)
         .filter(F.col("w_lb_bp") >= F.lit(t_bp - slack_bp))
         .select("doc_a", "doc_b")
     )
     if recover_bands > 0:
         salted = (
-            fps.select(
+            sets.select("doc_id", F.explode("fset").alias("fp"))
+            .select(
                 "doc_id",
                 F.explode(
                     F.sequence(F.lit(0), F.lit(recover_bands - 1))
@@ -1505,22 +1540,14 @@ def winnow_near_dupes(
             )
             .withColumn(
                 "h",
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("winrec-"),
-                                F.col("r").cast("string"),
-                                F.lit("-"),
-                                F.col("fp").cast("string"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
+                md5_token_hash(
+                    F.concat(
+                        F.lit("winrec-"),
+                        F.col("r").cast("string"),
+                        F.lit("-"),
+                        F.col("fp").cast("string"),
+                    )
+                ),
             )
             .groupBy("doc_id", "r")
             .agg(F.min("h").alias("g"))
@@ -1529,23 +1556,10 @@ def winnow_near_dupes(
         rcand = _bucket_pairs(
             salted, ["r", "g"], max_bucket, rule="truncate"
         ).distinct()
-        rdocs = (
-            rcand.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(rcand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        # candidate-doc-grain and consumed by BOTH pair aliases, whose
-        # projections differ — checkpointed so each does not recompute it
-        fpsets = (
-            fps.join(rdocs, "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("fp").alias("fset"))
-            .localCheckpoint()
-        )
-        fa = fpsets.select(
+        fa = sets.select(
             F.col("doc_id").alias("doc_a"), F.col("fset").alias("fset_a")
         )
-        fb = fpsets.select(
+        fb = sets.select(
             F.col("doc_id").alias("doc_b"), F.col("fset").alias("fset_b")
         )
         i_ = F.size(F.array_intersect("fset_a", "fset_b")).cast("long")
@@ -1561,21 +1575,8 @@ def winnow_near_dupes(
             )
             .select("doc_a", "doc_b")
         )
-        # materialized: docs_in_pairs and the verify join both consume it
-        est = est.unionByName(rest).distinct().localCheckpoint()
-    est = est.persist()
-    docs_in_pairs = (
-        est.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(est.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sets = shingle_sets(
-        shingle_rows(df, text_col).join(docs_in_pairs, "doc_id", "left_semi")
-    ).persist()
-    out = jaccard_verify(est, sets, threshold).localCheckpoint()
-    est.unpersist()
-    sets.unpersist()
-    return out
+        est = est.unionByName(rest).distinct()
+    return jaccard_verify(est, sets, threshold).localCheckpoint()
 
 
 def winnow_candidate_scores(
@@ -1583,7 +1584,7 @@ def winnow_candidate_scores(
     text_col: str = "text",
     max_bucket: int = MAX_BUCKET,
     min_shared: int = 2,
-    fps: DataFrame | None = None,
+    sets: DataFrame | None = None,
 ) -> DataFrame:
     """Stages 1-4 of :func:`winnow_near_dupes` WITHOUT the slack cut:
     (doc_a, doc_b, n_shared, w_lb_bp) for every pair sharing >=
@@ -1594,33 +1595,23 @@ def winnow_candidate_scores(
     so both the intersection is under- and the union over-stated).
     Exposed separately so q204's slack-sensitivity curve can score the
     SAME candidate set at several slack values without re-running the
-    fingerprint stages. ``fps`` lets a caller that already built (and
-    materialized) the fingerprint frame share it — the recovery branch
-    of :func:`winnow_near_dupes` would otherwise recompute the
-    pipeline's dominant exchange.
+    fingerprint stages. ``sets`` is the :func:`winnow_doc_sets` frame
+    of ``df``, for a caller that verifies from it too; it is built when
+    not given. The result is lazy: a caller that reads it more than
+    once checkpoints it.
     """
-    if fps is None:
-        # sizes and the posting pairs both consume it; localCheckpoint so
-        # the pair self-join's sides share one shuffle (see
-        # :func:`_bucket_pairs`)
-        fps = winnow_fingerprints(df, text_col).localCheckpoint()
-    sizes = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    if sets is None:
+        sets = winnow_doc_sets(df, text_col)
+    # one posting per (fp, doc), carrying the doc's fingerprint count
+    postings = sets.select(
+        "doc_id", F.explode("fset").alias("fp"), F.size("fset").alias("sz")
+    )
     # posting lists over the cap DROP whole (the MOSS stopword rule)
-    cand = (
-        _bucket_pairs(fps, ["fp"], max_bucket)
-        .groupBy("doc_a", "doc_b")
+    return (
+        _bucket_pairs(postings, ["fp"], max_bucket, payload="sz")
+        .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
-    )
-    sz_a = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")
-    )
-    sz_b = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")
-    )
-    out = (
-        cand.join(sz_a, "doc_a")
-        .join(sz_b, "doc_b")
         .withColumn("un", F.col("sz_a") + F.col("sz_b") - F.col("n_shared"))
         .select(
             "doc_a",
@@ -1628,6 +1619,4 @@ def winnow_candidate_scores(
             "n_shared",
             F.expr("(n_shared * 20000 + un) div (2 * un)").alias("w_lb_bp"),
         )
-        .localCheckpoint()
     )
-    return out

@@ -3889,47 +3889,40 @@ def _winnow_slack_oracle() -> str:
     "exactly at 0.5. n_verified rising with slack = true pairs the "
     "unslacked filter would throw away (the q189/q199 estimator bias "
     "made operational); n_candidates is the extra verify work the "
-    "slack buys it with. 4 fixed rows; the non-equi join against the "
-    "4-row slack frame is a broadcast nested loop over the tiny "
-    "candidate-score frame (operators/dedup.py:winnow_candidate_scores)",
+    "slack buys it with. 4 fixed rows from one conditional aggregation "
+    "over the tiny candidate-score frame, verified from the same "
+    "checkpointed per-doc frame (operators/dedup.py:winnow_doc_sets)",
 )
 def q204_winnow_slack_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from salesanalytics_etl_spark.operators.dedup import (
         jaccard_verify,
-        shingle_rows,
-        shingle_sets,
         winnow_candidate_scores,
+        winnow_doc_sets,
     )
 
     (documents,) = _t(spark, sf_dir, "documents")
-    scores = winnow_candidate_scores(documents)
-    docs_in_pairs = (
-        scores.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(scores.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # persisted like winnow_near_dupes' verify stage: jaccard_verify
-    # consumes the sets frame through BOTH pair aliases, and unpersisted
-    # it computed twice (r16 opt round, stage metrics)
-    sets = shingle_sets(
-        shingle_rows(documents).join(docs_in_pairs, "doc_id", "left_semi")
-    ).persist()
+    slacks = [0, 1000, 2000, 3000]
+    # the scores and the verify read one checkpointed per-doc frame; the
+    # scores are checkpointed too, since the verify and the tally both
+    # read them
+    sets = winnow_doc_sets(documents)
+    scores = winnow_candidate_scores(documents, sets=sets).localCheckpoint()
+    # only a pair inside the widest slack's cut is ever counted as
+    # verified, so only those pay for the exact verify
     verified = jaccard_verify(
-        scores.select("doc_a", "doc_b"), sets, 0.5
+        scores.filter(F.col("w_lb_bp") >= 5000 - max(slacks)).select(
+            "doc_a", "doc_b"
+        ),
+        sets,
+        0.5,
     ).select("doc_a", "doc_b", F.lit(1).alias("ok"))
     sc = scores.join(verified, ["doc_a", "doc_b"], "left").withColumn(
         "ok", F.coalesce(F.col("ok"), F.lit(0))
     )
-    # r16 opt round: ONE conditional-aggregation pass over the scored
-    # candidates instead of the former non-equi LEFT join against a
-    # 4-row slack frame — the BroadcastNestedLoopJoin held the whole
-    # verify subtree unmaterialized beneath its build side. Per slack s:
-    # n_candidates = count(w_lb_bp >= 5000-s), n_verified = sum(ok)
-    # under the same cut — exactly what the left join + groupBy
-    # produced, including the no-match slack row (count 0/sum 0 via the
-    # unconditional aggregate + stack). Values identical; oracle
-    # unchanged.
-    slacks = [0, 1000, 2000, 3000]
+    # ONE conditional-aggregation pass over the scored candidates. Per
+    # slack s: n_candidates = count(w_lb_bp >= 5000-s), n_verified =
+    # sum(ok) under the same cut; a slack no candidate passes reads
+    # count 0 / sum 0 through the unconditional aggregate + stack.
     aggs = []
     for s in slacks:
         cond = F.col("w_lb_bp") >= F.lit(5000 - s)
@@ -3946,7 +3939,7 @@ def q204_winnow_slack_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     stack_args = ", ".join(
         f"{s}, coalesce(c{s}, 0L), coalesce(v{s}, 0L)" for s in slacks
     )
-    out = (
+    return (
         sc.agg(*aggs)
         .select(
             F.expr(
@@ -3955,12 +3948,7 @@ def q204_winnow_slack_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .orderBy("slack_bp")
-        # 4 rows; materialized so the sets pin can be released here
-        # instead of leaking into the sweep (the lazy-persist trap)
-        .localCheckpoint()
     )
-    sets.unpersist()
-    return out
 
 
 def _winnow_cluster_oracle() -> str:

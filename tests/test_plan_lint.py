@@ -196,20 +196,14 @@ _AGG_BUFFER_ALLOWLIST = {
     # postings list capped at max_postings=20 by the rank-gated WHEN
     # inside the collect (operators/text.py:432) — k-bounded buffer
     "q66_inverted_index": 1,
-    # r16: the slack-curve query verifies its candidate set INLINE
-    # (winnow_candidate_scores checkpoints, but the verify-side
-    # shingle_sets does not — q204 needs the unfiltered candidate/verify
-    # join live): two per-DOC shingle collect_sets (a and b join sides),
-    # group = one document, buffer bounded by document length — the q57
-    # bound
-    "q204_winnow_slack_curve": 2,
     # (calibrated against every registered plan: these are the ONLY
     # queries whose physical plans carry a collecting aggregate — the
     # dedup families pair buckets by a window-sized self-join
     # (operators/dedup.py:_bucket_pairs), never a member collect, and
-    # their per-doc collects run in eager pre-stages or fold before the
-    # registered plan; q37/q68 ride the distributed rank path and plan
-    # none)
+    # their per-doc sets (shingles, hashes, winnow fingerprints) are
+    # collected once into a localCheckpointed per-doc frame before the
+    # registered plan, q204's verify included; q37/q68 ride the
+    # distributed rank path and plan none)
 }
 
 
