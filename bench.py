@@ -121,12 +121,15 @@ def write_local_bench(
     errors: dict[str, str],
     sf: float | None,
     path: Path | None = None,
+    codegen_compiles: dict[str, int] | None = None,
 ) -> Path:
     """Persist the UNTRIMMED sweep: full per-query timings and two-pass
     floors for every query. The stdout line is budget-trimmed for the
     driver's tail (r11 dropped 16 sweep entries and cut qmin to 5), so
     this file is the only place round-over-round floor-vs-floor deltas
-    stay possible for the whole surface (r11 verdict item 2)."""
+    stay possible for the whole surface (r11 verdict item 2).
+    ``codegen_compiles`` holds the classes each pass compiled: a class
+    the codegen cache still held is not recompiled."""
     path = path or local_bench_path()
     payload = {
         "metric": "total_query_wall_seconds",
@@ -137,6 +140,7 @@ def write_local_bench(
         "queries": {n: round(t, 3) for n, t in sorted(timings.items())},
         "floors": {n: round(t, 3) for n, t in sorted(floor.items())},
         "errors": dict(errors),
+        "codegen_compiles": codegen_compiles,
     }
     path.write_text(json.dumps(payload, indent=1) + "\n")
     return path
@@ -149,6 +153,7 @@ def main() -> None:
 
     from salesanalytics_etl_spark.plans import all_queries
     from salesanalytics_etl_spark.session import get_spark
+    from salesanalytics_etl_spark.telemetry import codegen_compiles
 
     # No console progress bar: the driver parses the JSON line from a
     # bounded stdout TAIL, and progress fragments printed after the line
@@ -209,11 +214,14 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
+    compiled = codegen_compiles(spark)
     for name in sorted(queries):
         try:
             timings[name] = time_one(name)
         except Exception as ex:  # one broken query must not zero the round
             errors[name] = f"{type(ex).__name__}: {ex}"[:200]
+    compiles = {"sweep": codegen_compiles(spark) - compiled}
+    compiled += compiles["sweep"]
 
     # Second pass, REVERSED order, over every query the sweep charged
     # ≥0.5 s: a sweep attributes neighbor effects (JIT warmup order, heap
@@ -229,6 +237,7 @@ def main() -> None:
                 retime[name] = min(timings[name], time_one(name))
             except Exception:
                 pass
+    compiles["floor_pass"] = codegen_compiles(spark) - compiled
 
     # Isolated-floor totals ride along without blowing the ~2000-char
     # stdout-tail budget: "value_min" (sweep total with each ≥0.5s query
@@ -263,7 +272,7 @@ def main() -> None:
     keep = [*top10, *material][:12]
 
     try:
-        write_local_bench(timings, floor, errors, sf)
+        write_local_bench(timings, floor, errors, sf, codegen_compiles=compiles)
     except OSError:
         pass  # read-only checkout must never cost the driver its line
     print(format_bench_line(timings, floor, keep, sf, errors))

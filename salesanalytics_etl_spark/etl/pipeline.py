@@ -30,8 +30,8 @@ four final counts without ``target_dir``). Most of these jobs are one
 task, so on a multi-core driver they overlap instead of queueing. Table
 directories are swapped only after every write of wave 3 has succeeded:
 a failed batch swaps no table and leaves no stage behind. The swapped
-tables are re-read concurrently too (each read infers its schema in a
-job).
+tables are re-read with the schemas they were written with, so no read
+fires a schema-inference job.
 
 The swap is ``sources.writers.swap_in``, the same one
 ``merge_upsert_table`` and the reject sink use, and a crash mid-swap is
@@ -150,7 +150,8 @@ def run_pipeline(
     four final counts without ``target_dir``). With ``target_dir``, no
     table directory is swapped until every write of wave 3 has succeeded
     (a failed batch leaves all four tables as they were), and the four
-    swapped tables are then re-read concurrently.
+    swapped tables are then re-read with the schemas they were written
+    with.
 
     Returns final table states + reject/row counts (the reference's
     [COUNT]/[WARN] reporting, :295-299).
@@ -265,7 +266,8 @@ def run_pipeline(
     for dst in paths.values():
         swap_in(dst)
     counts = dict(zip(final, n_final))
-    # Each read infers its schema in a job of its own.
-    reads = (partial(spark.read.parquet, dst) for dst in paths.values())
-    tables = dict(zip(paths, _concurrently(spark, *reads)))
+    tables = {
+        name: spark.read.schema(final[name].schema).parquet(dst)
+        for name, dst in paths.items()
+    }
     return PipelineResult(tables=tables, reject_counts=reject_counts, counts=counts)

@@ -94,17 +94,21 @@ def _fit_centroids(
     return list(enumerate(_spherical_kmeans(sample, k)))
 
 
-def _assign(df: DataFrame, anchor_rows, vec_col: str) -> DataFrame:
-    """``df`` + (cell, cell_sim): the nearest anchor of ``vec_col``.
+def _anchor_sims(vec_col: str, anchor_rows) -> list[str]:
+    """One ``named_struct('s', round(cosine, 6), 'nid', -anchor_id)`` SQL
+    expression per anchor, over ``vec_col`` and its norm column ``_cn``.
+    The structs compare as (desc sim, asc anchor id), the
+    cross-engine-stable total order, so ``greatest`` picks the nearest
+    anchor and a descending ``sort_array`` ranks them.
 
-    The argmax is ONE SQL expression (one py4j call): ``greatest`` over
-    ``(round(cosine, 6), -anchor_id)`` structs reproduces the (desc sim,
-    asc id) total order. Each anchor is ONE string literal of shortest
-    round-trip reprs cast to array<double>: the optimizer folds it to the
-    same doubles that 64 ``0.5D``-style literals parse to, without the
-    parser's ~10 ms per 64 such literals. |a| is summed in Python in the
-    same left-to-right float64 order as the SQL |c|, so the quotient
-    equals ``similarity.cosine``'s bit for bit.
+    Each anchor is ONE string literal of shortest round-trip reprs cast
+    to array<double>: the optimizer folds it to the same doubles that 64
+    ``0.5D``-style literals parse to, without the parser's ~10 ms per 64
+    such literals. |a| is summed in Python in the same left-to-right
+    float64 order as the SQL |c|, so the quotient equals
+    ``similarity.cosine``'s bit for bit. An empty quantizer (an empty
+    corpus samples no anchors) yields one NULL struct, which matches no
+    cell.
     """
     v = f"`{vec_col}`"
     cands = []
@@ -117,12 +121,22 @@ def _assign(df: DataFrame, anchor_rows, vec_col: str) -> DataFrame:
             f"named_struct('s', round({dot} / (_cn * {anorm!r}D), 6), "
             f"'nid', {-int(aid)}L)"
         )
-    if not cands:  # an empty corpus samples no anchors
-        cands = ["CAST(NULL AS STRUCT<s: DOUBLE, nid: BIGINT>)"]
+    return cands or ["CAST(NULL AS STRUCT<s: DOUBLE, nid: BIGINT>)"]
+
+
+def _with_norm(df: DataFrame, vec_col: str) -> DataFrame:
+    # |v| is hoisted to one column per row instead of one per anchor
+    return df.withColumn("_cn", F.expr(_norm_sql(f"`{vec_col}`")))
+
+
+def _assign(df: DataFrame, anchor_rows, vec_col: str) -> DataFrame:
+    """``df`` + (cell, cell_sim): the nearest anchor of ``vec_col``, the
+    ``greatest`` of :func:`_anchor_sims` — ONE SQL expression (one py4j
+    call), n_cells struct comparisons per row, no shuffle."""
+    cands = _anchor_sims(vec_col, anchor_rows)
     best = cands[0] if len(cands) == 1 else f"greatest({', '.join(cands)})"
-    # |c| is hoisted to one column per row instead of one per anchor
     return (
-        df.withColumn("_cn", F.expr(_norm_sql(v)))
+        _with_norm(df, vec_col)
         .withColumn("_b", F.expr(best))
         .select(
             *df.columns,
@@ -142,24 +156,23 @@ def _ivf_search(
     vec_col: str,
 ) -> DataFrame:
     """Top-k by rounded cosine (ties by neighbor_id) among the members of
-    each query's ``n_probe`` nearest cells. The probes (bounded: queries
-    × n_probe rows) carry ``q_vec`` and broadcast into the corpus
-    assignment, so the corpus is scanned once and never shuffled before
-    the final per-query top-k."""
-    anchors = corpus.sparkSession.createDataFrame(
-        [(int(a), [float(x) for x in v]) for a, v in anchor_rows],
-        "anchor_id bigint, a_vec array<double>",
+    each query's ``n_probe`` nearest cells. The probes are ranked map-side
+    from the same anchor structs as the assignment (the first
+    ``n_probe`` of the descending ``sort_array``) and exploded; they
+    (bounded: queries × n_probe rows) carry ``q_vec`` and broadcast into
+    the corpus assignment, so the corpus is scanned once and never
+    shuffled before the final per-query top-k."""
+    if n_probe < 1:
+        raise ValueError(f"n_probe must be positive, got {n_probe}")
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("s"), F.asc("anchor_id"))
+    sims = ", ".join(_anchor_sims("q_vec", anchor_rows))
+    ranked = f"slice(sort_array(array({sims}), false), 1, {n_probe})"
     probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-        )
-        .join(F.broadcast(anchors))
-        .withColumn("s", F.round(cosine("q_vec", "a_vec"), 6))
-        .withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= n_probe)
-        .select("query_id", "q_vec", F.col("anchor_id").alias("cell"))
+        _with_norm(q, "q_vec")
+        .select("query_id", "q_vec", F.explode(F.expr(ranked)).alias("_p"))
+        .select("query_id", "q_vec", (-F.col("_p.nid")).alias("cell"))
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")

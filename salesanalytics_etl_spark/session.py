@@ -14,6 +14,11 @@ Config rationale (SURVEY.md §4.2):
   that differ from the default's.
 - shuffle.partitions sized to the local core count; on a real cluster this is
   overridden by AQE's coalescing anyway.
+- ``spark.sql.codegen.cache.maxEntries=4096`` — a session runs the same
+  reports and audits again and again, and each generated class should be
+  compiled once per session, not once per pass. Spark's default cache of
+  100 classes is smaller than one text_audit pass (169–211 classes), so
+  every pass evicted what the next one needed and recompiled it.
 """
 
 from __future__ import annotations
@@ -68,6 +73,17 @@ def get_spark(
         # default; 200 keeps truly enormous projections on the
         # interpreted path.
         .config("spark.sql.codegen.maxFields", "200")
+        # Generated classes are cached per JVM, at most 100 by default
+        # (spark.sql.codegen.cache.maxEntries). One pass of the six
+        # text_audit queries compiles 169-211 classes, so at the default
+        # every pass recompiled 114-176 of them at 9-13 ms of Janino
+        # time each, inside tasks. One sf0.001 sweep of all 207 queries
+        # compiles 2 529 distinct classes with an unbounded cache and
+        # 4 179 at the default, because queries share operator shapes
+        # that the small cache evicts. 4096 holds the whole surface; a
+        # cached class retains ~35 KB of heap (sweep measured at 5000
+        # entries: heap after GC 212 -> 299 MB).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -82,7 +98,9 @@ def get_spark(
         # A 90+-query sweep generates thousands of whole-stage-codegen
         # classes; the JVM default 240m code cache fills mid-sweep, the JIT
         # shuts off ("CodeCache is full. Compiler has been disabled."), and
-        # later queries run interpreted with erratic 5-30x spikes.
+        # later queries run interpreted with erratic 5-30x spikes. The
+        # codegen class cache above keeps a recurring plan's class, so a
+        # repeat pass JITs no fresh copy of code it already compiled.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",

@@ -1,4 +1,4 @@
-"""Process-local operator-use counters.
+"""Process-local operator-use counters, and the JVM's codegen count.
 
 The round-10 rank bug (AQE materializing one ``repartitionByRange``
 twice with different sampled boundaries) was invisible at sf0.01 —
@@ -17,3 +17,12 @@ counters: dict[str, int] = {"range_exchange": 0}
 
 def bump(name: str) -> None:
     counters[name] = counters.get(name, 0) + 1
+
+
+def codegen_compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far: the
+    count of Spark's ``CodegenMetrics`` compilation-time histogram. A
+    class served from the codegen cache is not counted, so the delta
+    over a repeated workload is its recompiles."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

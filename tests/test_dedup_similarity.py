@@ -155,6 +155,18 @@ def test_ivf_topk_is_subset_of_exact(spark):
     assert got == {1, 2}  # its own cluster's members, nearest first
 
 
+def test_ivf_empty_quantizer_and_invalid_probe_count(spark):
+    from salesanalytics_etl_spark.operators.ivf import cosine_topk_ivf_portable
+
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id bigint, embedding array<double>"
+    )
+    # an empty corpus samples no anchors: every probe misses, no rows
+    assert cosine_topk_ivf_portable(vecs.limit(0), vecs, n_cells=2).count() == 0
+    with pytest.raises(ValueError, match="n_probe"):
+        cosine_topk_ivf_portable(vecs, vecs, n_cells=2, n_probe=0)
+
+
 def test_cosine_lsh_is_subset_of_exact_and_finds_parallel(vectors):
     q = vectors.filter(F.col("vec_id") == 0)
     exact = {(r.query_id, r.neighbor_id) for r in

@@ -274,8 +274,11 @@ def test_load_and_incremental_batch_job_count(spark, data_dir, tmp_path):
     """Each input is parsed and deduped once per run: the cleaned tables
     and ``orders_ok`` are checkpointed with their counts observed, reject
     and final counts are observed on their writes, and CSV headers are
-    read on the driver. A load plus one incremental batch on the fixtures
-    runs 66 Spark jobs; re-deriving the inputs for every action took 136."""
+    read on the driver, and the swapped tables are re-read with the
+    schemas they were written with instead of inferring them in a job
+    each. A load plus one incremental batch on the fixtures runs 58 Spark
+    jobs; inferring the re-read schemas took 66, and re-deriving the
+    inputs for every action took 136."""
     sc = spark.sparkContext
     group = f"etl-job-count-{tmp_path.name}"
     t = str(tmp_path / "warehouse")
@@ -296,7 +299,7 @@ def test_load_and_incremental_batch_job_count(spark, data_dir, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert r2.counts == r1.counts
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 68, jobs
+    assert jobs <= 58, jobs
 
 
 def test_failed_write_swaps_no_table(spark, data_dir, tmp_path, monkeypatch):

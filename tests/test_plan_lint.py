@@ -278,10 +278,11 @@ _PLAN_PINS = {
     # broadcasts (the probe stream must never shuffle against members).
     "q110_hll_distinct_replay": ["partial_max"],
     "q111_hdr_percentile_replay": ["partial_count"],
-    # q112: the query-side probe still joins the bounded anchor frame
-    # by broadcast; corpus-side assignment is literal-anchor argmax in a
-    # projection (see test_q113_assignment_is_map_side)
-    "q112_ivf_replay": ["BroadcastNestedLoopJoin"],
+    # q112: the probes are ranked map-side against the literal anchors
+    # and broadcast into the corpus on the cell id (the corpus is never
+    # shuffled against them); corpus-side assignment is literal-anchor
+    # argmax in a projection (see test_q113_assignment_is_map_side)
+    "q112_ivf_replay": ["BroadcastHashJoin"],
     "q113_cell_stats_replay": ["partial_count"],
     "q114_bloom_membership_audit": ["BroadcastHashJoin"],
     # round-10 shapes: in the prefix-sum/rank queries the offsets/totals
