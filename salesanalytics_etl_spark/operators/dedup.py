@@ -53,6 +53,10 @@ N_HASHES = 32  # minhash signature length
 N_BANDS = 6
 ROWS_PER_BAND = 5
 MAX_BUCKET = 64  # cap on members of one LSH bucket (degenerate-cluster guard)
+# A verify over at most this many counted candidate pairs (at most
+# 6.4 MB at 4 longs per pair) broadcasts them and streams the per-doc
+# rows
+VERIFY_BROADCAST_PAIRS = 200_000
 
 
 def exact_dedupe(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -518,14 +522,13 @@ def minhash_near_dupes(
     cands = lsh_candidates(sigs, max_bucket, recover_rounds).localCheckpoint(
         eager=False
     )
-    if cands.count() > 200_000:
+    if cands.count() > VERIFY_BROADCAST_PAIRS:
         cands = estimate_filter(cands, sigs, min_agree)
     else:
-        # At most 200 000 pairs (3.2 MB): broadcast them, so the verify
-        # streams the per-doc rows in parallel. The checkpoint keeps the
-        # self-join's size estimate (terabytes), so unhinted the per-doc
-        # rows were broadcast and every pair verified in one task
-        # (2.7 s of q25 at sf0.1).
+        # Broadcast the pairs, so the verify streams the per-doc rows in
+        # parallel. The checkpoint keeps the self-join's size estimate
+        # (terabytes), so unhinted the per-doc rows were broadcast and
+        # every pair verified in one task (2.7 s of q25 at sf0.1).
         cands = F.broadcast(cands)
     # materialize the (tiny) verified-pair set: the caller's actions then
     # never re-run the pipeline
@@ -1057,9 +1060,9 @@ def exact_jaccard_join(
     the join stays sparse. A uniformly-shared vocabulary (every shingle
     high-df) degrades toward all-pairs — that is intrinsic to EXACT
     similarity joins; use the MinHash path when recall < 1 is acceptable.
-    Shuffles: df count (sh), per-doc rank window (doc_id), candidate
-    equi-join (sh), verify joins (doc id) — all key-bounded, no cross
-    product anywhere.
+    Shuffles: per-doc set (doc_id), df count (sh), per-doc rank window
+    (doc_id), candidate equi-join (sh), verify joins (doc id) — all
+    key-bounded, no cross product anywhere.
     """
     from pyspark.sql import Window
 
@@ -1070,25 +1073,26 @@ def exact_jaccard_join(
         if unit == "char"
         else word_shingle_rows(df, text_col)
     )
-    # Hash shingles to 64-bit longs at the source: every downstream
-    # shuffle (distinct, df count, prefix join, candidate equi-join,
-    # verify sets) then moves 8-byte keys instead of ~30-char strings —
-    # at 100 TB the prefix join's exchange IS the cost. Prefix filtering
-    # only needs SOME consistent global order, so ordering by (df, hash)
-    # is as valid as (df, shingle). A cross-doc hash collision could at
-    # worst admit a false candidate (killed by the verifier) or inflate
-    # one pair's intersection by 1 (P ~ 2^-45 per pair, and the DuckDB
-    # twin computes on raw strings — the gate would surface it).
-    # persisted + EAGER (concurrent consumers of a lazy persist each
-    # recompute the full upstream before any cache partition lands):
-    # sets_rows feeds sizes/dfreq/prefix-join and the verify-side
-    # semi-join
-    sets_rows = (
-        raw_rows.select("doc_id", F.xxhash64("sh").alias("sh"))
-        .distinct()
-        .persist()
+    # One row per document: its set of xxhash64'd shingles and the set's
+    # size. The df count and the prefix rows explode it, and the verify
+    # reads the same row, so the corpus is read and shingled once.
+    # Hashing at the source means every downstream shuffle (df count,
+    # prefix join, candidate equi-join, verify) moves 8-byte keys
+    # instead of ~30-char strings. Prefix filtering only needs SOME
+    # consistent global order, so ordering by (df, hash) is as valid as
+    # (df, shingle). A cross-doc hash collision could at worst admit a
+    # false candidate (killed by the verifier) or inflate one pair's
+    # intersection by 1 (P ~ 2^-45 per pair, and the DuckDB twin
+    # computes on raw strings — the gate would surface it).
+    # Eager: the df count and the prefix rows consume it as concurrent
+    # subtrees of one action, and lazily each would re-run the shingle
+    # explode and the aggregation.
+    docs = (
+        raw_rows.groupBy("doc_id")
+        .agg(F.collect_set(F.xxhash64("sh")).alias("hs"))
+        .select("doc_id", "hs", F.size("hs").alias("sz"))
+        .localCheckpoint()
     )
-    sets_rows.count()
     # All threshold comparisons below use INTEGER basis points, never
     # float products: ceil(0.8 * 35) evaluates as ceil(28.000000000000004)
     # = 29 in binary floating point — one element short on the prefix, one
@@ -1096,28 +1100,19 @@ def exact_jaccard_join(
     # pairs and breaking the recall-1.0 contract. t_bp is exact for any
     # threshold expressible in 4 decimals (the operator's precision).
     t_bp = int(round(threshold * 10000))
-    sizes = sets_rows.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
+    sets_rows = docs.select("doc_id", "sz", F.explode("hs").alias("sh"))
     dfreq = sets_rows.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "sh")
     # ceil(t*sz) in exact integer math: (t_bp*sz + 9999) div 10000
     ceil_t_sz = F.expr(f"({t_bp} * sz + 9999) div 10000")
     pref = (
         sets_rows.join(dfreq, "sh")
-        .join(sizes, "doc_id")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= F.col("sz") - ceil_t_sz + 1)
         .select("doc_id", "sh", "sz", "rn")
-        # consumed by BOTH sides of the candidate self-join. persist()
-        # WITHOUT an eager count (r17 opt round): the two join aliases
-        # resolve to the same InMemoryRelation, so the DAGScheduler
-        # shares its stages within the cands action even before the
-        # cache lands — measured identical shuffle bytes with/without
-        # the barrier job, and dropping it cut 1 job + ~0.6 s at sf0.1.
-        # (sets_rows above is different: dropping ITS count raced the
-        # base distinct across the three pref subtrees and doubled
-        # shuffle write 3.85->8.16 MB in 2 of 10 A/B rounds — that
-        # barrier is load-bearing; these two are not.)
-        .persist()
+        # both sides of the candidate self-join read it in one action,
+        # through one reused exchange
+        .localCheckpoint(eager=False)
     )
     a = pref.select(
         F.col("doc_id").alias("doc_a"),
@@ -1156,7 +1151,8 @@ def exact_jaccard_join(
         )
         .select("doc_a", "doc_b", "sz_a", "sz_b")
         .distinct()
-        .persist()  # consumed by docs_in_pairs and the verify pair join
+        # the count materializes the candidates for the verify
+        .localCheckpoint(eager=False)
     )
     n_cands = cands.count()
     _LOG.info(
@@ -1174,9 +1170,6 @@ def exact_jaccard_join(
         # The char-5-gram unit on shared-template corpora is the known
         # offender (~20s isolated at sf0.1); word shingles or the MinHash
         # path (recall<1, capped buckets) are the escape hatches.
-        cands.unpersist()
-        pref.unpersist()
-        sets_rows.unpersist()
         raise RuntimeError(
             f"exact_jaccard_join: {n_cands} candidate pairs exceed the "
             f"budget ({candidate_budget}); the corpus is degenerating "
@@ -1185,21 +1178,13 @@ def exact_jaccard_join(
             "switch to the MinHash path (minhash_near_dupes) if "
             "recall < 1 is acceptable."
         )
-    docs_in_pairs = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # the sets feed the verifier through BOTH pair aliases (a/b) — same
-    # double-consumer trap as the MinHash verify stage
-    hsets = (
-        sets_rows.join(docs_in_pairs, "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("sh").alias("hs"))  # sh is already the 64-bit hash
-        .persist()  # no eager count — see pref above (same alias pair)
-    )
-    ha = hsets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("h_a"))
-    hb = hsets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("h_b"))
+    if n_cands <= VERIFY_BROADCAST_PAIRS:
+        # the verify then streams the per-doc rows in parallel (see
+        # minhash_near_dupes); unhinted, the per-doc rows were broadcast
+        # and q203's 40 173 pairs verified in one task (2.2 s at sf0.1)
+        cands = F.broadcast(cands)
+    ha = docs.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("h_a"))
+    hb = docs.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("h_b"))
     # cast BEFORE the ×10000: size() is a 32-bit int, and a doc of
     # >214,748 shingles would wrap the admission product silently
     # (the overflow class the bucket-pair budget counts in bigint for)
@@ -1210,18 +1195,13 @@ def exact_jaccard_join(
     # round-then-compare admission would disagree with the pruning for
     # pairs whose J rounds up across the threshold. Rounding is display
     # only (and the oracle twin mirrors exact-filter + rounded-emit).
-    out = (
+    return (
         cands.join(ha, "doc_a")
         .join(hb, "doc_b")
         .filter(ov * 10000 >= F.lit(t_bp) * uni)
         .select("doc_a", "doc_b", floor_round(ov / uni, 4).alias("jaccard"))
         .localCheckpoint()
     )
-    sets_rows.unpersist()
-    pref.unpersist()
-    cands.unpersist()
-    hsets.unpersist()
-    return out
 
 
 def word_shingle_rows(
@@ -1278,7 +1258,8 @@ def duplicate_spans(
     spans = (
         word_shingle_rows(df, text_col, n)
         .select("doc_id", F.md5("sh").alias("span_fp"))
-        .persist()  # consumed twice: the dup aggregate and the flag join-back
+        # the dup aggregate and the flag join-back read it in one action
+        .localCheckpoint(eager=False)
     )
     dup = (
         spans.groupBy("span_fp")
@@ -1286,7 +1267,7 @@ def duplicate_spans(
         .where(F.col("_mn") != F.col("_mx"))
         .select("span_fp", F.lit(1).alias("_dup"))
     )
-    out = (
+    return (
         spans.join(dup, "span_fp", "left")
         .groupBy("doc_id")
         .agg(
@@ -1304,8 +1285,6 @@ def duplicate_spans(
         )
         .localCheckpoint()
     )
-    spans.unpersist()
-    return out
 
 
 SHINGLE_SAMPLE_MOD = 16  # q181/q182: keep shingle IDENTITIES with h % 16 == 0

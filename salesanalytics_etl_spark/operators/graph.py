@@ -9,7 +9,8 @@ small cliques, so diameter is tiny (2-3 rounds typical).
 
 Iteration is driver-controlled (a loop of DataFrame jobs with a converged?
 check) — this is the class of algorithm the oracle gate marks rows-only:
-not SQL-expressible, but exactly what Spark's lazy DAG + caching does well.
+not SQL-expressible, but exactly what Spark's lazy DAG + checkpoints do
+well.
 Each round is one join + one aggregate on the (small) edge set, NOT the
 corpus.
 """
@@ -44,18 +45,15 @@ def connected_components(
     distributed label propagation (each Spark round on a 256-edge graph
     costs seconds of pure scheduling, ~100× the actual work).
 
-    The edge set is persisted across the size probe and the solve — it is
-    typically the output of an expensive similarity pipeline, and without
-    the persist the count() gate silently recomputes that whole pipeline
-    a second time for the collect (measured 2× the q49 wall time).
+    The edge set is checkpointed, and the size probe's count()
+    materializes it for the solve — it is typically the output of an
+    expensive similarity pipeline, and lazily the solve would recompute
+    that whole pipeline a second time (measured 2× the q49 wall time).
     """
-    edges = edges.persist()
-    try:
-        if edges.count() <= DRIVER_CC_MAX_EDGES:
-            return _driver_union_find(edges, src, dst)
-        return _label_propagation(edges, src, dst, max_iter)
-    finally:
-        edges.unpersist()
+    edges = edges.localCheckpoint(eager=False)
+    if edges.count() <= DRIVER_CC_MAX_EDGES:
+        return _driver_union_find(edges, src, dst)
+    return _label_propagation(edges, src, dst, max_iter)
 
 
 def _driver_union_find(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -97,15 +95,16 @@ def _label_propagation(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
-        .persist()
+        # every round's join reads it; the first round materializes it
+        .localCheckpoint(eager=False)
     )
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        # localCheckpoint (not persist): truncates lineage so round N's
-        # plan doesn't re-analyze rounds 1..N-1 — the classic iterative-
-        # algorithm slowdown
+        # checkpointed: truncates lineage so round N's plan doesn't
+        # re-analyze rounds 1..N-1 — the classic iterative-algorithm
+        # slowdown
         .localCheckpoint()
     )
     for _ in range(max_iter):
@@ -140,13 +139,11 @@ def _label_propagation(
         # some component still holds intermediate labels — returning them
         # would silently report ONE real cluster as several (extra
         # duplicate docs kept). Fail loudly instead.
-        sym.unpersist()
         raise RuntimeError(
             f"label propagation did not converge in {max_iter} rounds — "
             "the graph has a component with diameter > max_iter; raise "
             "max_iter (cost is one join+agg per extra round)"
         )
-    sym.unpersist()
     return labels
 
 

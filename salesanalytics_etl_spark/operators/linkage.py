@@ -100,14 +100,12 @@ def edit_distance_join(
                 "identifier column, or use MinHash similarity for long "
                 "strings."
             )
-    # persist: BOTH sides of the self-join consume the variant subtree,
-    # and unpersisted each alias re-runs the explode(+distinct at depth
-    # 2) — measured ~2× the variant stage at sf0.1. The (bounded) pair
-    # result is materialized via localCheckpoint so the cache can be
-    # released before returning (the repo's standard double-consumer
-    # shape).
-    v = deletion_variants(names, col, depth=max_dist).persist()
-    v.count()
+    # The variant subtree stays lazy, although BOTH sides of the
+    # self-join read it: their identical exchanges over it are reused
+    # (ReusedExchange), so the names are read and spread once and only
+    # the explode runs per side. Checkpointing it left the pair join
+    # fewer stream partitions and cost q123 ~0.2 s at sf0.1.
+    v = deletion_variants(names, col, depth=max_dist)
     a = v.select(F.col("name").alias("name_a"), "vh")
     b = v.select(F.col("name").alias("name_b"), "vh")
     # verify BEFORE distinct: levenshtein is a codegen'd filter on the
@@ -116,7 +114,7 @@ def edit_distance_join(
     # coincidences, hash collisions). Wall-time-neutral at sf0.1 (the
     # local join is small either way); at 100 TB the distinct IS a
     # shuffle and its input size is the cost.
-    out = (
+    return (
         a.join(b, "vh")
         .filter(
             (F.col("name_a") < F.col("name_b"))
@@ -126,5 +124,3 @@ def edit_distance_join(
         .distinct()
         .localCheckpoint()
     )
-    v.unpersist()
-    return out

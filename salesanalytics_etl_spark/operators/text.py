@@ -18,6 +18,8 @@ import pandas  # module-scope: pandas_udf type hints resolve via __globals__
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from salesanalytics_etl_spark.functions.scalar import floor_round
+
 # CJK scripts carry no whitespace/word boundaries, so one CODEPOINT = one
 # token (the standard LLM-tokenizer approximation for Han/kana/Hangul).
 # Explicit codepoint ranges — NOT \p{Han} script classes — so Spark's Java
@@ -67,8 +69,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     stop_ratio = F.when(n_tokens > 0, n_stop.cast("double") / n_tokens).otherwise(0.0)
     mean_tok = F.when(n_tokens > 0, n_alpha.cast("double") / n_tokens)
     tok_ok = F.when((mean_tok >= 2) & (mean_tok <= 12), 1.0).otherwise(0.0)
-    from salesanalytics_etl_spark.functions.scalar import floor_round
-
     # floor-formula, not engine-native ROUND: every component is a
     # ratio of small integers (alpha/len, stop/tokens) that CAN sit
     # exactly on a 5th-decimal midpoint (e.g. 3/32 = 0.09375), where
@@ -264,9 +264,14 @@ def bigram_surprisal(df: DataFrame, text_col: str = "text") -> DataFrame:
     bf = trans.groupBy("doc_id", "prev", "cur").agg(
         F.count(F.lit(1)).alias("tf")
     )
-    # persist the bigram vocab: context counts and per-bigram bits both
-    # derive from it (same double-consumer shape as unigram_surprisal)
-    c2 = bf.groupBy("prev", "cur").agg(F.sum("tf").alias("c2")).persist()
+    # the bigram vocab is checkpointed: the context counts and the
+    # per-bigram bits both derive from it in one action, and lazily each
+    # would re-run the tokenize and transition pass
+    c2 = (
+        bf.groupBy("prev", "cur")
+        .agg(F.sum("tf").alias("c2"))
+        .localCheckpoint(eager=False)
+    )
     c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
     bits = c2.join(c1, "prev").select(
         "prev",
@@ -275,7 +280,7 @@ def bigram_surprisal(df: DataFrame, text_col: str = "text") -> DataFrame:
         .cast("decimal(18,6)")
         .alias("bits"),
     )
-    out = (
+    return (
         bf.join(bits, ["prev", "cur"])
         .groupBy("doc_id")
         .agg(
@@ -286,21 +291,13 @@ def bigram_surprisal(df: DataFrame, text_col: str = "text") -> DataFrame:
             "doc_id",
             "n_transitions",
             # floor-formula — same 4dp-midpoint class as
-            # unigram_surprisal's quotient (caught at sf0.1, r10)
-            (
-                F.floor(
-                    F.col("_s").cast("double")
-                    / F.col("n_transitions")
-                    * F.lit(10000.0)
-                    + F.lit(0.5)
-                )
-                / F.lit(10000.0)
+            # unigram_surprisal's quotient
+            floor_round(
+                F.col("_s").cast("double") / F.col("n_transitions"), 4
             ).alias("bits_per_transition"),
         )
         .localCheckpoint()
     )
-    c2.unpersist()
-    return out
 
 
 def source_kl_divergence(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -328,10 +325,13 @@ def source_kl_divergence(df: DataFrame, text_col: str = "text") -> DataFrame:
     join is per-source-vocab ⋈ corpus-vocab on term (Zipf-small).
     """
     toks = _token_rows(df, text_col, keep=("source",))
+    # the per-source vocab feeds the totals, the corpus vocab and the
+    # scoring join in one action: checkpointed, the token stream is
+    # aggregated once
     sv = (
         toks.groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("ctf_s"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     totals = sv.groupBy("source").agg(F.sum("ctf_s").alias("n_s"))
     corpus = sv.groupBy("term").agg(F.sum("ctf_s").alias("ctf"))
@@ -357,7 +357,7 @@ def source_kl_divergence(df: DataFrame, text_col: str = "text") -> DataFrame:
             .alias("kl_term"),
         )
     )
-    out = (
+    return (
         contrib.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_terms"),
@@ -370,16 +370,11 @@ def source_kl_divergence(df: DataFrame, text_col: str = "text") -> DataFrame:
             "n_tokens",
             # floor-formula: the exact DECIMAL(18,6) sum can sit
             # EXACTLY on a 4dp midpoint (same class as the surprisal
-            # quotients, caught at sf0.1 in r10)
-            (
-                F.floor(F.col("_kl").cast("double") * F.lit(10000.0) + F.lit(0.5))
-                / F.lit(10000.0)
-            ).alias("kl_bits"),
+            # quotients)
+            floor_round(F.col("_kl").cast("double"), 4).alias("kl_bits"),
         )
         .localCheckpoint()
     )
-    sv.unpersist()
-    return out
 
 
 def tfidf_terms(
@@ -532,8 +527,6 @@ def repetition_ratio(df: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy("doc_id")
         .agg(F.max("c").alias("top_token_count"))
     )
-    from salesanalytics_etl_spark.functions.scalar import floor_round
-
     # floor-formula: small-integer quotients can sit exactly on 5th-
     # decimal midpoints (the q104 sf0.1 class)
     ratio = F.when(
@@ -718,14 +711,16 @@ def unigram_surprisal(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     toks = _token_rows(df, text_col)
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    # Persist the vocab (|vocab| ≪ |tokens| by Zipf): the total and the
-    # per-term bits BOTH derive from it, and unpersisted each would
-    # recompute the tokenize+tf pass — .explain showed the corpus
-    # scanned three times; the model-train/score split is inherently two
-    # passes and should stay two. The output (the |docs|-sized scoring
-    # table a pipeline materializes anyway) is checkpointed eagerly so
-    # the cache can be released before returning.
-    vocab = tf.groupBy("term").agg(F.sum("tf").alias("ctf")).persist()
+    # The vocab (|vocab| ≪ |tokens| by Zipf) is checkpointed: the total
+    # and the per-term bits BOTH derive from it in one action, and
+    # lazily each would recompute the tokenize+tf pass (.explain showed
+    # the corpus scanned three times). The model-train/score split is
+    # inherently two passes and stays two.
+    vocab = (
+        tf.groupBy("term")
+        .agg(F.sum("tf").alias("ctf"))
+        .localCheckpoint(eager=False)
+    )
     total = vocab.agg(F.sum("ctf").alias("_n"))
     term_bits = vocab.join(F.broadcast(total)).select(
         "term",
@@ -733,7 +728,7 @@ def unigram_surprisal(df: DataFrame, text_col: str = "text") -> DataFrame:
         .cast("decimal(18,6)")
         .alias("bits"),
     )
-    out = (
+    return (
         tf.join(term_bits, "term")
         .groupBy("doc_id")
         .agg(
@@ -746,18 +741,10 @@ def unigram_surprisal(df: DataFrame, text_col: str = "text") -> DataFrame:
             # floor-formula, NOT engine-native ROUND: the quotient of a
             # 1e-6-grid decimal sum by an integer can land EXACTLY on a
             # 4dp midpoint, where Spark (shortest-repr HALF_UP) and
-            # DuckDB (rint-class) disagree — 3 docs did at sf0.1 (r10)
-            (
-                F.floor(
-                    F.col("_sum_bits").cast("double")
-                    / F.col("n_tokens")
-                    * F.lit(10000.0)
-                    + F.lit(0.5)
-                )
-                / F.lit(10000.0)
+            # DuckDB (rint-class) disagree — 3 docs did at sf0.1
+            floor_round(
+                F.col("_sum_bits").cast("double") / F.col("n_tokens"), 4
             ).alias("bits_per_token"),
         )
         .localCheckpoint()
     )
-    vocab.unpersist()
-    return out

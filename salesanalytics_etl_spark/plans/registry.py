@@ -40,37 +40,32 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return wrap
 
 
-# Round-17 rotation (optimization round 2/2; driver records the FIRST
-# 50 entries; the r13 rule: any query whose operator code changes goes
-# back into the window so its driver row re-stamps on current code).
-# Self-counting arithmetic: 24 code-changed re-stamps + 26 roll-debt
-# = 50. Priority order:
-# (1) 24 re-stamps — every query whose operator code the r17
-#     OPTIMIZATION round touched (OPTIMIZATION_r17.md has the per-query
-#     log; results verified identical by strict_compare at sf0.01 after
-#     each change):
-#     - bloom decontamination one-pass restructure: q192, q200;
-#     - exact_jaccard_join barrier fusion: q102, q203;
-#     - ANN/IVF corpus-scan spreads (cosine_topk_bruteforce,
-#       int8_topk_recall, cosine_topk_lsh, cosine_topk_ivf,
-#       assign_clusters, portable_cell_assignment): q27, q28, q34,
-#       q89, q112, q113, q121, q122, q188, q190;
-#     - perturbed_text SQL-string conversion (all 9 edit-noise
-#       audits): q186, q187, q189, q193, q194, q195, q197, q198, q199;
-#     - q156 day-frame spread before the pair explosion.
-# (2) 26 roll-debt rows, oldest driver stamp first: the r11-era
-#     q95-q97 the r16 window deferred, then the r12-era tail in
-#     (stamp, name) order. The remaining r12-era rows roll to the next
-#     window.
-# Every name here is also swept by tests/test_queries.py +
-# tests/strict_gate.py against the same oracles, so reordering changes
-# what the driver RECORDS, never what is verified.
+# The driver records the FIRST 50 entries of queries(). When a change
+# touches an operator under a recorded query (a perf change included),
+# that query goes back to the head of this window, so its driver row
+# re-stamps on the current code; the other names keep their order and the
+# tail rolls to the next window. Every name here is also swept by
+# tests/test_queries.py + tests/strict_gate.py against the same oracles,
+# so the order changes what the driver RECORDS, never what is verified.
 _CHECK_FIRST = [
-    # --- (1) 24 code-changed re-stamps (r17 optimization round) ---
-    "q192_bloom_decontamination_audit",
-    "q200_bloom_sized_audit",
+    # --- queries whose operators changed last: exact_jaccard_join,
+    # duplicate_spans, the three text.py vocab scorers,
+    # edit_distance_join and connected_components checkpoint
+    # instead of persisting ---
     "q102_exact_jaccard_join",
     "q203_winnow_recall_audit",
+    "q103_duplicate_spans",
+    "q104_unigram_surprisal",
+    "q184_source_surprisal_drift",
+    "q119_bigram_surprisal",
+    "q120_source_kl_divergence",
+    "q108_identifier_linkage",
+    "q123_typo_linkage_degree",
+    "q49_dedup_clusters",
+    "q205_winnow_cluster_histogram",
+    # --- the earlier window, in its order ---
+    "q192_bloom_decontamination_audit",
+    "q200_bloom_sized_audit",
     "q27_ann_cosine_topk",
     "q28_ann_cosine_lsh",
     "q34_ann_cosine_ivf",
@@ -91,7 +86,6 @@ _CHECK_FIRST = [
     "q198_editnoise_reorder_simhash",
     "q199_editnoise_reorder_winnow",
     "q156_theil_sen_trend",
-    # --- (2) 26 roll-debt rows, oldest driver stamp first ---
     "q95_sentence_split_udtf",  # r11
     "q96_event_transition_matrix",  # r11
     "q97_daily_sales_anomalies",  # r11
@@ -109,15 +103,6 @@ _CHECK_FIRST = [
     "q128_distributed_percentiles",  # r12
     "q12_order_totals",  # r12
     "q130_robust_order_outliers",  # r12
-    "q132_nation_revenue_interpolated",  # r12
-    "q133_fk_integrity_sweep",  # r12
-    "q13_order_reconciliation",  # r12
-    "q14_sales_daterange",  # r12
-    "q173_dup_cluster_source_span",  # r12
-    "q174_source_length_psi",  # r12
-    "q175_event_cooccurrence_lift",  # r12
-    "q179_lang_source_mutual_info",  # r12
-    "q17_view_sales_by_day_sql",  # r12
 ]
 
 

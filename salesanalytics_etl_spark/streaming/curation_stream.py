@@ -46,6 +46,9 @@ class CurationIngestSink:
         return self.spark.read.parquet(self.table_dir)
 
     def _process(self, batch: DataFrame, batch_id: int) -> None:
+        # persist, not localCheckpoint: a sink must release a micro-batch's
+        # blocks before the next batch, and checkpoint blocks live until
+        # the driver GCs the RDD
         quality = batch.filter(
             token_count(F.col("text")) >= self.min_tokens
         ).select("doc_id", "lang", "text")

@@ -85,6 +85,9 @@ class WinnowNearDupSink:
         )
 
     def _process(self, batch: DataFrame, batch_id: int) -> None:
+        # persist, not localCheckpoint: a sink must release a micro-batch's
+        # blocks before the next batch, and checkpoint blocks live until
+        # the driver GCs the RDD
         batch = batch.select("doc_id", "text").persist()
         if not batch.take(1):
             batch.unpersist()

@@ -60,17 +60,13 @@ def _iter_plan_nodes(node):
     if cls == "AdaptiveSparkPlanExec":
         yield from _iter_plan_nodes(node.inputPlan())
         return
-    # a persist() boundary makes the cached subtree a LEAF
-    # (InMemoryTableScan) — descend into the cached plan or anything an
-    # operator persists (LSH signature frames, IVF anchors, linkage
-    # variants) is invisible to every lint below (r9: closes the blind
-    # spot the window/aggregate lints shared)
+    # a cached relation is a LEAF whose subtree every lint below would
+    # miss; operators checkpoint and never persist
+    # (test_only_streaming_sinks_persist), so no registered plan has one
     if cls == "InMemoryTableScanExec":
-        try:
-            yield from _iter_plan_nodes(node.relation().cachedPlan())
-        except Exception:
-            pass  # cached-plan accessor drift across Spark versions
-        return
+        raise AssertionError(
+            f"plan reads a cached relation: {node.simpleString(200)}"
+        )
     # KNOWN boundary the traversal cannot cross: a localCheckpoint()
     # (round 10: the rank machinery's eager materialization) surfaces as
     # a plain ExistingRDD scan with NO recoverable plan — the
@@ -546,22 +542,23 @@ _SPREAD_SITES = {
 }
 
 
-def _spread_call_sites() -> list[tuple[str, str]]:
+def _call_sites(names: set[str]) -> list[tuple[str, str]]:
+    """(module, innermost enclosing function) of every package call to a
+    function or method named in ``names``, once per call."""
     import ast
     from pathlib import Path
 
     import salesanalytics_etl_spark
 
     def calls(node, fn_name):
-        # each call is credited to its innermost enclosing function
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 yield from calls(child, child.name)
                 continue
-            if isinstance(child, ast.Call) and "spread_partitions" in (
+            if isinstance(child, ast.Call) and names & {
                 getattr(child.func, "id", None),
                 getattr(child.func, "attr", None),
-            ):
+            }:
                 yield fn_name
             yield from calls(child, fn_name)
 
@@ -578,9 +575,34 @@ def test_spread_partitions_sites_are_pinned():
     char-gram, word-n-gram or token fan-out goes through its generator
     instead of spreading again, and a removed site is a plan change that
     needs its own measurement."""
-    sites = _spread_call_sites()
+    sites = _call_sites({"spread_partitions"})
     assert len(sites) == len(set(sites)), sites
     added = sorted(set(sites) - set(_SPREAD_SITES))
     removed = sorted(set(_SPREAD_SITES) - set(sites))
     assert not added and not removed, f"added {added}, removed {removed}"
     assert len(sites) == 12
+
+
+# The only functions in the package that cache a frame, with the reason.
+# Batch operators materialize with localCheckpoint: under AQE, identical
+# exchanges over a checkpointed subtree are reused, while each side of a
+# join over a cached scan shuffles it again, and a checkpoint has no
+# cache to release on any return or error path.
+_SINK = (
+    "foreachBatch sink: releases each micro-batch's blocks before the "
+    "next batch; checkpoint blocks live until the driver GCs the RDD"
+)
+_PERSIST_SITES = {
+    ("streaming/winnow_stream.py", "_process"): _SINK,
+    ("streaming/curation_stream.py", "_process"): _SINK,
+}
+
+
+def test_only_streaming_sinks_persist():
+    """persist(), cache() and unpersist() appear only in the two
+    streaming sinks; every other frame is checkpointed or left lazy."""
+    sites = set(_call_sites({"persist", "cache", "unpersist"}))
+    assert sites == set(_PERSIST_SITES), (
+        f"added {sorted(sites - set(_PERSIST_SITES))}, "
+        f"removed {sorted(set(_PERSIST_SITES) - sites)}"
+    )
