@@ -1086,11 +1086,13 @@ def exact_jaccard_join(
     # computes on raw strings — the gate would surface it).
     # Eager: the df count and the prefix rows consume it as concurrent
     # subtrees of one action, and lazily each would re-run the shingle
-    # explode and the aggregation.
+    # explode and the aggregation. sz is a bigint: size() is a 32-bit
+    # int, and every threshold product below (t_bp * sz, sz * 10000)
+    # would wrap for a doc of more than 214,748 shingles.
     docs = (
         raw_rows.groupBy("doc_id")
         .agg(F.collect_set(F.xxhash64("sh")).alias("hs"))
-        .select("doc_id", "hs", F.size("hs").alias("sz"))
+        .select("doc_id", "hs", F.size("hs").cast("long").alias("sz"))
         .localCheckpoint()
     )
     # All threshold comparisons below use INTEGER basis points, never

@@ -141,6 +141,21 @@ def test_exact_boundary_pair_survives_float_hostile_sizes(spark):
     assert [(r.doc_a, r.doc_b, r.jaccard) for r in got] == [(1, 2, 0.8)]
 
 
+def test_pair_past_int_range_of_size_products_survives(spark):
+    """Shingle-set sizes past 214,748 overflow a 32-bit ``sz * 10000``:
+    the length filter would wrap negative and drop this pair. A has
+    230 000 distinct 5-word shingles, B is its first 220 000, so
+    J = 22/23. The sizes must be bigints so every threshold product
+    stays exact."""
+    words = [f"w{i}" for i in range(230_004)]
+    a = " ".join(words)
+    b = " ".join(words[:220_004])
+    got = exact_jaccard_join(
+        _docs(spark, [(1, a), (2, b)]), threshold=0.9, unit="word"
+    ).collect()
+    assert [(r.doc_a, r.doc_b, r.jaccard) for r in got] == [(1, 2, 0.9565)]
+
+
 def test_candidate_budget_fails_loudly_on_degenerate_corpus(spark):
     """Exact joins can't drop candidates (recall contract), so a corpus
     whose candidates exceed the budget must raise, not grind quadratic."""
